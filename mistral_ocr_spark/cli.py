@@ -13,7 +13,7 @@ Reference: submit / status / results / search / list / files
 - ``files``   → committed data files from the manifest
 
 Beyond the reference's verbs: ``export`` (download tree), ``cancel``
-(cooperative, chunk-boundary), ``compact`` (bin-pack data files),
+(cooperative, checked before a submit's job), ``compact`` (bin-pack data files),
 ``snapshots`` (history), ``expire`` (snapshot expiry + orphan-file
 removal), ``results --as-of`` (time travel), ``neardup-index`` /
 ``neardup`` (persisted MinHash index + incremental near-dup pairs over
@@ -85,7 +85,6 @@ def cmd_submit(args) -> int:
         run_id=args.run_id,
         n_chunks=args.chunks,
         max_chunks=args.max_chunks,
-        single_pass=args.single_pass,
     )
     print(json.dumps(stats))
     return 0
@@ -503,8 +502,6 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--run-id", default="run-0001")
     s.add_argument("--chunks", type=int, default=4)
     s.add_argument("--max-chunks", type=int, default=None)
-    s.add_argument("--single-pass", action="store_true",
-                   help="write all pending chunks in one job (one input scan)")
     s.add_argument("--stream", action="store_true",
                    help="streaming ingestion (micro-batch commits) instead of chunked batch")
     s.add_argument("--checkpoint", help="streaming checkpoint dir (default under table)")
@@ -555,7 +552,9 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--expire", action="store_true", help="delete superseded files")
     s.set_defaults(func=cmd_compact)
 
-    s = sub.add_parser("cancel", help="cooperatively cancel a run at the next chunk boundary")
+    s = sub.add_parser("cancel", help="cooperatively cancel a run: submit checks the marker before "
+                       "its extraction job and then extracts nothing; committed chunks stay "
+                       "committed and no chunk is left half committed")
     s.add_argument("--table", required=True)
     s.add_argument("--run-id", default="run-0001")
     s.add_argument("--clear", action="store_true", help="clear the cancel marker")

@@ -552,7 +552,9 @@ def _stream_data(body: bytes) -> bytes | None:
         try:
             return zlib.decompressobj().decompress(data)
         except zlib.error:
-            return None
+            # an unfiltered payload that merely starts with 0x78 ('x', or
+            # an xref-stream field byte): keep it as raw data
+            pass
     if not exact_len:
         if data.endswith(b"\r\n"):
             return data[:-2]

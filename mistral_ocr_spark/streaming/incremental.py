@@ -81,11 +81,9 @@ def incremental_extract_to_catalog(
     foreachBatch becomes a no-op instead of duplicate files (the streaming
     analog of pipeline.run's committed-chunk skip).
     """
-    import datetime as _dt
-
     from pyspark.sql import functions as F
 
-    from mistral_ocr_spark import pipeline as P
+    from mistral_ocr_spark import pipeline
     from mistral_ocr_spark.sources import catalog
 
     pages = spark.readStream.schema(PAGES_SCHEMA).format("parquet").load(pages_dir)
@@ -94,25 +92,8 @@ def incremental_extract_to_catalog(
     def commit_batch(df: DataFrame, batch_id: int) -> None:
         if batch_id in catalog.committed_chunks(table_root, run_id):
             return  # checkpoint replay after a crash: already committed
-        started = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-        out = df.withColumn("run_id", F.lit(run_id))
-        data_path = os.path.join(
-            table_root, "data", f"run={run_id}", f"chunk={batch_id}"
-        )
-        out.sortWithinPartitions("url").write.mode("overwrite").parquet(data_path)
-        data_files = catalog.list_parquet_files(data_path)
-        lineage = P._lineage_from_written(spark, data_files, run_id, batch_id, started)
-        lin_path = os.path.join(
-            table_root, "lineage", f"run={run_id}", f"chunk={batch_id}"
-        )
-        lineage.coalesce(1).write.mode("overwrite").parquet(lin_path)
-        catalog.commit_chunk(
-            table_root,
-            run_id,
-            batch_id,
-            data_files,
-            catalog.list_parquet_files(lin_path),
-            schema_json=out.schema.jsonValue(),
+        pipeline.commit_chunks(
+            spark, df, table_root, run_id, F.lit(batch_id), [batch_id]
         )
 
     q = (

@@ -31,9 +31,11 @@ def test_resume_exactly_once(spark, table_root):
     assert s1["chunks_done"] == 1
     partial = catalog.read_extracted(spark, table_root).count()
     assert 0 < partial < N
+    assert s1["docs"] == partial
 
     s2 = pipeline.run(spark, pages, table_root, n_chunks=3, num_partitions=8)
     assert s2["chunks_skipped"] == 1 and s2["chunks_done"] == 2
+    assert s2["docs"] == N  # the whole run, earlier invocation included
     ext = catalog.read_extracted(spark, table_root)
     assert ext.count() == N
     assert ext.select("url").distinct().count() == N  # exactly once per url
@@ -43,56 +45,108 @@ def test_resume_exactly_once(spark, table_root):
     assert s3["chunks_done"] == 0 and s3["chunks_skipped"] == 3
 
 
-def test_single_pass_equals_loop(spark, table_root):
-    """single_pass=True (one input scan, partitionBy(chunk) write) must
-    produce byte-identical committed rows and the same resume state as the
-    per-chunk loop (VERDICT r2 #5)."""
+def _committed(spark, root):
+    return {
+        r.url: (r.text, r.markdown, r.error_class)
+        for r in catalog.read_extracted(spark, root).collect()
+    }
+
+
+def test_chunk_count_does_not_change_committed_rows(spark, table_root):
+    """Chunk identity is a pure function of the url: one chunk or four, the
+    committed rows are byte-identical, every chunk has its lineage, and the
+    lineage counts every doc once."""
     import os
 
     pages = generate_pages(spark, N, partitions=6)
-    loop_root = os.path.join(table_root, "loop")
-    sp_root = os.path.join(table_root, "sp")
-    s_loop = pipeline.run(spark, pages, loop_root, n_chunks=4, num_partitions=8)
-    s_sp = pipeline.run(
-        spark, pages, sp_root, n_chunks=4, num_partitions=8, single_pass=True
-    )
-    assert s_sp["chunks_done"] == s_loop["chunks_done"] == 4
-    assert s_sp["docs"] == s_loop["docs"] == N
-    a = {
-        r.url: (r.text, r.markdown)
-        for r in catalog.read_extracted(spark, loop_root).collect()
-    }
-    b = {
-        r.url: (r.text, r.markdown)
-        for r in catalog.read_extracted(spark, sp_root).collect()
-    }
-    assert a == b
-    # lineage exists per chunk and counts agree
-    lin = catalog.read_lineage(spark, sp_root)
+    one_root = os.path.join(table_root, "one")
+    four_root = os.path.join(table_root, "four")
+    s_one = pipeline.run(spark, pages, one_root, n_chunks=1, num_partitions=8)
+    s_four = pipeline.run(spark, pages, four_root, n_chunks=4, num_partitions=8)
+    assert (s_one["chunks_done"], s_four["chunks_done"]) == (1, 4)
+    assert s_one["docs"] == s_four["docs"] == N
+    assert _committed(spark, one_root) == _committed(spark, four_root)
+    lin = catalog.read_lineage(spark, four_root)
     assert {r.chunk_id for r in lin.select("chunk_id").distinct().collect()} == {0, 1, 2, 3}
     assert lin.agg(F.sum("doc_count")).collect()[0][0] == N
+    # one lineage file per chunk, chunk_id still a column inside it
+    files = catalog.load_manifest(four_root)["lineage_files"]
+    assert len(files) == 4
+    assert "chunk_id" in spark.read.parquet(files[0]).columns
 
 
-def test_single_pass_resumes_loop_run_and_vice_versa(spark, table_root):
-    """Chunk identity is a pure function of the url, so a crashed loop run
-    resumes under single_pass (and back) exactly once per url."""
+def test_crash_between_commits_resumes_exactly_once(spark, table_root, monkeypatch):
+    """A driver crash after the invocation's job but between its chunk
+    commits loses the uncommitted chunks' work, never a row: the resume
+    re-extracts exactly those chunks, once per url, and counts the whole
+    run in its stats."""
     pages = generate_pages(spark, N, partitions=6)
-    s1 = pipeline.run(spark, pages, table_root, n_chunks=3, max_chunks=1, num_partitions=8)
-    assert s1["chunks_done"] == 1
-    s2 = pipeline.run(
-        spark, pages, table_root, n_chunks=3, num_partitions=8, single_pass=True
-    )
+    commit = catalog.commit_chunk
+    calls = []
+
+    def crash_on_second_commit(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("simulated driver crash")
+        return commit(*args, **kwargs)
+
+    monkeypatch.setattr(catalog, "commit_chunk", crash_on_second_commit)
+    with pytest.raises(RuntimeError, match="simulated driver crash"):
+        pipeline.run(spark, pages, table_root, n_chunks=3, num_partitions=8)
+    monkeypatch.setattr(catalog, "commit_chunk", commit)
+    assert catalog.committed_chunks(table_root, "run-0001") == {0}
+
+    s2 = pipeline.run(spark, pages, table_root, n_chunks=3, num_partitions=8)
     assert s2["chunks_skipped"] == 1 and s2["chunks_done"] == 2
+    assert s2["docs"] == N
     ext = catalog.read_extracted(spark, table_root)
     assert ext.count() == N
     assert ext.select("url").distinct().count() == N
-    # idempotent rerun in either mode: nothing recomputed
-    s3 = pipeline.run(
-        spark, pages, table_root, n_chunks=3, num_partitions=8, single_pass=True
-    )
-    assert s3["chunks_done"] == 0 and s3["chunks_skipped"] == 3
-    s4 = pipeline.run(spark, pages, table_root, n_chunks=3, num_partitions=8)
-    assert s4["chunks_done"] == 0 and s4["chunks_skipped"] == 3
+
+
+def _ran_stages(spark, group):
+    """(rdd scope names, task count) of every stage that ran in a job group."""
+    sc = spark.sparkContext
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+
+    def names(cluster):
+        out, it = {cluster.name()}, cluster.childClusters().iterator()
+        while it.hasNext():
+            out |= names(it.next())
+        return out
+
+    stages = []
+    for job in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(job).stageIds:
+            info = tracker.getStageInfo(sid)
+            if info is not None and info.numCompletedTasks:  # skipped stages run nothing
+                root = store.operationGraphForStage(sid).rootCluster()
+                stages.append((names(root), info.numTasks))
+    return stages
+
+
+@pytest.mark.parametrize("n_chunks", [1, 4])
+def test_one_extract_stage_per_submit(spark, table_root, n_chunks):
+    """A submit of k pending chunks runs ONE MapInArrow stage with
+    num_partitions Python tasks, whatever k is: the per-task fixed cost
+    of a Python worker is paid num_partitions times per submit."""
+    import os
+
+    src = os.path.join(table_root, "pages")
+    generate_pages(spark, 1000, partitions=2).write.parquet(src)
+    group = f"one-extract-stage-{n_chunks}"
+    spark.sparkContext.setJobGroup(group, "submit")
+    try:
+        s = pipeline.run(
+            spark, spark.read.parquet(src), os.path.join(table_root, "t"),
+            n_chunks=n_chunks, num_partitions=6,
+        )
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            spark.sparkContext.setLocalProperty(key, None)
+    assert s["chunks_done"] == n_chunks and s["docs"] == 1000
+    kernel = [tasks for names, tasks in _ran_stages(spark, group) if "MapInArrow" in names]
+    assert kernel == [6]
 
 
 def test_crash_mid_chunk_invisible(spark, table_root):
@@ -160,8 +214,9 @@ def test_merge_latest_wins(spark, table_root):
 
 
 def test_cancel_and_resume(spark, table_root):
-    """Cancel marker stops the run at a chunk boundary; clearing it and
-    re-running resumes from the committed chunks (reference cancel verb)."""
+    """A cancel marker is checked before the invocation's job, so a
+    cancelled submit extracts nothing; clearing it and re-running resumes
+    from the committed chunks (reference cancel verb)."""
     import os
 
     pages = generate_pages(spark, 600, partitions=2)
