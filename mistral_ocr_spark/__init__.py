@@ -19,3 +19,8 @@ Design tenets (scale-first):
 EXTRACTOR_VERSION = "1.6.0"  # 1.6.0: PDF cross-reference parsing (xref streams + classic tables + /Prev chains + hybrid /XRefStm; current-body authority over the byte scan) + /Length-bounded stream payloads + complete-stream Flate acceptance; 1.5.0: PDF stream-filter cascade (ASCIIHex/ASCII85/RunLength/LZW) + encoded-body excision in the fallback scan; 1.4.0: ToUnicode CMaps + UTF-16BE; 1.3.0: page-tree ordering (ObjStm); 1.2.1: TJ kern fix
 
 __all__ = ["EXTRACTOR_VERSION"]
+
+# every mapInArrow kernel imports this package when its task unpickles it
+from mistral_ocr_spark import _worker
+
+_worker.install()

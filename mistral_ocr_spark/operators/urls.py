@@ -253,10 +253,11 @@ def host_cap_sample(
     join and the rank window — small hosts pass the prefilter whole, so
     the window still exchanges most of the corpus); what the prefilter
     bounds is the per-KEY sort size — the straggler — not total shuffle
-    volume. Fully deterministic in (id, salt): same members at any
-    parallelism, on any engine that can replay md5-prefix arithmetic
-    (the bucket is ``sampling._bucket``'s md5 mode — one shared
-    implementation, the cross-engine replay rule). Rows with NULL url
+    volume. Fully deterministic in (id, salt), url breaking the tie
+    between NULL ids: same members at any parallelism, on any engine
+    that can replay md5-prefix arithmetic (the bucket is
+    ``sampling._bucket``'s md5 mode — one shared implementation, the
+    cross-engine replay rule). Rows with NULL url
     group under the '' pseudo-host and are capped like any other (never
     silently dropped — review catch; NULL equi-join keys vanish).
 
@@ -294,7 +295,8 @@ def host_cap_sample(
         .withColumn("_b", b)
         .filter((F.col("_hc") <= max_per_host) | (F.col("_b") < thresh))
     )
-    w = Window.partitionBy("_host").orderBy("_b", F.col(id_col))
+    # url breaks the (_b, id) tie between NULL-id rows, which share one _b
+    w = Window.partitionBy("_host").orderBy("_b", F.col(id_col), F.col(url_col))
     return (
         survivors.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= max_per_host)

@@ -665,3 +665,21 @@ def test_host_cap_sample_null_ids_not_silently_dropped(spark):
     # the NULL-id row competed: it is either kept or displaced by rank,
     # but with cap 40 of 41 rows exactly one row lost — non-silently
     assert sum(1 for r in kept if r.id is None) in (0, 1)
+
+
+def test_host_cap_sample_null_id_ties_deterministic_across_parallelism(spark):
+    """NULL-id rows share one hash bucket, so in an over-cap host they tie
+    on ``(_b, id)``; url breaks the tie, so the kept urls do not depend on
+    the partitioning (the smallest urls win)."""
+    rows = [(f"https://hot.example/p{i:02d}", None) for i in range(20)]
+    rows += [(f"https://cold.example/q{i}", i) for i in range(3)]
+
+    def kept(n):
+        df = spark.createDataFrame(rows, "url string, id long").repartition(n)
+        kept = U.host_cap_sample(df, 7, url_col="url", id_col="id").collect()
+        return sorted(r.url for r in kept)
+
+    a, b = kept(2), kept(16)
+    assert a == b
+    assert [u for u in a if "hot" in u] == sorted(u for u, _ in rows if "hot" in u)[:7]
+    assert sum(1 for u in a if "cold" in u) == 3
