@@ -302,9 +302,9 @@ def cmd_ingest(args) -> int:
     from pyspark.sql import Window
 
     from mistral_ocr_spark.operators.corpus import dedup_increment
-    from mistral_ocr_spark.operators.dedup import scratch_table_dir
     from mistral_ocr_spark.operators.extract import extract_pages
     from mistral_ocr_spark import pipeline
+    from mistral_ocr_spark.scratch import materialize, scratch_path, scratch_table_dir
 
     spark = get_spark(app_name="ocr-ingest")
     scratch = scratch_table_dir(spark)
@@ -317,10 +317,10 @@ def cmd_ingest(args) -> int:
     # prebuilt-artifact path); n_corpus is a count on that compact table
     from mistral_ocr_spark.operators.dedup import content_fingerprint
 
-    _corpus_docs(spark, args.table).select(
-        content_fingerprint("text").alias("fp")
-    ).write.mode("overwrite").parquet(f"{scratch}/ingest_corpus_fp.parquet")
-    corpus_fp = spark.read.parquet(f"{scratch}/ingest_corpus_fp.parquet")
+    corpus_fp = materialize(
+        _corpus_docs(spark, args.table).select(content_fingerprint("text").alias("fp")),
+        scratch_path(scratch, "ingest_corpus_fp"),
+    )
     n_corpus = corpus_fp.count()
     # the "already committed" url set is EVERY committed url — including
     # error rows, which _corpus_docs excludes from the dedup corpus: an
@@ -329,16 +329,17 @@ def cmd_ingest(args) -> int:
     # explicit retry path, not ingest's). Plain read + distinct: the
     # latest-wins window would cost a full-table sort for an identical
     # url set (review).
-    catalog.read_extracted(spark, args.table).select("url").distinct() \
-        .write.mode("overwrite").parquet(f"{scratch}/ingest_committed_urls.parquet")
-    committed_urls = spark.read.parquet(f"{scratch}/ingest_committed_urls.parquet")
+    committed_urls = materialize(
+        catalog.read_extracted(spark, args.table).select("url").distinct(),
+        scratch_path(scratch, "ingest_committed_urls"),
+    )
 
     pages = spark.read.parquet(args.pages)
     # one snapshot per url: latest warc_ts, content-hash tiebreak
     w = Window.partitionBy("url").orderBy(
         F.desc_nulls_last("warc_ts"), F.xxhash64("html")
     )
-    pages_one = (
+    pages_one = materialize(
         pages.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
@@ -349,17 +350,15 @@ def cmd_ingest(args) -> int:
         # across corpus and increment up to 64-bit xxhash64 collisions
         # (the corpus.py expectation: thousands at 10^12 urls; one
         # collision can misclassify one near-dup pair — accepted odds).
-        .join(committed_urls, "url", "left_anti")
+        .join(committed_urls, "url", "left_anti"),
+        scratch_path(scratch, "ingest_pages"),
     )
-    pages_one.write.mode("overwrite").parquet(f"{scratch}/ingest_pages.parquet")
-    pages_one = spark.read.parquet(f"{scratch}/ingest_pages.parquet")
-    inc = (
+    inc = materialize(
         extract_pages(pages_one)
         .filter(F.col("error_class").isNull() & (F.length("text") > 0))
-        .select(F.xxhash64("url").alias("doc_id"), "url", "text")
+        .select(F.xxhash64("url").alias("doc_id"), "url", "text"),
+        scratch_path(scratch, "ingest_inc"),
     )
-    inc.write.mode("overwrite").parquet(f"{scratch}/ingest_inc.parquet")
-    inc = spark.read.parquet(f"{scratch}/ingest_inc.parquet")
     novel = dedup_increment(
         None,
         inc,
@@ -372,17 +371,18 @@ def cmd_ingest(args) -> int:
     # withhold ONLY positively-identified duplicates; error/empty pages
     # (urls absent from `inc`) flow to the run so failure accounting
     # still happens
-    drop_urls = inc.select("url").subtract(novel.select("url")).distinct()
-    drop_urls.write.mode("overwrite").parquet(f"{scratch}/ingest_drop.parquet")
-    drop_urls = spark.read.parquet(f"{scratch}/ingest_drop.parquet")
-    # checkpoint the final page set: pipeline.run triggers one action per
-    # chunk, and each would otherwise re-run the per-url window + joins
-    pages_one.join(drop_urls, "url", "left_anti").write.mode(
-        "overwrite"
-    ).parquet(f"{scratch}/ingest_pages_novel.parquet")
-    pages_novel = spark.read.parquet(f"{scratch}/ingest_pages_novel.parquet")
+    drop_urls = materialize(
+        inc.select("url").subtract(novel.select("url")).distinct(),
+        scratch_path(scratch, "ingest_drop"),
+    )
+    # both inputs are materialized and pipeline.run reads its pages in one
+    # job, so the final page set needs no checkpoint of its own
     stats = pipeline.run(
-        spark, pages_novel, args.table, run_id=run_id, n_chunks=args.chunks
+        spark,
+        pages_one.join(drop_urls, "url", "left_anti"),
+        args.table,
+        run_id=run_id,
+        n_chunks=args.chunks,
     )
     stats["corpus_docs_before"] = n_corpus
     stats["skipped_duplicate_urls"] = drop_urls.count()

@@ -325,12 +325,10 @@ def bloom_dedup_increment(
     # increment source can't flag a row differently per branch (losing or
     # duplicating it) and the probe kernel runs once, not per branch —
     # the corpus.py join-hub rule
-    from mistral_ocr_spark.operators.dedup import scratch_table_dir
+    from mistral_ocr_spark.scratch import materialize, scratch_path, scratch_table_dir
 
-    spark = increment.sparkSession
-    path = f"{(scratch_dir or scratch_table_dir(spark)).rstrip('/')}/bloom_flagged"
-    flagged.write.mode("overwrite").parquet(path)
-    flagged = spark.read.parquet(path)
+    scratch = scratch_dir or scratch_table_dir(increment.sparkSession)
+    flagged = materialize(flagged, scratch_path(scratch, "bloom_flagged"))
     definite_new = flagged.filter(~F.col("_mc")).drop("_mc")
     candidates = flagged.filter(F.col("_mc")).drop("_mc")
     fp_survivors = candidates.join(corpus.select(key_col), on=key_col, how="left_anti")

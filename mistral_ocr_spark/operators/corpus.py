@@ -37,8 +37,8 @@ from pyspark.sql import functions as F
 from mistral_ocr_spark.operators import dedup as D
 from mistral_ocr_spark.operators import sampling as SM
 from mistral_ocr_spark.operators import textstats as X
-from mistral_ocr_spark.operators.dedup import scratch_table_dir
 from mistral_ocr_spark.operators.extract import extract_pages
+from mistral_ocr_spark.scratch import materialize, scratch_path, scratch_table_dir
 
 
 def _materialize(
@@ -58,19 +58,17 @@ def _materialize(
     ``(observation, stat_key)`` pairs."""
     from pyspark.sql import Observation
 
-    spark = df.sparkSession
     obs = None
     if stats is not None and stat_key is not None:
         obs = Observation(f"corpus_{name}_{stat_key}")
         df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-    path = f"{scratch}/{name}.parquet"
-    df.write.mode("overwrite").parquet(path)
+    out = materialize(df, scratch_path(scratch, name))
     if obs is not None:
         stats[stat_key] = int(obs.get["n"])
     if stats is not None:
         for o, key in extra_obs or []:
             stats[key] = int(o.get["n"])
-    return spark.read.parquet(path)
+    return out
 
 
 def build_training_corpus(
@@ -140,8 +138,7 @@ def build_training_corpus(
     """
     from pyspark.sql import Observation
 
-    spark = pages.sparkSession
-    scratch = scratch_dir or scratch_table_dir(spark)
+    scratch = scratch_dir or scratch_table_dir(pages.sparkSession)
 
     if robots_rules is not None:
         from mistral_ocr_spark.operators.robots import filter_disallowed
@@ -327,8 +324,7 @@ def dedup_increment(
             "dedup_increment: pass corpus_docs, or the prebuilt "
             "corpus_fingerprints (+ optionally corpus_bloom)"
         )
-    spark = increment_docs.sparkSession
-    scratch = scratch_dir or scratch_table_dir(spark)
+    scratch = scratch_dir or scratch_table_dir(increment_docs.sparkSession)
 
     inc = D.exact_dedup_survivors(increment_docs, text_col=text_col, key_col=key_col)
     inc = inc.withColumn("_fp", D.content_fingerprint(text_col))
@@ -359,8 +355,7 @@ def dedup_increment(
 
     # checkpoint: the near-dup stage branches `novel` (pair mining + the
     # final anti-joins) — materialize so the bloom probe runs once
-    novel.write.mode("overwrite").parquet(f"{scratch}/inc_novel.parquet")
-    novel = spark.read.parquet(f"{scratch}/inc_novel.parquet")
+    novel = materialize(novel, scratch_path(scratch, "inc_novel"))
 
     pairs = D.minhash_lsh_pairs_incremental(
         novel,
@@ -371,8 +366,7 @@ def dedup_increment(
         include_new_new=True,
         scratch_dir=scratch,
     )
-    pairs.write.mode("overwrite").parquet(f"{scratch}/inc_pairs.parquet")
-    pairs = spark.read.parquet(f"{scratch}/inc_pairs.parquet")
+    pairs = materialize(pairs, scratch_path(scratch, "inc_pairs"))
     inc_ids = novel.select(F.col(key_col).alias("_iid"))
     # a pair is within-increment iff BOTH sides are increment ids; any
     # other pair names a corpus member
@@ -392,10 +386,8 @@ def dedup_increment(
     # join hubs: `both` feeds CC and the taint join; `drop_vs_corpus`
     # feeds the taint join and the final anti-join — materialize each
     # once (the module's checkpoint discipline; r5 review)
-    both.write.mode("overwrite").parquet(f"{scratch}/inc_within.parquet")
-    both = spark.read.parquet(f"{scratch}/inc_within.parquet")
-    drop_vs_corpus.write.mode("overwrite").parquet(f"{scratch}/inc_vs_corpus.parquet")
-    drop_vs_corpus = spark.read.parquet(f"{scratch}/inc_vs_corpus.parquet")
+    both = materialize(both, scratch_path(scratch, "inc_within"))
+    drop_vs_corpus = materialize(drop_vs_corpus, scratch_path(scratch, "inc_vs_corpus"))
 
     # BATCH semantics: CC over ALL within pairs (edges through
     # corpus-dropped bridges included), then a cluster containing any

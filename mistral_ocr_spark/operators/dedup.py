@@ -18,57 +18,19 @@ Scale notes (the 100 TB design point):
 
 from __future__ import annotations
 
-import atexit
 import math
-import os
-import re
-import shutil
-import uuid
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mistral_ocr_spark.scratch import materialize, scratch_path, scratch_table_dir
+
 _MERSENNE = (1 << 61) - 1
 _MAX32 = (1 << 32) - 1
-
-_SCRATCH_CLEANUP: set[str] = set()
-
-
-def _cleanup_scratch() -> None:
-    for d in list(_SCRATCH_CLEANUP):
-        shutil.rmtree(d, ignore_errors=True)
-        _SCRATCH_CLEANUP.discard(d)
-
-
-atexit.register(_cleanup_scratch)
-
-
-def scratch_table_dir(spark: SparkSession) -> str:
-    """A CLUSTER-VALID default location for scratch tables (signature /
-    shingle-hash materializations): a fresh subdir of
-    ``spark.sql.warehouse.dir`` — a path every executor can read — instead
-    of driver-local ``tempfile.mkdtemp`` (VERDICT r2 #3: /tmp on the driver
-    is invisible to real executors, so that default silently broke the
-    moment the code met a cluster; it only worked under local[k]).
-
-    Results read scratch parquet LAZILY, so the dir cannot be removed
-    inside the operator; auto-created local dirs are registered for atexit
-    cleanup instead (ADVICE r2: unbounded /tmp growth in long sessions).
-    On a shared filesystem (hdfs://, s3://) the dir is left to the
-    warehouse's retention policy — or pass an explicit ``scratch_dir``
-    pointing at a managed table location.
-    """
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    d = f"{wh.rstrip('/')}/_scratch/{uuid.uuid4().hex}"
-    if "://" not in wh or wh.startswith("file:"):
-        local = re.sub("^file:/+", "/", d) if d.startswith("file:") else d
-        os.makedirs(local, exist_ok=True)
-        _SCRATCH_CLEANUP.add(local)
-    return d
 
 
 def ensure_min_parallelism(df: DataFrame, factor: int = 2, floor: int = 8) -> DataFrame:
@@ -502,8 +464,7 @@ def minhash_lsh_pairs(
     ``persist()`` — no executor cache blocks outlive the query.
     """
     rows = num_hashes // bands
-    if scratch_dir is None:
-        scratch_dir = scratch_table_dir(docs.sparkSession)
+    scratch = scratch_dir or scratch_table_dir(docs.sparkSession)
     # the shingle-hash kernel + signature pass inherit the source scan's
     # partitioning (both scratch writes serialize on a 1-2 partition scan).
     # ``spread_input=False`` opts out for fixture-scale inputs where the
@@ -515,17 +476,13 @@ def minhash_lsh_pairs(
     # table is materialized first and signatures derive from the scratch
     # read — the r5 order computed the identical shingle kernel twice
     # (once under the signature pass, once for the verify table).
-    sh_src = with_shingle_hashes(docs, text_col).select(
-        F.col(key_col).alias("id"), "shingles"
+    sh = materialize(
+        with_shingle_hashes(docs, text_col).select(F.col(key_col).alias("id"), "shingles"),
+        scratch_path(scratch, "shingle_hashes"),
     )
-    sh_path = os.path.join(scratch_dir, "shingle_hashes.parquet")
-    sh_src.write.mode("overwrite").parquet(sh_path)
-    sh = docs.sparkSession.read.parquet(sh_path)
     sigs = _signatures_from_shingle_hashes(sh, num_hashes)
     if prefilter:
-        sig_path = os.path.join(scratch_dir, "signatures.parquet")
-        sigs.write.mode("overwrite").parquet(sig_path)
-        sigs = docs.sparkSession.read.parquet(sig_path)
+        sigs = materialize(sigs, scratch_path(scratch, "signatures"))
     buckets = sigs.select("id", _band_bucket_cols(bands, rows).alias("bb")).select(
         "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
@@ -601,14 +558,13 @@ def minhash_index(
     spark = docs.sparkSession
     # ONE corpus text pass: shingle-hash → persist; signatures derive from
     # the persisted shingle table, buckets from the persisted signatures
-    with_shingle_hashes(docs, text_col).select(
-        F.col(key_col).alias("id"), "shingles"
-    ).write.mode("overwrite").parquet(f"{index_dir}/shingles")
-    sh = spark.read.parquet(f"{index_dir}/shingles")
-    _signatures_from_shingle_hashes(sh, num_hashes).write.mode("overwrite").parquet(
-        f"{index_dir}/signatures"
+    sh = materialize(
+        with_shingle_hashes(docs, text_col).select(F.col(key_col).alias("id"), "shingles"),
+        f"{index_dir}/shingles",
     )
-    sigs = spark.read.parquet(f"{index_dir}/signatures")
+    sigs = materialize(
+        _signatures_from_shingle_hashes(sh, num_hashes), f"{index_dir}/signatures"
+    )
     (
         sigs.select("id", _band_bucket_cols(bands, rows).alias("bb"))
         .select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
@@ -665,28 +621,23 @@ def minhash_lsh_pairs_incremental(
     rows = num_hashes // bands
     if est_margin is None:
         est_margin = hoeffding_margin(num_hashes)
-    if scratch_dir is None:
-        scratch_dir = scratch_table_dir(spark)
+    scratch = scratch_dir or scratch_table_dir(spark)
 
     # one text pass over the increment: shingle-hash → scratch; signatures
     # derive from the stored table (the index-build shape)
-    nsh_path = os.path.join(scratch_dir, "inc_shingles.parquet")
-    with_shingle_hashes(new_docs, text_col).select(
-        F.col(key_col).alias("id"), "shingles"
-    ).write.mode("overwrite").parquet(nsh_path)
-    new_sh = spark.read.parquet(nsh_path)
-    new_sig_path = os.path.join(scratch_dir, "inc_signatures.parquet")
-    _signatures_from_shingle_hashes(new_sh, num_hashes).write.mode(
-        "overwrite"
-    ).parquet(new_sig_path)
-    new_sigs = spark.read.parquet(new_sig_path)
-    new_buckets = (
-        new_sigs.select("id", _band_bucket_cols(bands, rows).alias("bb"))
-        .select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    new_sh = materialize(
+        with_shingle_hashes(new_docs, text_col).select(F.col(key_col).alias("id"), "shingles"),
+        scratch_path(scratch, "inc_shingles"),
     )
-    nb_path = os.path.join(scratch_dir, "inc_buckets.parquet")
-    new_buckets.write.mode("overwrite").parquet(nb_path)
-    new_buckets = spark.read.parquet(nb_path)
+    new_sigs = materialize(
+        _signatures_from_shingle_hashes(new_sh, num_hashes),
+        scratch_path(scratch, "inc_signatures"),
+    )
+    new_buckets = materialize(
+        new_sigs.select("id", _band_bucket_cols(bands, rows).alias("bb"))
+        .select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")),
+        scratch_path(scratch, "inc_buckets"),
+    )
 
     # storage-layer pruning: the increment's bucket dirs, driver-side
     # (bounded: ≤ bucket_dirs distinct _bb values by construction; the
@@ -842,9 +793,12 @@ def _simhash_bucket_pair_fn(max_hamming: int, small_max: int = 64, row_chunk: in
     list<struct<id, sim_lo, sim_hi>> of the bucket's members. Small
     buckets (n ≤ ``small_max``) are stacked per exact size so one
     broadcasted XOR+popcount evaluates every bucket of that size at once;
-    heavy buckets run a row-chunked n×n kernel (bounded memory regardless
-    of bucket size). Popcount is a 16-bit lookup table over the int64
-    words — exact, same arithmetic as the JVM ``bit_count`` it replaces.
+    heavy buckets run a row-chunked kernel over ``row_chunk`` × n blocks,
+    so a task's memory is still LINEAR in the bucket size n (the members'
+    arrays plus int64 hamming temporaries per chunk — ~10 KB per member at
+    the default chunk; a 10^7-member bucket needs ~100 GB). Popcount is a
+    16-bit lookup table over the int64 words — exact, same arithmetic as
+    the JVM ``bit_count`` it replaces.
 
     Why Python here at all: the r5 all-JVM band self-join emitted every
     candidate row through the join (measured ~3.7M rows/s/core at sf1.0 —
@@ -937,7 +891,6 @@ def simhash_pairs(
     max_hamming: int = 6,
     key_col: str = "doc_id",
     text_col: str = "text",
-    scratch_dir: str | None = None,
 ) -> DataFrame:
     """Pairs with simhash hamming distance ≤ max_hamming.
 
@@ -960,15 +913,13 @@ def simhash_pairs(
     partition count scales with ``defaultParallelism``, not a constant).
     ``distinct`` stays: a pair is found once per clean band-pair.
 
-    Scale bound (honest): one bucket's members must fit one task's memory
-    (24 B/member — 10^7-member buckets ≈ 240 MB). The r5 join had the
-    same practical bound in expansion form (n² joined rows through one
-    task); at web scale both want a document-frequency-style cut on
-    degenerate buckets first.
-
-    ``scratch_dir`` is accepted for API compatibility but unused since
-    r6: signatures flow straight into the bucket shuffle (single
-    consumer), so nothing needs materializing.
+    Scale bound (honest): one bucket is evaluated by one task, whose
+    memory grows linearly with the bucket's member count (see
+    ``_simhash_bucket_pair_fn``). The r5 join had the same practical
+    bound in expansion form (n² joined rows through one task); at web
+    scale both want a document-frequency-style cut on degenerate buckets
+    first. Signatures flow straight into the bucket shuffle (single
+    consumer), so nothing is materialized.
     """
     import itertools
 
@@ -1197,17 +1148,14 @@ def exact_substring_dedup(
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
 
-    spark = docs.sparkSession
-    if scratch_dir is None:
-        scratch_dir = scratch_table_dir(spark)
+    scratch = scratch_dir or scratch_table_dir(docs.sparkSession)
     # word split + the O(n·k) window-hash kernel downstream inherit the
     # source scan's partitioning — spread before the scratch write
     docs = ensure_min_parallelism(docs)
-    ws_path = os.path.join(scratch_dir, "exsub_words.parquet")
-    docs.select(
-        F.col(id_col), words_expr(F.col(text_col)).alias("_ws")
-    ).write.mode("overwrite").parquet(ws_path)
-    wdf = spark.read.parquet(ws_path)
+    wdf = materialize(
+        docs.select(F.col(id_col), words_expr(F.col(text_col)).alias("_ws")),
+        scratch_path(scratch, "exsub_words"),
+    )
 
     # -- 1. window occurrences --------------------------------------------
     w = F.col("_ws")
@@ -1235,9 +1183,7 @@ def exact_substring_dedup(
     # slice-hash kernel per branch measured 4.4s vs ~2s for write+reads
     # at sf1.0 (r6) — compact (id, start, h1, h2) rows, a fraction of the
     # kernel's cost to persist
-    occ_path = os.path.join(scratch_dir, "exsub_occ.parquet")
-    occ.write.mode("overwrite").parquet(occ_path)
-    occ = spark.read.parquet(occ_path)
+    occ = materialize(occ, scratch_path(scratch, "exsub_occ"))
 
     # -- 2. count + winner: map-side-combined agg + skew-splittable join --
     site = F.struct(F.col(id_col), F.col("start"))

@@ -162,12 +162,8 @@ def dsir_weights(
     Plan: raw grams explode → broadcast-join λ (≤B rows) → groupBy(id).
     Documents with zero grams keep a row with logw = 0 (left-join anchor
     on the input ids — the line-dedup anchoring rule)."""
-    import os
-
-    from mistral_ocr_spark.operators.dedup import (
-        ensure_min_parallelism,
-        scratch_table_dir,
-    )
+    from mistral_ocr_spark.operators.dedup import ensure_min_parallelism
+    from mistral_ocr_spark.scratch import materialize, scratch_path, scratch_table_dir
 
     # the per-gram md5 bucketing (the dominant cost over raw) inherits the
     # SOURCE scan's partitioning — spread it first (no-op on an
@@ -177,10 +173,10 @@ def dsir_weights(
     # materialize raw's (id, bucket) stream once: it feeds BOTH p̂_raw and
     # the scoring join, and the md5 gram kernel would otherwise evaluate
     # once per branch (r6) — compact rows, a fraction of the kernel cost
-    db = _doc_buckets(raw, text_col, id_col, n_buckets, salt)
-    db_path = os.path.join(scratch_table_dir(raw.sparkSession), "dsir_buckets.parquet")
-    db.write.mode("overwrite").parquet(db_path)
-    db = raw.sparkSession.read.parquet(db_path)
+    db = materialize(
+        _doc_buckets(raw, text_col, id_col, n_buckets, salt),
+        scratch_path(scratch_table_dir(raw.sparkSession), "dsir_buckets"),
+    )
     raw_counts = db.groupBy("bucket").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     lam = log_ratio_table(
         raw_counts,

@@ -14,7 +14,7 @@ Rounds converge in O(log^2 n) on any graph (near-dup graphs here have tiny
 diameter, so 2-4 rounds in practice).
 
 Each round re-materializes the edge frontier to a scratch parquet table
-(``dedup.scratch_table_dir`` — warehouse-relative, cluster-valid) instead of
+(``scratch.materialize``; warehouse-relative by default) instead of
 growing one lineage chain: iteration K's plan would otherwise nest K joins
 deep, and Catalyst re-optimization cost grows superlinearly with that. The
 loop-over-jobs pattern is the same one Spark's own GraphFrames CC uses.
@@ -30,26 +30,10 @@ scratch-frontier + Observation iteration machinery.
 
 from __future__ import annotations
 
-import os
-import re
-import shutil
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from mistral_ocr_spark.operators.dedup import scratch_table_dir
-
-
-def _rm_frontier(path: str) -> None:
-    """Best-effort in-loop scratch removal (VERDICT r3 #6: a 20-round worst
-    case used to leave 20 full edge-list copies until session atexit).
-    Local filesystem only — on a shared warehouse (hdfs://, s3://) scratch
-    retention is the warehouse policy's job, same rule as
-    dedup.scratch_table_dir."""
-    if "://" in path and not path.startswith("file:"):
-        return
-    local = re.sub("^file:/+", "/", path) if path.startswith("file:") else path
-    shutil.rmtree(local, ignore_errors=True)
+from mistral_ocr_spark.scratch import materialize, remove, scratch_path, scratch_table_dir
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -91,22 +75,24 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return _canonical(out)
 
 
-def _write_with_fingerprint(edges: DataFrame, path: str) -> tuple[int, int]:
-    """Write the frontier AND return its order-insensitive (count, xor
-    checksum) — the convergence test — from the SAME job via an
+def _materialize_with_fingerprint(
+    edges: DataFrame, path: str
+) -> tuple[DataFrame, tuple[int, int]]:
+    """Materialize the frontier AND return its order-insensitive (count,
+    xor checksum) — the convergence test — from the SAME job via an
     ``Observation``: metrics accumulate while rows stream to the sink, so
     each round costs one Spark job, not a write plus a re-aggregation."""
-    from pyspark.sql import Observation
-
     obs = Observation()
-    observed = edges.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
+    out = materialize(
+        edges.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
+        ),
+        path,
     )
-    observed.write.mode("overwrite").parquet(path)
     got = obs.get
-    return int(got["n"]), int(got["h"])
+    return out, (int(got["n"]), int(got["h"]))
 
 
 def connected_components(
@@ -137,30 +123,27 @@ def connected_components(
     (asserted in tests/test_graph.py), and the converged last two are
     removed by the scratch dir's atexit cleanup as before.
     """
-    spark = pairs.sparkSession
-    if scratch_dir is None:
-        scratch_dir = scratch_table_dir(spark)
+    scratch = scratch_dir or scratch_table_dir(pairs.sparkSession)
 
     edges = _canonical(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     )
-    path = os.path.join(scratch_dir, "cc_frontier_0.parquet")
-    fp = _write_with_fingerprint(edges, path)
-    edges = spark.read.parquet(path)
+    paths = [scratch_path(scratch, "cc_frontier_0")]
+    edges, fp = _materialize_with_fingerprint(edges, paths[0])
     edge_counts = [fp[0]]
 
     n_rounds = 0
     for rnd in range(1, max_rounds + 1):
-        nxt = _small_star(_large_star(edges))
-        path = os.path.join(scratch_dir, f"cc_frontier_{rnd}.parquet")
-        nfp = _write_with_fingerprint(nxt, path)
-        edges = spark.read.parquet(path)
+        paths.append(scratch_path(scratch, f"cc_frontier_{rnd}"))
+        edges, nfp = _materialize_with_fingerprint(
+            _small_star(_large_star(edges)), paths[rnd]
+        )
         edge_counts.append(nfp[0])
         n_rounds = rnd
         # Frontier rnd-2 fed the round that produced rnd-1 and is now
         # unreachable by any future read — drop it (keep rnd-1 and rnd).
         if rnd >= 2:
-            _rm_frontier(os.path.join(scratch_dir, f"cc_frontier_{rnd - 2}.parquet"))
+            remove(paths[rnd - 2])
         if nfp == fp:
             break
         fp = nfp
@@ -226,22 +209,16 @@ def pagerank(
     ``stats`` (optional, filled in-place): ``n_nodes``, ``n_iters``,
     ``deltas`` (per-iteration L1 deltas).
     """
-    from pyspark.sql import Observation
-
     if not 0.0 < damping < 1.0:
         raise ValueError(f"damping must be in (0,1), got {damping}")
-    spark = edges.sparkSession
-    if scratch_dir is None:
-        scratch_dir = scratch_table_dir(spark)
+    scratch = scratch_dir or scratch_table_dir(edges.sparkSession)
 
-    e = (
+    e = materialize(
         edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
         .filter(F.col("_s").isNotNull() & F.col("_d").isNotNull())
-        .distinct()
+        .distinct(),
+        scratch_path(scratch, "pr_edges"),
     )
-    epath = os.path.join(scratch_dir, "pr_edges.parquet")
-    e.write.mode("overwrite").parquet(epath)
-    e = spark.read.parquet(epath)
 
     nodes = (
         e.select(F.col("_s").alias("node"))
@@ -255,19 +232,22 @@ def pagerank(
         "node", F.coalesce("out_deg", F.lit(0)).alias("out_deg")
     )
     obs0 = Observation()
-    spath = os.path.join(scratch_dir, "pr_ranks_0.parquet")
-    static.observe(
-        obs0,
-        F.count(F.lit(1)).alias("n"),
-        F.sum((F.col("out_deg") == 0).cast("long")).alias("n_dang"),
-    ).write.mode("overwrite").parquet(spath)
+    paths = [scratch_path(scratch, "pr_ranks_0")]
+    static = materialize(
+        static.observe(
+            obs0,
+            F.count(F.lit(1)).alias("n"),
+            F.sum((F.col("out_deg") == 0).cast("long")).alias("n_dang"),
+        ),
+        paths[0],
+    )
     got0 = obs0.get
     n = int(got0["n"])
     if n == 0:
         raise ValueError("pagerank: empty edge list (no non-NULL endpoints)")
     d = float(damping)
     dangling = int(got0["n_dang"]) / n  # uniform init: mass 1/N per node
-    prev = spark.read.parquet(spath).withColumn("rank", F.lit(1.0 / n))
+    prev = static.withColumn("rank", F.lit(1.0 / n))
 
     deltas: list[float] = []
     n_iters = 0
@@ -291,22 +271,24 @@ def pagerank(
             )
         )
         obs = Observation()
-        path = os.path.join(scratch_dir, f"pr_ranks_{it}.parquet")
-        nxt.observe(
-            obs,
-            F.sum(F.abs(F.col("rank") - F.col("_prev"))).alias("delta"),
-            F.sum(
-                F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0)
-            ).alias("dang"),
-        ).select("node", "out_deg", "rank").write.mode("overwrite").parquet(path)
+        paths.append(scratch_path(scratch, f"pr_ranks_{it}"))
+        prev = materialize(
+            nxt.observe(
+                obs,
+                F.sum(F.abs(F.col("rank") - F.col("_prev"))).alias("delta"),
+                F.sum(
+                    F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0)
+                ).alias("dang"),
+            ).select("node", "out_deg", "rank"),
+            paths[it],
+        )
         got = obs.get
         delta = float(got["delta"])
         dangling = float(got["dang"])
         deltas.append(delta)
-        prev = spark.read.parquet(path)
         n_iters = it
         if it >= 2:
-            _rm_frontier(os.path.join(scratch_dir, f"pr_ranks_{it - 2}.parquet"))
+            remove(paths[it - 2])
         if delta <= tol:
             break
 

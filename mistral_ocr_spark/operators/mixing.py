@@ -181,7 +181,6 @@ def select_until_budget(
         cost_col,
         partitions=partitions,
         scratch_dir=scratch_dir,
-        file_prefix="budget_staged",
         extra_aggs=[
             F.sum(F.col(score_col).isNull().cast("int")).alias("_snulls"),
             F.min(cost_col).alias("_min"),

@@ -208,7 +208,6 @@ def distributed_prefix_sum(
     *,
     partitions: int | None = None,
     scratch_dir: str | None = None,
-    file_prefix: str = "prefix_staged",
     extra_aggs: list | None = None,
 ) -> tuple[DataFrame, list]:
     """Inclusive global running sum of ``value_col`` in ``order`` as a
@@ -237,11 +236,9 @@ def distributed_prefix_sum(
     breaking the identical-at-any-parallelism contract — and NULL-free
     (checked here: a NULL row silently vanishes from the running sum).
     """
-    import uuid as _uuid
-
     from pyspark.sql import Window
 
-    from mistral_ocr_spark.operators.dedup import scratch_table_dir
+    from mistral_ocr_spark.scratch import materialize, scratch_path, scratch_table_dir
 
     dtype = df.schema[value_col].dataType.simpleString()
     if dtype not in _INTEGRAL_TYPES:
@@ -255,13 +252,7 @@ def distributed_prefix_sum(
     staged = df.repartitionByRange(p, *order).withColumn(
         "_pid", F.spark_partition_id()
     )
-    # uuid-suffixed: the staged table is re-read lazily by the returned
-    # DataFrame, so a second call sharing an explicit scratch_dir must
-    # never overwrite it (r5 review — the base offsets were computed
-    # against THIS file's contents)
-    path = f"{scratch}/{file_prefix}_{_uuid.uuid4().hex}.parquet"
-    staged.write.mode("overwrite").parquet(path)
-    staged = spark.read.parquet(path)
+    staged = materialize(staged, scratch_path(scratch, "prefix_staged"))
 
     agg_rows = (
         staged.groupBy("_pid")
@@ -333,7 +324,6 @@ def pack_sequences(
         n_tokens_col,
         partitions=partitions,
         scratch_dir=scratch_dir,
-        file_prefix="pack_staged",
     )
     return (
         staged.withColumn("global_offset", F.col("_cum") - F.col(n_tokens_col))

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mistral_ocr_spark.operators import dsir
-from mistral_ocr_spark.operators.dedup import scratch_table_dir
+from mistral_ocr_spark.scratch import materialize, scratch_path, scratch_table_dir
 
 
 def doc_features(
@@ -169,8 +169,7 @@ def train_quality_classifier(
     narrow numpy pass per iteration (module docstring has the scale
     argument)."""
     spark = labeled.sparkSession
-    if scratch_dir is None:
-        scratch_dir = scratch_table_dir(spark)
+    scratch = scratch_dir or scratch_table_dir(spark)
     # drop NULL-label rows BEFORE featurization: in the common shape
     # (small labeled seed inside a mostly-unlabeled corpus) featurizing
     # first would pay the gram explode + both shuffles for rows the
@@ -183,20 +182,16 @@ def train_quality_classifier(
     from mistral_ocr_spark.operators.dedup import ensure_min_parallelism
 
     labeled = ensure_min_parallelism(labeled)
-    train_path = os.path.join(scratch_dir, "qclf_train.parquet")
-    (
+    tdf = materialize(
         labeled.select(
             F.col(label_col).cast("double").alias("_y"),
             F.col(text_col).alias("_t"),
-        )
-        .mapInPandas(
+        ).mapInPandas(
             _train_features_fn(int(n_buckets), salt),
             "_y double, _bs array<bigint>, _xs array<double>",
-        )
-        .write.mode("overwrite")
-        .parquet(train_path)
+        ),
+        scratch_path(scratch, "qclf_train"),
     )
-    tdf = spark.read.parquet(train_path)
 
     V = int(n_buckets)
     w = np.zeros(V, dtype=np.float64)

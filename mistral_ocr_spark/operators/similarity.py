@@ -746,11 +746,9 @@ def semdedup(
         "_u",
         F.round(_dot(F.col("_u"), F.col("c_unit")), 9).alias("cent_sim"),
     )
-    from mistral_ocr_spark.operators.dedup import scratch_table_dir
+    from mistral_ocr_spark.scratch import materialize, scratch_path, scratch_table_dir
 
-    scored_dir = f"{scratch_table_dir(spark)}/semdedup_scored"
-    scored.write.mode("overwrite").parquet(scored_dir)
-    scored = spark.read.parquet(scored_dir)
+    scored = materialize(scored, scratch_path(scratch_table_dir(spark), "semdedup_scored"))
 
     # Per-cluster pairwise work runs in ONE numpy kernel over grouped
     # clusters (r6: the r5 self-join evaluated an interpreted zip_with dot

@@ -141,12 +141,11 @@ def heavy_hitters(
     # per consumer — materialize the partitions × (k+1) rows through a
     # scratch table (the minhash/CC pattern) so the corpus is read exactly
     # twice end to end: once for the summaries, once for the recount
-    from mistral_ocr_spark.operators.dedup import scratch_table_dir
+    from mistral_ocr_spark.scratch import materialize, scratch_path, scratch_table_dir
 
-    spark = df.sparkSession
-    path = scratch_table_dir(spark) + "/mg_summary.parquet"
-    summary.write.mode("overwrite").parquet(path)
-    summary = spark.read.parquet(path)
+    summary = materialize(
+        summary, scratch_path(scratch_table_dir(df.sparkSession), "mg_summary")
+    )
     cand = summary.filter(~F.col("is_sentinel")).select("item").distinct()
     n_total = summary.filter(F.col("is_sentinel")).agg(F.sum("lb").alias("_n"))
     counts = (

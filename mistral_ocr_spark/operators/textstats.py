@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mistral_ocr_spark.scratch import materialize
+
 # Language marker words (surrounded by spaces when counted): the highest-
 # frequency function words per language — the standard closed-class-word
 # profile trick (function words are near-universal in running text and
@@ -376,18 +378,16 @@ def bm25_index(
     # NOT from a second corpus scan+shuffle (exchange reuse does not span
     # separate write actions; deriving from the read-back keeps the
     # "one corpus pass" claim true — r4 review)
-    (
+    doclen = materialize(
         spark.read.parquet(f"{index_dir}/postings")
         .groupBy(id_col)
-        .agg(F.sum("_tf").alias("_dl"))
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/doclen")
+        .agg(F.sum("_tf").alias("_dl")),
+        f"{index_dir}/doclen",
     )
     # stats row also records n_buckets: the query side MUST hash terms with
     # the same modulus or the partition filter silently drops terms
     (
-        spark.read.parquet(f"{index_dir}/doclen")
-        .agg(
+        doclen.agg(
             F.count(F.lit(1)).alias("_n"),
             F.avg("_dl").alias("_avgdl"),
             F.lit(n_buckets).alias("_n_buckets"),
@@ -529,7 +529,6 @@ def ngram_lm_train(
     scores (vocab-bounded), so the scoring joins below broadcast or
     shuffle as AQE decides — no forced broadcast (the standing policy).
     """
-    spark = corpus.sparkSession
     from mistral_ocr_spark.operators.dedup import ensure_min_parallelism
 
     corpus = ensure_min_parallelism(corpus)
@@ -540,9 +539,10 @@ def ngram_lm_train(
     words = _lm_word_arrays(corpus, text_col, id_col).select(
         F.explode_outer("_ws").alias("w")
     )
-    uni = words.groupBy("w").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    uni.write.mode("overwrite").parquet(f"{lm_dir}/unigrams")
-    uni = spark.read.parquet(f"{lm_dir}/unigrams")
+    uni = materialize(
+        words.groupBy("w").agg(F.count(F.lit(1)).cast("bigint").alias("c")),
+        f"{lm_dir}/unigrams",
+    )
     arrs = _lm_word_arrays(corpus, text_col, id_col)
     # single-token docs contribute no pairs: sequence(1, 0) in Spark is
     # the DESCENDING array [1, 0] (not empty!), whose element_at(_ws, 2)/

@@ -888,7 +888,7 @@ SELECT doc_id, score FROM s ORDER BY score DESC, doc_id LIMIT 15
     _BM25_ORACLE,
 )
 def bm25_search(spark, sf_dir):
-    from mistral_ocr_spark.operators.dedup import scratch_table_dir
+    from mistral_ocr_spark.scratch import scratch_table_dir
 
     docs = _t(spark, sf_dir, "documents")
     idx = X.bm25_index(docs, scratch_table_dir(spark) + "/bm25_index")
@@ -1412,7 +1412,7 @@ def ann_ivf_topk(spark, sf_dir):
     # With nprobe = n_centroids every posting list is probed, so the result
     # equals exact top-k and the driver value-hash checks the whole
     # build-index → partition-pruned-search path end to end.
-    from mistral_ocr_spark.operators.dedup import scratch_table_dir
+    from mistral_ocr_spark.scratch import scratch_table_dir
 
     e = _t(spark, sf_dir, "embeddings")
     idx_dir = scratch_table_dir(spark) + "/ivf_index"

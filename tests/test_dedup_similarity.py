@@ -208,9 +208,11 @@ def test_scratch_default_is_warehouse_relative_and_cleaned(spark):
     import os
     import re
 
+    from mistral_ocr_spark import scratch as SC
+
     wh = spark.conf.get("spark.sql.warehouse.dir")
     wh_local = re.sub("^file:/+", "/", wh)
-    before = set(D._SCRATCH_CLEANUP)
+    before = set(SC._SCRATCH_CLEANUP)
 
     docs = D.augmented_docs(spark.read.parquet(f"{SF001}/documents.parquet"))
     D.minhash_lsh_pairs(docs, threshold=0.6).count()
@@ -218,7 +220,7 @@ def test_scratch_default_is_warehouse_relative_and_cleaned(spark):
     # straight into the bucket shuffle) — it must NOT register a dir
     D.simhash_pairs(docs, max_hamming=6).count()
 
-    created = set(D._SCRATCH_CLEANUP) - before
+    created = set(SC._SCRATCH_CLEANUP) - before
     assert len(created) == 1, f"expected 1 registered scratch dir, got {created}"
     for d in created:
         assert d.startswith(wh_local.rstrip("/") + "/_scratch/"), d
@@ -228,9 +230,9 @@ def test_scratch_default_is_warehouse_relative_and_cleaned(spark):
             for _, _, fs in os.walk(d)
             for f in fs
         ), f"no scratch parquet under {d}"
-    D._cleanup_scratch()
+    SC._cleanup_scratch()
     assert not any(os.path.exists(d) for d in created)
-    assert not D._SCRATCH_CLEANUP
+    assert not SC._SCRATCH_CLEANUP
 
 
 def test_simhash_banding_is_exact_vs_all_pairs(spark):

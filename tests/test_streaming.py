@@ -126,56 +126,6 @@ def test_incremental_exactly_once(spark, dirs):
     assert out.select("url").distinct().count() == 450
 
 
-def test_stateful_v2_transform_with_state(spark):
-    """transformWithStateInPandas (the Spark 4 stateful API): counters
-    accumulate across two invocations via RocksDB-backed state and equal
-    both the batch groupBy and the applyInPandasWithState variant.
-
-    Environmental gate: Spark's transform_with_state driver worker imports
-    google.protobuf (its state-message wire format); this sandbox has no
-    protobuf wheel, so the test skips there and runs wherever protobuf is
-    installed. The applyInPandasWithState variant above carries the
-    always-on coverage of the same semantics."""
-    import tempfile
-
-    pytest.importorskip("google.protobuf.descriptor")
-
-    from pyspark.sql import functions as F
-
-    from mistral_ocr_spark.streaming.stateful import latest_host_stats
-    from mistral_ocr_spark.streaming.stateful_v2 import host_stats_stream_v2
-
-    base = tempfile.mkdtemp(prefix="ocr_state_v2_")
-    pages_dir, out_dir, ckpt = f"{base}/pages", f"{base}/out", f"{base}/ckpt"
-
-    generate_pages(spark, 300, partitions=2).write.mode("append").parquet(pages_dir)
-    host_stats_stream_v2(spark, pages_dir, out_dir, ckpt)
-    assert (
-        latest_host_stats(spark, out_dir).filter("host = 'hot.example.com'").first().pages
-        == 90
-    )
-
-    generate_pages(spark, 200, partitions=1).selectExpr(
-        "concat(url, '?r2') AS url", "warc_ts", "html", "text", "lang"
-    ).write.mode("append").parquet(pages_dir)
-    host_stats_stream_v2(spark, pages_dir, out_dir, ckpt)
-
-    stats = {r.host: (r.pages, r.bytes) for r in latest_host_stats(spark, out_dir).collect()}
-    expected = {
-        r.host: (r.pages, r.bytes)
-        for r in spark.read.parquet(pages_dir)
-        .groupBy(F.parse_url("url", F.lit("HOST")).alias("host"))
-        .agg(
-            F.count(F.lit(1)).alias("pages"),
-            F.sum(F.coalesce(F.octet_length("html"), F.lit(0))).alias("bytes"),
-        )
-        .collect()
-    }
-    assert stats == expected
-    assert stats["hot.example.com"][0] == 150
-    shutil.rmtree(base, ignore_errors=True)
-
-
 def test_streaming_commits_into_catalog(spark):
     """Streamed extraction lands in the same manifest table as the batch
     pipeline: committed chunks per micro-batch, lineage rows, latest-wins
