@@ -28,26 +28,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mistral_ocr_spark.scratch import materialize, scratch_path, scratch_table_dir
+from mistral_ocr_spark.session import partition_width, spread
 
 _MERSENNE = (1 << 61) - 1
 _MAX32 = (1 << 32) - 1
-
-
-def ensure_min_parallelism(df: DataFrame, factor: int = 2, floor: int = 8) -> DataFrame:
-    """Round-robin repartition IFF the plan's current partitioning is below
-    ``defaultParallelism * factor`` — the guard for compute-heavy kernels
-    (per-gram md5, mapInArrow signatures, explodes) whose parallelism is
-    otherwise inherited from the SOURCE scan. A small parquet table (one
-    row group) scans as a single partition, serializing everything up to
-    the first shuffle; at production scale the input has enough splits and
-    this is a no-op — the threshold scales with the cluster, never a
-    constant tuned to one box. The repartition moves the (small) input
-    once; the heavy derived work then runs wide."""
-    sc = df.sparkSession.sparkContext
-    n = max(sc.defaultParallelism * factor, floor)
-    if df.rdd.getNumPartitions() < n:
-        return df.repartition(n)
-    return df
 
 
 def _perm_params(num_hashes: int, seed: int = 42) -> tuple[np.ndarray, np.ndarray]:
@@ -136,7 +120,7 @@ def cross_doc_line_dedup(
     boilerplate one).
     """
     # the line explode + regex strip inherit the source scan's partitioning
-    docs = ensure_min_parallelism(docs)
+    docs = spread(docs)
     lines = docs.select(
         F.col(key_col),
         F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "_line"),
@@ -388,13 +372,13 @@ def minhash_signatures(
 
 
 def _estimate_prefilter(
-    cand: DataFrame, sigs: DataFrame, num_hashes: int, threshold: float, est_margin: float
+    cand: DataFrame, sigs: DataFrame, num_hashes: int, threshold: float
 ) -> DataFrame:
     """Signature-estimate prefilter shared by the one-shot and incremental
     tiers: E[matching minhash components] = true Jaccard, so candidate
-    pairs whose estimate sits more than ``est_margin`` below the threshold
-    are cut before the exact-verification join (Hoeffding-bounded miss
-    probability — see ``hoeffding_margin``)."""
+    pairs whose estimate sits more than ``hoeffding_margin(num_hashes)``
+    below the threshold are cut before the exact-verification join
+    (Hoeffding-bounded miss probability)."""
     sig_a = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     sig_b = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
     est = F.size(
@@ -403,7 +387,7 @@ def _estimate_prefilter(
     return (
         cand.join(sig_a, "id_a")
         .join(sig_b, "id_b")
-        .filter(est >= threshold - est_margin)
+        .filter(est >= threshold - hoeffding_margin(num_hashes))
         .select("id_a", "id_b")
     )
 
@@ -442,8 +426,6 @@ def minhash_lsh_pairs(
     bands: int = 32,
     key_col: str = "doc_id",
     text_col: str = "text",
-    prefilter: bool = True,
-    est_margin: float | None = None,
     scratch_dir: str | None = None,
     spread_input: bool = True,
 ) -> DataFrame:
@@ -452,16 +434,16 @@ def minhash_lsh_pairs(
     recall governed by the band/row choice: P[miss | s=0.6, 32 bands of 2]
     ≈ (1-0.36)^32 < 1e-6).
 
-    ``prefilter`` cuts candidate pairs whose signature-estimated Jaccard
-    sits more than ``est_margin`` below the threshold before the exact
-    verify join. The default margin is Hoeffding-sized for a ≤1e-6 miss
-    probability at the configured ``num_hashes`` (≈0.33 at 64 hashes), so
-    the output stays the exact answer set up to that bound.
+    A prefilter cuts candidate pairs whose signature-estimated Jaccard
+    sits more than ``hoeffding_margin(num_hashes)`` below the threshold
+    before the exact verify join. The margin is sized for a ≤1e-6 miss
+    probability (≈0.33 at 64 hashes), so the output stays the exact answer
+    set up to that bound.
 
-    When the prefilter is on, signatures feed three plan branches; they are
-    materialized once to a scratch parquet "signatures table" (the
-    production shape: an explicit Iceberg signatures table) instead of
-    ``persist()`` — no executor cache blocks outlive the query.
+    Signatures feed three plan branches; they are materialized once to a
+    scratch parquet "signatures table" (the production shape: an explicit
+    Iceberg signatures table) instead of ``persist()`` — no executor cache
+    blocks outlive the query.
     """
     rows = num_hashes // bands
     scratch = scratch_dir or scratch_table_dir(docs.sparkSession)
@@ -471,7 +453,7 @@ def minhash_lsh_pairs(
     # extra task waves cost more than the serial kernel (size-only plan
     # stats cannot see a filter's selectivity, so the caller decides).
     if spread_input:
-        docs = ensure_min_parallelism(docs)
+        docs = spread(docs)
     # ONE shingle-kernel pass over the corpus (r6): the hashed-shingle
     # table is materialized first and signatures derive from the scratch
     # read — the r5 order computed the identical shingle kernel twice
@@ -480,9 +462,9 @@ def minhash_lsh_pairs(
         with_shingle_hashes(docs, text_col).select(F.col(key_col).alias("id"), "shingles"),
         scratch_path(scratch, "shingle_hashes"),
     )
-    sigs = _signatures_from_shingle_hashes(sh, num_hashes)
-    if prefilter:
-        sigs = materialize(sigs, scratch_path(scratch, "signatures"))
+    sigs = materialize(
+        _signatures_from_shingle_hashes(sh, num_hashes), scratch_path(scratch, "signatures")
+    )
     buckets = sigs.select("id", _band_bucket_cols(bands, rows).alias("bb")).select(
         "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
@@ -497,10 +479,7 @@ def minhash_lsh_pairs(
         .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
         .distinct()
     )
-    if prefilter:
-        if est_margin is None:
-            est_margin = hoeffding_margin(num_hashes)
-        cand = _estimate_prefilter(cand, sigs, num_hashes, threshold, est_margin)
+    cand = _estimate_prefilter(cand, sigs, num_hashes, threshold)
     # Exact verification reads the same hashed-shingle scratch table
     # (int64 arrays instead of ~20-byte strings: identical set sizes and
     # intersections up to a ~n²/2^64 collision probability, at a fraction
@@ -591,7 +570,6 @@ def minhash_lsh_pairs_incremental(
     threshold: float,
     key_col: str = "doc_id",
     text_col: str = "text",
-    est_margin: float | None = None,
     include_new_new: bool = True,
     scratch_dir: str | None = None,
 ) -> DataFrame:
@@ -619,8 +597,6 @@ def minhash_lsh_pairs_incremental(
     num_hashes, bands = int(meta.num_hashes), int(meta.bands)
     bucket_dirs = int(meta.bucket_dirs)
     rows = num_hashes // bands
-    if est_margin is None:
-        est_margin = hoeffding_margin(num_hashes)
     scratch = scratch_dir or scratch_table_dir(spark)
 
     # one text pass over the increment: shingle-hash → scratch; signatures
@@ -686,7 +662,7 @@ def minhash_lsh_pairs_incremental(
         .join(new_ids, "id", "left_anti")
         .unionByName(new_sigs)
     )
-    cand = _estimate_prefilter(cand, sigs, num_hashes, threshold, est_margin)
+    cand = _estimate_prefilter(cand, sigs, num_hashes, threshold)
     sh = (
         spark.read.parquet(f"{index_dir}/shingles")
         .join(new_ids, "id", "left_anti")
@@ -908,9 +884,8 @@ def simhash_pairs(
     partitions the tiny signature scan produced — 2); the kernel does
     the identical XOR+popcount comparisons inside numpy at >100M/s/core
     and emits only survivors. An explicit keyed ``repartition`` pins the
-    kernel's parallelism (AQE would coalesce the ~100 MB shuffle to a
-    couple of partitions, serializing the quadratic work; the explicit
-    partition count scales with ``defaultParallelism``, not a constant).
+    kernel's parallelism at ``partition_width`` (AQE would otherwise
+    coalesce the ~100 MB shuffle, serializing the quadratic work).
     ``distinct`` stays: a pair is found once per clean band-pair.
 
     Scale bound (honest): one bucket is evaluated by one task, whose
@@ -923,12 +898,11 @@ def simhash_pairs(
     """
     import itertools
 
-    sc = docs.sparkSession.sparkContext
-    n_parts = max(sc.defaultParallelism * 2, 8)
+    n_parts = partition_width(docs.sparkSession)
     # The signature pass + 28-way band explode + bucket-shuffle write all
     # run on the SOURCE's partitioning (measured: 23s → 10s at sf1.0 when
     # the corpus scanned as 2 partitions).
-    docs = ensure_min_parallelism(docs)
+    docs = spread(docs)
     sigs = simhash_signatures(docs, key_col, text_col)
 
     def band_bits(i: int):
@@ -1032,7 +1006,7 @@ def decontaminate(
     # with the word split re-expanded per element_at: measured 26 s → 0.55 s
     # on the sf0.1 corpus, r4). Gram arrays are never empty (short docs
     # produce one whole-text gram), so outer == inner here.
-    d = with_ngram_hashes(ensure_min_parallelism(docs), n, text_col).select(
+    d = with_ngram_hashes(spread(docs), n, text_col).select(
         F.col(id_col), F.explode_outer("ngram_hashes").alias("_g")
     )
     b = (
@@ -1151,7 +1125,7 @@ def exact_substring_dedup(
     scratch = scratch_dir or scratch_table_dir(docs.sparkSession)
     # word split + the O(n·k) window-hash kernel downstream inherit the
     # source scan's partitioning — spread before the scratch write
-    docs = ensure_min_parallelism(docs)
+    docs = spread(docs)
     wdf = materialize(
         docs.select(F.col(id_col), words_expr(F.col(text_col)).alias("_ws")),
         scratch_path(scratch, "exsub_words"),

@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mistral_ocr_spark.session import spread
+
 _HASH_DENOM = 1 << 32  # md5-prefix space; buckets = prefix % n_buckets
 
 
@@ -162,14 +164,13 @@ def dsir_weights(
     Plan: raw grams explode → broadcast-join λ (≤B rows) → groupBy(id).
     Documents with zero grams keep a row with logw = 0 (left-join anchor
     on the input ids — the line-dedup anchoring rule)."""
-    from mistral_ocr_spark.operators.dedup import ensure_min_parallelism
     from mistral_ocr_spark.scratch import materialize, scratch_path, scratch_table_dir
 
     # the per-gram md5 bucketing (the dominant cost over raw) inherits the
     # SOURCE scan's partitioning — spread it first (no-op on an
-    # already-parallel input; see ensure_min_parallelism)
-    raw = ensure_min_parallelism(raw)
-    target = ensure_min_parallelism(target)
+    # already-parallel input; see session.spread)
+    raw = spread(raw)
+    target = spread(target)
     # materialize raw's (id, bucket) stream once: it feeds BOTH p̂_raw and
     # the scoring join, and the md5 gram kernel would otherwise evaluate
     # once per branch (r6) — compact rows, a fraction of the kernel cost

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mistral_ocr_spark.session import partition_width, spread
+
 
 def chunk_documents(
     docs: DataFrame,
@@ -55,9 +57,7 @@ def chunk_documents(
         # (r5 review: step > max_tokens leaves tokens in no chunk)
         raise ValueError(f"overlap must be in [0, max_tokens), got {overlap}")
     step = max_tokens - overlap
-    from mistral_ocr_spark.operators.dedup import ensure_min_parallelism
-
-    docs = ensure_min_parallelism(docs)
+    docs = spread(docs)
     words = docs.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col),
         F.split(F.trim(F.col(text_col)), r"\s+").alias("_ws"),
@@ -157,7 +157,7 @@ def redact_pii(
     for k in kinds:
         if k not in PII_PATTERNS:
             raise ValueError(f"unknown PII kind {k!r}; known: {list(PII_PATTERNS)}")
-    # NOT spread via ensure_min_parallelism: measured 4.4s serial vs 7.2s
+    # NOT spread via session.spread: measured 4.4s serial vs 7.2s
     # over a 64-way repartition at sf1.0 (r6) — the deeply nested
     # regexp_count/replace projection runs ~1.7× slower per row when
     # spread on this box, unlike every explode/kernel-based operator.
@@ -248,7 +248,7 @@ def distributed_prefix_sum(
         )
     spark = df.sparkSession
     scratch = scratch_dir or scratch_table_dir(spark)
-    p = partitions or spark.sparkContext.defaultParallelism
+    p = partitions or partition_width(spark)
     staged = df.repartitionByRange(p, *order).withColumn(
         "_pid", F.spark_partition_id()
     )

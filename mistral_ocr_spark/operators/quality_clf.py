@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from mistral_ocr_spark.operators import dsir
 from mistral_ocr_spark.scratch import materialize, scratch_path, scratch_table_dir
+from mistral_ocr_spark.session import spread
 
 
 def doc_features(
@@ -179,9 +180,7 @@ def train_quality_classifier(
     # partitioning — spread it (no-op on an already-parallel input); the
     # kernel output keeps that width, so the scratch parquet and every GD
     # iteration over it run wide without a further exchange
-    from mistral_ocr_spark.operators.dedup import ensure_min_parallelism
-
-    labeled = ensure_min_parallelism(labeled)
+    labeled = spread(labeled)
     tdf = materialize(
         labeled.select(
             F.col(label_col).cast("double").alias("_y"),
@@ -317,9 +316,7 @@ def quality_score(
     spark = df.sparkSession
     with open(f"{model_dir}/meta.json") as f:
         meta = json.load(f)
-    from mistral_ocr_spark.operators.dedup import ensure_min_parallelism
-
-    df = ensure_min_parallelism(df)
+    df = spread(df)
     wdf = spark.read.parquet(f"{model_dir}/weights")
     feats = doc_features(
         df, text_col, id_col, int(meta["n_buckets"]), meta["salt"]

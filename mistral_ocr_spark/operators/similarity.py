@@ -29,6 +29,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mistral_ocr_spark.session import partition_width
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -762,10 +764,8 @@ def semdedup(
     # JVM-side (same Round expression as before).
     from pyspark.sql import types as T
 
-    sc = spark.sparkContext
-    n_parts = max(min(int(C.shape[0]), sc.defaultParallelism * 2), 1)
     grouped = (
-        scored.repartition(n_parts, "centroid_id")
+        scored.repartition(min(int(C.shape[0]), partition_width(spark)), "centroid_id")
         .groupBy("centroid_id")
         .agg(F.collect_list(F.struct("vec_id", "_u", "cent_sim")).alias("members"))
     )

@@ -121,7 +121,7 @@ def heavy_hitters(
     k = max(2, math.ceil(2.0 / threshold_frac))
     from pyspark.sql import types as T
 
-    # NOT spread via ensure_min_parallelism: repartitioning after the
+    # NOT spread via session.spread: repartitioning after the
     # caller's explode shuffles the full item stream (r6: measured 3.8s →
     # 5.7s at sf1.0 — the extra 5M-row exchange costs more than the wide
     # MG pass saves; more partitions also mean more MG candidates).

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mistral_ocr_spark.scratch import materialize
+from mistral_ocr_spark.session import partition_width, spread
 
 # Language marker words (surrounded by spaces when counted): the highest-
 # frequency function words per language — the standard closed-class-word
@@ -193,15 +194,12 @@ def web_quality_signals(
         .withColumn("short_line_frac", short_frac)
     )
     carry = ["n_lines", "punct_line_frac", "short_line_frac"] + user_carry
-    # explicit partition count: an UNPINNED keyed repartition is coalesced
-    # by AQE to match the (small) compact-row bytes, which would run the
-    # 30×-fanout explode + per-word work downstream on 1-2 partitions;
-    # the count scales with the cluster, and HashPartitioning(id, n)
-    # still satisfies both downstream aggregations' distribution
-    n_parts = max(df.sparkSession.sparkContext.defaultParallelism * 2, 8)
+    # pinned count (see session.partition_width) ahead of the 30×-fanout
+    # explode + per-word work; HashPartitioning(id, n) still satisfies
+    # both downstream aggregations' distribution
     words = (
         df.select(F.col(id_col), F.col(text_col), *[F.col(c) for c in carry])
-        .repartition(n_parts, F.col(id_col))
+        .repartition(partition_width(df.sparkSession), F.col(id_col))
         .select(
             F.col(id_col),
             F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("_w"),
@@ -324,13 +322,9 @@ def _bm25_score(
 
 
 def _bm25_words(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    # pinned partition count: see web_quality_signals — an unpinned keyed
-    # repartition gets AQE-coalesced to the compact-row bytes and the
-    # explode downstream then runs near-serial
-    n_parts = max(df.sparkSession.sparkContext.defaultParallelism * 2, 8)
     return (
         df.select(F.col(id_col), F.col(text_col))
-        .repartition(n_parts, F.col(id_col))
+        .repartition(partition_width(df.sparkSession), F.col(id_col))
         .select(
             F.col(id_col),
             F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("_w"),
@@ -529,9 +523,7 @@ def ngram_lm_train(
     scores (vocab-bounded), so the scoring joins below broadcast or
     shuffle as AQE decides — no forced broadcast (the standing policy).
     """
-    from mistral_ocr_spark.operators.dedup import ensure_min_parallelism
-
-    corpus = ensure_min_parallelism(corpus)
+    corpus = spread(corpus)
     # explode_outer everywhere a named computed array is exploded: the
     # InferFiltersFromGenerate rule would otherwise re-evaluate the split
     # kernel inside an inferred size()>0 filter (the r4 lesson); the
@@ -612,9 +604,7 @@ def lm_perplexity(
     they fit), one groupBy(id) — no window, no collect, no Python.
     """
     spark = docs.sparkSession
-    from mistral_ocr_spark.operators.dedup import ensure_min_parallelism
-
-    docs = ensure_min_parallelism(docs)
+    docs = spread(docs)
     uni = spark.read.parquet(f"{lm_dir}/unigrams")
     big = spark.read.parquet(f"{lm_dir}/bigrams")
     stats = spark.read.parquet(f"{lm_dir}/stats")

@@ -15,8 +15,8 @@ Scale design (100 TB / 10^12 rows):
   data, independent of partitioning/executor count → resume is exact on a
   1000-executor cluster too.
 - **salted repartition on url-host hash** defuses crawl-domain skew: hot
-  hosts (one host can be >30% of a crawl) are spread across
-  ``salt_buckets`` partitions while typical hosts stay co-located, which
+  hosts (one host can be >30% of a crawl) are split over a salt of 8
+  cells per partition while typical hosts stay co-located, which
   keeps any later per-host aggregation cheap and bounds task stragglers.
 - extraction itself is map-only (no shuffle besides the explicit
   repartition); lineage aggregation reads back the just-written parquet
@@ -38,24 +38,20 @@ from mistral_ocr_spark.operators.extract import extract_pages
 from mistral_ocr_spark.sources import catalog
 
 
-def salted_repartition(
-    pages: DataFrame, num_partitions: int, salt_buckets: int | None = None
-) -> DataFrame:
+def salted_repartition(pages: DataFrame, num_partitions: int) -> DataFrame:
     """Repartition on (host-hash, salt) — SURVEY.md §4.2 point 1.
 
     Plain ``repartition(n, host)`` would put an entire hot host in one
-    task; adding ``pmod(xxhash64(url), salt_buckets)`` splits each host
-    across up to ``salt_buckets`` partitions while keeping the shuffle a
-    single exchange. Default salt fan-out is 4× the partition count so a
+    task; adding a salt of ``8 × num_partitions`` cells splits each host
+    across partitions while keeping the shuffle a single exchange, so a
     single pathological host (30%+ of a crawl) still spreads ~uniformly
-    over all partitions rather than landing on salt_buckets of them.
+    over all partitions rather than landing on a few.
     Measured on the hot-host fixture (12 partitions): 4× salt → max/mean
-    2.0 at an 80%-hot host; 8× → 1.6; 16× → 1.4. 8× is the default —
-    salt cells cost nothing downstream (extraction is per-row) and finer
-    cells smooth the partition-composition variance.
+    2.0 at an 80%-hot host; 8× → 1.6; 16× → 1.4. Salt cells cost nothing
+    downstream (extraction is per-row) and finer cells smooth the
+    partition-composition variance.
     """
-    if salt_buckets is None:
-        salt_buckets = 8 * num_partitions
+    salt_buckets = 8 * num_partitions
     host = F.parse_url(F.col("url"), F.lit("HOST"))
     # Salt from a DIFFERENT hash than the chunking hash: chunk membership
     # already conditions on xxhash64(url) % n_chunks, so reusing the same
@@ -167,7 +163,6 @@ def run(
     run_id: str = "run-0001",
     n_chunks: int = 4,
     num_partitions: int | None = None,
-    salt_buckets: int | None = None,
     max_chunks: int | None = None,
 ) -> dict:
     """Run (or resume) an extraction over ``pages`` into ``out_root``.
@@ -209,7 +204,7 @@ def run(
     elif pending:
         chunk_expr = F.pmod(F.xxhash64(F.col("url")), F.lit(n_chunks))
         todo = pages.filter(chunk_expr.isin(pending))
-        extracted = extract_pages(salted_repartition(todo, num_partitions, salt_buckets))
+        extracted = extract_pages(salted_repartition(todo, num_partitions))
         stats["docs"] = commit_chunks(spark, extracted, out_root, run_id, chunk_expr, pending)
         stats["chunks_done"] = len(pending)
         if done:  # earlier invocations committed part of this run

@@ -25,6 +25,7 @@ from mistral_ocr_spark.operators import multimodal as M
 from mistral_ocr_spark.operators import similarity as S
 from mistral_ocr_spark.operators import textstats as X
 from mistral_ocr_spark.operators.extract import extract_pages
+from mistral_ocr_spark.session import spread
 from mistral_ocr_spark.sources.fixtures import (
     ORACLE_MD_SQL,
     ORACLE_TEXT_SQL,
@@ -681,7 +682,7 @@ def _bpe_merged_count_sql(text_sql: str = "text") -> str:
 def token_counts(spark, sf_dir):
     # per-character interpreted aggregate (rhash) + BPE fold below are
     # pure map work — spread the 1-row-group scan first (physical only)
-    d = X.with_token_count(D.ensure_min_parallelism(_t(spark, sf_dir, "documents")))
+    d = X.with_token_count(spread(_t(spark, sf_dir, "documents")))
     n_pretokens, n_bpe = bpe_token_count_cols("text")
     norm = F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))
     rhash = F.aggregate(
