@@ -11,7 +11,6 @@ identical bytes per url (north rule).
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass
 
 from mistral_ocr_spark import EXTRACTOR_VERSION
@@ -24,8 +23,6 @@ from mistral_ocr_spark.extractor.pdf import (
     is_encrypted_pdf,
 )
 from mistral_ocr_spark.extractor.render import render
-
-_WS_RE = re.compile(r"\s+")
 
 
 @dataclass(frozen=True)
@@ -40,7 +37,7 @@ class ExtractResult:
 
 
 def _normalize(s: str) -> str:
-    return _WS_RE.sub(" ", s).strip()
+    return " ".join(s.split())
 
 
 def extract(html: bytes | None, fallback_text: str | None = None) -> ExtractResult:

@@ -39,9 +39,7 @@ def render(
     spans: list[tuple[int, int, str]] = []
     pos = 0
     for b in content_blocks:
-        t = b.text
-        if not t:
-            continue
+        t = b.text  # never empty: the builder emits only blocks with a word
         if text_parts:
             pos += 2  # the "\n\n" separator
         start = pos

@@ -46,25 +46,25 @@ ARROW_EXTRACTED_SCHEMA = pa.schema(
 
 
 def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """mapInArrow kernel: pages(url, warc_ts, html, text, lang) → extracted."""
+    """mapInArrow kernel: pages(url, warc_ts, html, text, lang) → extracted.
+
+    ``spans`` and ``images`` are built as flat child columns plus list
+    offsets, not as one Python object per span."""
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else -1
     for batch in batches:
         n = batch.num_rows
-        urls = batch.column("url")
-        htmls = batch.column("html")
-        fallbacks = batch.column("text")
-        texts: list[str | None] = [None] * n
-        mds: list[str | None] = [None] * n
-        spans: list[list[dict] | None] = [None] * n
-        images: list[list[str] | None] = [None] * n
-        errs: list[str | None] = [None] * n
-        encs: list[str | None] = [None] * n
-        nbytes: list[int] = [0] * n
+        texts: list[str | None] = []
+        mds: list[str | None] = []
+        errs: list[str | None] = []
+        encs: list[str | None] = []
+        nbytes: list[int] = []
+        spans: list[tuple[int, int, str]] = []
+        span_offsets = [0]
+        images: list[str] = []
+        image_offsets = [0]
 
-        for i in range(n):
-            raw = htmls[i].as_py()
-            fb = fallbacks[i].as_py()
+        for raw, fb in zip(batch.column("html").to_pylist(), batch.column("text").to_pylist()):
             try:
                 r = extract(raw, fb)
             except Exception:  # defensive: one bad row must not fail the
@@ -73,25 +73,38 @@ def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatc
                 # extract() is property-tested total, so this is insurance
                 # against pathological inputs only.
                 r = _FAILED
-            texts[i] = r.text
-            mds[i] = r.markdown
-            spans[i] = [
-                {"start": s, "end": e, "kind": k} for (s, e, k) in r.spans
-            ]
-            images[i] = list(r.images)
-            errs[i] = r.error_class
-            encs[i] = r.encoding
-            nbytes[i] = len(raw) if raw is not None else 0
+            texts.append(r.text)
+            mds.append(r.markdown)
+            errs.append(r.error_class)
+            encs.append(r.encoding)
+            nbytes.append(len(raw) if raw is not None else 0)
+            spans += r.spans
+            span_offsets.append(len(spans))
+            images += r.images
+            image_offsets.append(len(images))
 
+        starts, ends, kinds = zip(*spans) if spans else ((), (), ())
         yield pa.RecordBatch.from_arrays(
             [
-                urls,
+                batch.column("url"),
                 batch.column("warc_ts"),
                 batch.column("lang"),
                 pa.array(texts, pa.string()),
                 pa.array(mds, pa.string()),
-                pa.array(spans, pa.list_(_ARROW_SPAN)),
-                pa.array(images, pa.list_(pa.string())),
+                pa.ListArray.from_arrays(
+                    pa.array(span_offsets, pa.int32()),
+                    pa.StructArray.from_arrays(
+                        [
+                            pa.array(starts, pa.int64()),
+                            pa.array(ends, pa.int64()),
+                            pa.array(kinds, pa.string()),
+                        ],
+                        fields=list(_ARROW_SPAN),
+                    ),
+                ),
+                pa.ListArray.from_arrays(
+                    pa.array(image_offsets, pa.int32()), pa.array(images, pa.string())
+                ),
                 pa.array(errs, pa.string()),
                 pa.array(encs, pa.string()),
                 pa.array([EXTRACTOR_VERSION] * n, pa.string()),

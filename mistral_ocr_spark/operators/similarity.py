@@ -275,8 +275,8 @@ def signature_rerank_topk(
     and needed an eager ``count()`` job per query (VERDICT r2 #2).
 
     ``max_hamming`` defaults to ``n_planes//4`` — the measured
-    clustered-corpus setting (VERDICT r3 #4, scripts/
-    multiprobe_threshold_sweep.py, table in BENCH.md): hyperplane bits
+    clustered-corpus setting (VERDICT r3 #4; BENCH.md "Multi-probe
+    threshold sweep on a planted-cluster fixture"): hyperplane bits
     disagree with probability θ/π, so a genuine near-dup at cos 0.92-0.99
     sits at expected hamming ≈ 0.13·n_planes ± 4σ ≈ n_planes/4, while
     unrelated pairs concentrate at n_planes/2. On the planted-twin fixture

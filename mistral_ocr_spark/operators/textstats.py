@@ -149,8 +149,9 @@ def web_quality_signals(
     # the (doc, word) count and the per-doc rollup (doc ⊆ {doc, word}), so
     # neither aggregation reshuffles, and what crosses the wire is the
     # document bytes once, not 30×-fanout exploded word rows twice.
-    # Measured on a 1M-doc corpus (scripts/scaling_shuffle.py): 2.2× the
-    # throughput of the exploded-shuffle version and 4→16-core efficiency
+    # Measured on a 1M-doc corpus (BENCH.md "Shuffle-heavy scaling
+    # sample"): 2.2× the throughput of the exploded-shuffle version and
+    # 4→16-core efficiency
     # 0.69-0.78 → 0.84-0.92. (A still-earlier formulation joined a separate
     # top-word aggregate onto per-row text signals: 3 exchanges + two SMJ
     # sorts, ~2× slower again.) Skew note: partitioning is by doc id —

@@ -99,6 +99,124 @@ def test_determinism_repeat():
         assert extract(FULL_PAGE) == extract(FULL_PAGE)
 
 
+# sha256 over repr(extract(...)) of the pages below, as EXTRACTOR_VERSION
+# 1.6.0 emits them (the version is part of each repr). The block builder,
+# Block.text, classify and render are shared by both tokenizer engines and
+# by oracle.extract_reference, so the dual-engine test and the oracle gate
+# cannot see a regression there; this digest can. A deliberate output
+# change bumps EXTRACTOR_VERSION and this digest together.
+_EXTRACT_DIGEST = "644e63ae19553c0a9650bcf84493f7c1b16d8d4137cdfd717be6fe9f42e93d2f"
+
+
+def test_extract_digest_pinned():
+    import hashlib
+    import zlib
+
+    import pyarrow as pa
+
+    from mistral_ocr_spark.sources import fixtures
+
+    h = hashlib.sha256()
+    # the fixture corpus, edge rows included
+    for i in range(4000):
+        _url, html, text, _lang = fixtures._make_page(i)
+        h.update(repr(extract(html, text)).encode())
+    # crawl-size pages (~13 KB), as the benchmark generates them
+    ids = pa.record_batch([pa.array(range(300), pa.int64())], ["id"])
+    for b in fixtures._gen_batches(iter([ids]), paras_mult=40):
+        for html, text in zip(b.column("html").to_pylist(), b.column("text").to_pylist()):
+            h.update(repr(extract(html, text)).encode())
+    # a FlateDecode bomb: one stream inflating to 1 MiB of zeros
+    bomb = (
+        b"%PDF-1.5\n4 0 obj\n<< /Filter /FlateDecode >>\nstream\n"
+        + zlib.compress(bytes(1 << 20), 9)
+        + b"\nendstream\nendobj\ntrailer\n<< /Root 4 0 R >>\n%%EOF"
+    )
+    h.update(repr(extract(bomb)).encode())
+    assert h.hexdigest() == _EXTRACT_DIGEST
+
+
+def test_extract_batches_equals_row_by_row(monkeypatch):
+    """The kernel's columnar spans/images equal the per-row dict build,
+    over HTML, PDF, NULL, empty, no-content and raising rows, and over a
+    batch with no spans at all."""
+    import pyarrow as pa
+
+    from mistral_ocr_spark import EXTRACTOR_VERSION
+    from mistral_ocr_spark.operators import extract as op
+    from mistral_ocr_spark.sources.fixtures import _make_page
+
+    def flaky(html, fallback=None):
+        if html == b"<raise>":
+            raise RuntimeError("boom")
+        return extract(html, fallback)
+
+    monkeypatch.setattr(op, "extract", flaky)
+
+    def pages(rows):
+        return pa.record_batch(
+            [
+                pa.array([f"https://k.example.com/{i}" for i in range(len(rows))], pa.string()),
+                pa.array([None] * len(rows), pa.timestamp("us")),
+                pa.array([h for h, _t in rows], pa.binary()),
+                pa.array([t for _h, t in rows], pa.string()),
+                pa.array(["en"] * len(rows), pa.string()),
+            ],
+            names=["url", "warc_ts", "html", "text", "lang"],
+        )
+
+    def row_by_row(batch):
+        rs = []
+        for h, t in zip(batch.column("html").to_pylist(), batch.column("text").to_pylist()):
+            try:
+                rs.append(flaky(h, t))
+            except RuntimeError:
+                rs.append(op._FAILED)
+        return pa.RecordBatch.from_arrays(
+            [
+                batch.column("url"),
+                batch.column("warc_ts"),
+                batch.column("lang"),
+                pa.array([r.text for r in rs], pa.string()),
+                pa.array([r.markdown for r in rs], pa.string()),
+                pa.array(
+                    [[{"start": s, "end": e, "kind": k} for s, e, k in r.spans] for r in rs],
+                    pa.list_(op._ARROW_SPAN),
+                ),
+                pa.array([list(r.images) for r in rs], pa.list_(pa.string())),
+                pa.array([r.error_class for r in rs], pa.string()),
+                pa.array([r.encoding for r in rs], pa.string()),
+                pa.array([EXTRACTOR_VERSION] * len(rs), pa.string()),
+                pa.array(
+                    [len(h) if h is not None else 0 for h in batch.column("html").to_pylist()],
+                    pa.int64(),
+                ),
+                pa.array([-1] * len(rs), pa.int32()),
+            ],
+            schema=op.ARROW_EXTRACTED_SCHEMA,
+        )
+
+    # fixture rows 0-119 hold HTML with and without images, NULL html with
+    # fallback text, no_content pages and PDFs
+    mixed = [_make_page(i)[1:3] for i in range(120)] + [
+        (b"", None),
+        (b" \n ", None),
+        (None, None),
+        (None, "  "),
+        (b"%PDF-1.7\nbinary junk only", None),
+        (b"<raise>", None),
+        (FULL_PAGE, None),
+    ]
+    no_spans = [(b"", None), (None, None), (b"<raise>", None)]
+    batches = [pages(mixed), pages(no_spans), pages([])]
+    got = list(op.extract_batches(iter(batches)))
+    assert len(got) == len(batches)
+    errors = got[0].column("error_class").to_pylist()
+    assert {"empty", "no_content", "unsupported_pdf", "extractor_error", None} <= set(errors)
+    for out, batch in zip(got, batches):
+        assert out.equals(row_by_row(batch))
+
+
 def test_pdf_text_objects():
     pdf = (
         b"%PDF-1.4\n1 0 obj\nBT /F1 12 Tf (Hello \\(PDF\\) world) Tj ET\n"

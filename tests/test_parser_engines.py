@@ -7,7 +7,15 @@ from __future__ import annotations
 import pytest
 
 from mistral_ocr_spark.extractor.decode import decode_html
-from mistral_ocr_spark.extractor.parser import parse_blocks
+from mistral_ocr_spark.extractor.parser import (
+    _ACTIONS,
+    _ARTICLE_TAGS,
+    _BLOCK_TAGS,
+    _CHROME_TAGS,
+    _KIND,
+    _BlockBuilder,
+    parse_blocks,
+)
 from mistral_ocr_spark.sources.fixtures import _make_page
 
 
@@ -77,10 +85,43 @@ def test_engines_agree_on_corpus():
         "<table><thead><tr><th>h1</th></tr></thead><tbody><tr>"
         "<td colspan=2>body &amp; cell</td></tr></tbody>"
         "<tfoot><tr><td>foot</td></tr></tfoot></table>",
+        # HTML5: the self-closing flag is ignored on non-void elements, and
+        # an unterminated comment runs to the end of the document
+        "<ul><li/>hello world</ul>",
+        "<h2/>title text<p>body</p>",
+        "<nav/>menu text here",
+        "<script/>var x=1;</script><p>ok</p>",
+        "<p>x<!-- unterminated",
     ],
 )
 def test_engines_agree_on_adversarial(snippet):
     assert _sig(parse_blocks(snippet, "fast")) == _sig(parse_blocks(snippet, "stdlib"))
+
+
+def _context(b):
+    return (b.kind_stack[-1:], b.chrome_depth, b.article_depth)
+
+
+def test_context_tags_are_block_tags():
+    """The builder reads a block's context when it flushes it. That is
+    exact only while every tag that changes the context flushes first."""
+    assert _CHROME_TAGS | _ARTICLE_TAGS | _KIND.keys() <= _BLOCK_TAGS
+    for name, act in _ACTIONS.items():
+        tag = name.lstrip("/")
+        b = _BlockBuilder()
+        if name.startswith("/"):  # give the close tag something to close
+            b.start(tag, "x.png")
+            b.flush()
+            b.blocks.clear()
+        b.data("pending words")
+        before = _context(b)
+        if tag == "img":
+            act(b, "x.png")
+        else:
+            act(b)
+        if _context(b) != before:
+            assert not b.parts, name
+            assert [x.text for x in b.blocks] == ["pending words"], name
 
 
 def test_adversarial_corpus_matches_oracle_runner(spark, tmp_path):
