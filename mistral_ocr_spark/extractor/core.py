@@ -19,8 +19,9 @@ from mistral_ocr_spark.extractor.decode import decode_html
 from mistral_ocr_spark.extractor.parser import parse_document
 from mistral_ocr_spark.extractor.pdf import (
     PDF_MAGIC,
-    extract_pdf_text,
+    ResourceLimit,
     is_encrypted_pdf,
+    pdf_paragraphs,
 )
 from mistral_ocr_spark.extractor.render import render
 
@@ -30,7 +31,9 @@ class ExtractResult:
     text: str | None
     markdown: str | None
     spans: list[tuple[int, int, str]]
-    error_class: str | None  # empty | unsupported_pdf | encrypted_pdf | no_content | None
+    # empty | no_content | unsupported_pdf | encrypted_pdf | resource_limit
+    # | None; the Spark kernel adds extractor_error for a row that raised
+    error_class: str | None
     encoding: str | None
     images: tuple[str, ...] = ()  # non-chrome <img src> values, doc order
     extractor_version: str = EXTRACTOR_VERSION
@@ -40,8 +43,9 @@ def _normalize(s: str) -> str:
     return " ".join(s.split())
 
 
-def extract(html: bytes | None, fallback_text: str | None = None) -> ExtractResult:
-    """Extract main content from one page.
+def non_html_result(html: bytes | None, fallback_text: str | None = None) -> ExtractResult | None:
+    """The result of a page that is not HTML (NULL, blank or a PDF), or
+    None for an HTML page, which each tokenizer engine parses itself.
 
     ``fallback_text``: upstream pre-extracted text (the input table's
     ``text`` column) used only when ``html`` is NULL — the pipeline must
@@ -52,31 +56,38 @@ def extract(html: bytes | None, fallback_text: str | None = None) -> ExtractResu
             t = _normalize(fallback_text)
             return ExtractResult(t, t, [(0, len(t), "paragraph")], None, None)
         return ExtractResult(None, None, [], "empty", None)
-
     if not html.strip():
         return ExtractResult(None, None, [], "empty", None)
+    if html[:5] != PDF_MAGIC:
+        return None
+    if is_encrypted_pdf(html):
+        return ExtractResult(None, None, [], "encrypted_pdf", None)
+    try:
+        paras = pdf_paragraphs(html)
+    except ResourceLimit:
+        return ExtractResult(None, None, [], "resource_limit", None)
+    text_parts, spans, pos = [], [], 0
+    for p in paras or ():
+        t = _normalize(p)
+        if not t:
+            continue
+        if text_parts:
+            pos += 2
+        spans.append((pos, pos + len(t), "paragraph"))
+        pos += len(t)
+        text_parts.append(t)
+    if not text_parts:
+        return ExtractResult(None, None, [], "unsupported_pdf", None)
+    text = "\n\n".join(text_parts)
+    return ExtractResult(text, text, spans, None, "pdf")
 
-    if html[:5] == PDF_MAGIC:
-        if is_encrypted_pdf(html):
-            return ExtractResult(None, None, [], "encrypted_pdf", None)
-        paras = extract_pdf_text(html)
-        if paras is None:
-            return ExtractResult(None, None, [], "unsupported_pdf", None)
-        text_parts, spans, pos = [], [], 0
-        for p in paras:
-            t = _normalize(p)
-            if not t:
-                continue
-            if text_parts:
-                pos += 2
-            spans.append((pos, pos + len(t), "paragraph"))
-            pos += len(t)
-            text_parts.append(t)
-        if not text_parts:
-            return ExtractResult(None, None, [], "unsupported_pdf", None)
-        text = "\n\n".join(text_parts)
-        return ExtractResult(text, text, spans, None, "pdf")
 
+def extract(html: bytes | None, fallback_text: str | None = None) -> ExtractResult:
+    """Extract main content from one page (``non_html_result`` has the
+    NULL, blank and PDF cases)."""
+    result = non_html_result(html, fallback_text)
+    if result is not None:
+        return result
     decoded, encoding = decode_html(html)
     blocks, images = parse_document(decoded)
     content = [b for b in classify(blocks) if b.is_content]

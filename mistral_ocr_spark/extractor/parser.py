@@ -44,9 +44,11 @@ _BLOCK_TAGS = frozenset(
 # Content inside these is dropped entirely.
 _IGNORE_TAGS = frozenset("script style noscript svg template iframe".split())
 
-# Raw-text elements: the fast tokenizer skips straight to the close tag
-# (matches HTMLParser's CDATA handling of script/style).
+# Raw-text elements: both tokenizers skip straight to the close tag, which
+# HTML5 ends at "</script" (or "</style") followed by whitespace, "/" or ">"
+# ("</scriptfoo>" is still script text).
 _RAWTEXT_TAGS = ("script", "style")
+_RAWTEXT_END = {t: re.compile(rf"</{t}[\t\n\r\f />]", re.IGNORECASE) for t in _RAWTEXT_TAGS}
 
 # Chrome containers: structural boilerplate hint.
 _CHROME_TAGS = frozenset("nav header footer aside".split())
@@ -242,18 +244,22 @@ for _t in _IGNORE_TAGS:
 # fast engine: single-regex scan
 # ---------------------------------------------------------------------------
 
-# One token per match: comment / declaration / processing instr. / tag.
-# Attribute values may contain '>' inside quotes — the attr part consumes
-# quoted strings atomically before any unquoted byte.
+# One token per match: comment / declaration / processing instr. / bogus
+# comment / tag, as HTML5 tokenizes them. A comment ends only at "-->"; "</"
+# before a non-letter opens a bogus comment ("</>" alone is dropped, "</" at
+# EOF is text); a quote opens an attribute value only right after "=", and
+# may hold '>'. Each construct EOF cuts short runs to EOF, and a tag cut
+# short is dropped (group 3 is None).
 _TOKEN_RE = re.compile(
     r"""<(?:
-        !--.*?(?:-->|$)            # comment (unterminated: to EOF)
-      | !\[CDATA\[.*?(?:\]\]>|$)   # cdata
+        !--.*?(?:-->|\Z)           # comment (unterminated: to EOF)
+      | !\[CDATA\[.*?(?:\]\]>|\Z)   # cdata
       | ![^>]*>?                   # doctype/declaration
       | \?[^>]*>?                  # processing instruction
-      | (/?[a-zA-Z][a-zA-Z0-9:_-]*)   # 1: tag name, "/"-prefixed on an end tag
-        ((?:"[^"]*"|'[^']*'|[^"'>])*)  # 2: attributes (quote-aware)
-        >?
+      | /(?:>|[^a-zA-Z>][^>]*>?)    # bogus comment after "</"
+      | (/?[a-zA-Z][^\t\n\r\f />\x00]*)   # 1: tag name, "/"-prefixed on an end tag
+        ((?:[^>=]+|=\s*(?:"[^"]*(?:"|\Z)|'[^']*(?:'|\Z))?)*)  # 2: attributes
+        (>)?                       # 3: None when EOF ends the tag
     )""",
     re.DOTALL | re.VERBOSE,
 )
@@ -265,7 +271,6 @@ def _fast_tokenize(html_text: str, b: _BlockBuilder) -> None:
     find = _TOKEN_RE.search
     action = _ACTIONS.get
     parts = b.parts
-    lower_text = None  # lazily lowered copy for rawtext close-tag search
     while pos < n:
         m = find(html_text, pos)
         start, end = m.span() if m is not None else (n, n)
@@ -285,6 +290,8 @@ def _fast_tokenize(html_text: str, b: _BlockBuilder) -> None:
         name = m.group(1)
         if name is None:  # comment/doctype/PI — no event
             continue
+        if m.group(3) is None:  # a tag EOF cut short: dropped
+            break
         tag = name.lower()
         act = action(tag)
         if act is None:
@@ -296,12 +303,10 @@ def _fast_tokenize(html_text: str, b: _BlockBuilder) -> None:
             # Raw-text element: skip to its close tag unparsed
             # (HTMLParser CDATA-mode equivalent).
             act(b)
-            if lower_text is None:
-                lower_text = html_text.lower()
-            close = lower_text.find("</" + tag, pos)
-            if close == -1:
+            close = _RAWTEXT_END[tag].search(html_text, pos)
+            if close is None:
                 break
-            gt = html_text.find(">", close)
+            gt = html_text.find(">", close.start())
             _close_ignore(b)
             pos = n if gt == -1 else gt + 1
         else:
@@ -311,6 +316,11 @@ def _fast_tokenize(html_text: str, b: _BlockBuilder) -> None:
 # ---------------------------------------------------------------------------
 # stdlib engine: html.parser cross-check
 # ---------------------------------------------------------------------------
+
+
+# What HTMLParser leaves unparsed at EOF when it is markup it could not
+# finish: a tag, comment, declaration or bogus comment (not "<" or "</").
+_UNFINISHED_RE = re.compile(r"<(?:[a-zA-Z!?]|/.)", re.DOTALL)
 
 
 class _StdlibParser(HTMLParser):
@@ -337,13 +347,41 @@ class _StdlibParser(HTMLParser):
     def handle_endtag(self, tag: str) -> None:
         self._b.end(tag)
 
+    # HTML5 tokenization where HTMLParser departs from it, as the fast
+    # engine tokenizes (see _TOKEN_RE).
+
+    def set_cdata_mode(self, elem: str) -> None:
+        super().set_cdata_mode(elem)
+        self.interesting = _RAWTEXT_END[self.cdata_elem]
+
+    def parse_endtag(self, i: int) -> int:
+        rawdata = self.rawdata
+        if self.cdata_elem is not None:  # at the raw-text end _RAWTEXT_END found
+            gt = rawdata.find(">", i)
+            if gt < 0:
+                return -1
+            self.handle_endtag(self.cdata_elem)
+            self.clear_cdata_mode()
+            return gt + 1
+        c = rawdata[i + 2 : i + 3]
+        if c == ">":
+            return i + 3
+        if c and not (c.isascii() and c.isalpha()):
+            return self.parse_bogus_comment(i)
+        return super().parse_endtag(i)
+
+    def parse_comment(self, i: int, report: bool = True) -> int:
+        end = self.rawdata.find("-->", i + 4)
+        return -1 if end < 0 else end + 3
+
     def handle_data(self, data: str) -> None:
         self._b.data(data)
 
     def close(self) -> None:
-        # HTML5 runs an unterminated comment to the end of the document;
-        # HTMLParser would hand it out as text.
-        if self.rawdata.startswith("<!--"):
+        # HTML5 runs an unterminated tag, comment or bogus comment to the
+        # end of the document and drops it; HTMLParser would hand it out
+        # as text. A lone "<" or "</" stays text.
+        if _UNFINISHED_RE.match(self.rawdata):
             self.rawdata = ""
         super().close()
 

@@ -50,6 +50,13 @@ of scope (documented, not silently wrong): nested unescaped parens in
 literal strings, /DecodeParms predictors on CONTENT streams (image
 territory), CID fonts WITHOUT a ToUnicode CMap (bytes decode latin-1),
 sub-byte TIFF predictor components.
+
+Decode budget: every decode inside one call draws on one budget of
+``MAX_DECODED_BYTES``. Flate, LZW and RunLength stop as their output
+passes it, the other filters and the predictors count their output, and
+each expanded ToUnicode entry costs what it holds in memory. A document
+that overruns it raises ``ResourceLimit``, surfaced as
+``error_class='resource_limit'``.
 """
 
 from __future__ import annotations
@@ -58,6 +65,33 @@ import re
 import zlib
 
 PDF_MAGIC = b"%PDF-"
+
+# What one document may decode, summed over every stream, filter stage,
+# predictor and ToUnicode map of both passes (their buffers are alive
+# together). ARCHITECTURE.md "PDF decode budget" has the trade.
+MAX_DECODED_BYTES = 8 << 20
+
+# Memory one expanded ToUnicode entry holds (int key, str value, dict
+# slot): ~9 MB for a 65,536-entry bfrange.
+_CMAP_ENTRY_BYTES = 140
+
+
+class ResourceLimit(Exception):
+    """A document's decodes overran ``MAX_DECODED_BYTES``."""
+
+
+class DecodeBudget:
+    """The bytes one ``pdf_paragraphs`` call may still decode."""
+
+    __slots__ = ("left",)
+
+    def __init__(self) -> None:
+        self.left = MAX_DECODED_BYTES
+
+    def charge(self, n: int) -> None:
+        self.left -= n
+        if self.left < 0:
+            raise ResourceLimit
 
 _ENCRYPT_RE = re.compile(rb"/Encrypt\s+\d+\s+\d+\s+R|/Encrypt\s*<<")
 
@@ -160,10 +194,20 @@ def _zlib_header_plausible(data: bytes) -> bool:
     )
 
 
-def _flate(data: bytes) -> bytes | None:
+def _inflate(d, data: bytes, limit: int) -> bytes:
+    """``d.decompress(data)`` stopped one byte past ``limit``, so a bomb
+    never inflates further than that: more than ``limit`` bytes of output
+    raises ResourceLimit."""
+    out = d.decompress(data, limit + 1)
+    if len(out) > limit:
+        raise ResourceLimit
+    return out
+
+
+def _flate(data: bytes, limit: int = MAX_DECODED_BYTES) -> bytes | None:
     d = zlib.decompressobj(zlib.MAX_WBITS)
     try:
-        out = d.decompress(data)
+        out = _inflate(d, data, limit)
         # accept only a COMPLETE stream: zlib validates the adler32
         # checksum exactly when eof is reached, so a corrupt body that
         # happens to form decodable huffman codes (observed: garbage
@@ -185,20 +229,24 @@ def _flate(data: bytes) -> bytes | None:
         return None
     d = zlib.decompressobj(-zlib.MAX_WBITS)
     try:
-        out = d.decompress(data)
+        out = _inflate(d, data, limit)
     except zlib.error:
         return None
     return out if d.eof else None
 
 
-def _ascii_hex_decode(data: bytes) -> bytes | None:
+# The ASCII filters take the stage limit like the others, but their output
+# is never longer than their input, so they have none to enforce.
+
+
+def _ascii_hex_decode(data: bytes, _limit: int) -> bytes | None:
     try:
         return _hex_core(data.split(b">")[0])  # '>' is the filter's EOD
     except (ValueError, UnicodeDecodeError):
         return None
 
 
-def _ascii85_decode(data: bytes) -> bytes | None:
+def _ascii85_decode(data: bytes, _limit: int) -> bytes | None:
     import base64
 
     cleaned = re.sub(rb"\s", b"", data)
@@ -212,7 +260,7 @@ def _ascii85_decode(data: bytes) -> bytes | None:
         return None
 
 
-def _run_length_decode(data: bytes) -> bytes | None:
+def _run_length_decode(data: bytes, limit: int = MAX_DECODED_BYTES) -> bytes | None:
     out = bytearray()
     i = 0
     while i < len(data):
@@ -230,10 +278,12 @@ def _run_length_decode(data: bytes) -> bytes | None:
                 return None
             out += data[i + 1 : i + 2] * (257 - n)
             i += 2
+        if len(out) > limit:
+            raise ResourceLimit
     return bytes(out)  # EOD missing but data exhausted cleanly
 
 
-def _lzw_decode(data: bytes, early: int = 1) -> bytes | None:
+def _lzw_decode(data: bytes, limit: int = MAX_DECODED_BYTES, early: int = 1) -> bytes | None:
     """PDF/TIFF-variant LZW (§7.4.4): 9→12-bit codes MSB-first, clear code
     256, EOD 257, table restart on clear, and the ``EarlyChange`` default of
     widening one code early. Malformed code sequences return None
@@ -287,6 +337,8 @@ def _lzw_decode(data: bytes, early: int = 1) -> bytes | None:
                     next_code += 1
                     if next_code + early >= (1 << width) and width < 12:
                         width += 1
+            if len(out) > limit:
+                raise ResourceLimit
             prev = entry
     return bytes(out)  # EOD missing but stream exhausted cleanly
 
@@ -305,20 +357,22 @@ _FILTER_FNS: dict[bytes, object] = {
 }
 
 
-def _apply_filters(data: bytes, names: list[bytes]) -> bytes | None:
-    """Run the declared decode cascade; None when any stage is unsupported
-    (DCTDecode images, JBIG2, crypt filters) or corrupt."""
+def _apply_filters(data: bytes, names: list[bytes], budget: DecodeBudget) -> bytes | None:
+    """Run the declared decode cascade, each stage's output charged to
+    ``budget``; None when any stage is unsupported (DCTDecode images,
+    JBIG2, crypt filters) or corrupt."""
     for nm in names:
         fn = _FILTER_FNS.get(nm)
         if fn is None:
             return None
-        data = fn(data)
+        data = fn(data, budget.left)
         if data is None:
             return None
+        budget.charge(len(data))
     return data
 
 
-def _inflate_streams(raw: bytes) -> bytes:
+def _inflate_streams(raw: bytes, budget: DecodeBudget) -> bytes:
     """Append DECODED content streams so BT/ET extraction sees encoded text
     objects too: zlib-sniffed Flate payloads (the standard filter) plus any
     stream whose enclosing object declares a supported /Filter cascade
@@ -333,7 +387,8 @@ def _inflate_streams(raw: bytes) -> bytes:
         if body[:1] == b"\x78":  # zlib magic (0x78 = deflate, 32K window)
             try:
                 # decompressobj tolerates trailing \r\n before `endstream`
-                decoded.append(zlib.decompressobj().decompress(body))
+                decoded.append(_inflate(zlib.decompressobj(), body, budget.left))
+                budget.charge(len(decoded[-1]))
                 blank_spans.append(m.span(1))
                 continue
             except zlib.error:
@@ -343,7 +398,7 @@ def _inflate_streams(raw: bytes) -> bytes:
         obj_start = raw.rfind(b"obj", 0, m.start())
         names = _declared_filters(raw[max(obj_start, 0) : m.start()])
         if names:  # zlib-sniffed streams never reach here (continue above)
-            d = _apply_filters(body, names)
+            d = _apply_filters(body, names, budget)
             if d:
                 decoded.append(d)
             # an ENCODED body is noise to the BT/ET scan whether or not we
@@ -359,8 +414,7 @@ def _inflate_streams(raw: bytes) -> bytes:
         parts.append(raw[pos:s])
         pos = e
     parts.append(raw[pos:])
-    scanned = b"".join(parts)
-    return scanned + b"\n" + b"\n".join(decoded) if decoded else scanned
+    return b"\n".join([b"".join(parts), *decoded])
 
 
 # --- font decoding: ToUnicode CMaps --------------------------------------
@@ -386,13 +440,16 @@ def _u16(hx: bytes) -> str:
         return "�"
 
 
-def parse_tounicode(data: bytes) -> FontMap:
+def parse_tounicode(data: bytes, budget: DecodeBudget) -> FontMap:
     """Parse a ToUnicode CMap stream: code width from the codespace range,
     bfchar pairs, and bfrange entries in both destination forms (single
     incrementing target — the increment applies to the LAST UTF-16 code
-    unit per §9.10.3 — or an explicit target array)."""
+    unit per §9.10.3 — or an explicit target array). Each entry is charged
+    to ``budget`` before it is built; codes at or above ``256**width`` are
+    skipped, because ``_decode_string`` never looks them up."""
     m = _CSP_RE.search(data)
     width = len(m.group(1)) // 2 if m else 1
+    top = 256**width - 1
     cmap: dict[int, str] = {}
     for section in _BFRANGE_RE.finditer(data):
         for rm in _RANGE_RE.finditer(section.group(1)):
@@ -402,15 +459,23 @@ def parse_tounicode(data: bytes) -> FontMap:
                 continue
             if dst[:1] == b"<":
                 base = _u16(dst[1:-1])
-                for i in range(hi - lo + 1):
+                n = min(hi, top) - lo + 1
+                budget.charge(max(n, 0) * _CMAP_ENTRY_BYTES)
+                for i in range(n):
                     cmap[lo + i] = base[:-1] + chr(ord(base[-1]) + i) if base else ""
             else:
                 targets = re.findall(rb"<([0-9A-Fa-f]*)>", dst)
-                for i in range(min(hi - lo + 1, len(targets))):
+                n = min(hi - lo + 1, len(targets), top - lo + 1)
+                budget.charge(max(n, 0) * _CMAP_ENTRY_BYTES)
+                for i in range(n):
                     cmap[lo + i] = _u16(targets[i])
     for section in _BFCHAR_RE.finditer(data):
-        for cm in _HEXPAIR_RE.finditer(section.group(1)):
-            cmap[int(cm.group(1), 16)] = _u16(cm.group(2))
+        pairs = _HEXPAIR_RE.findall(section.group(1))
+        budget.charge(len(pairs) * _CMAP_ENTRY_BYTES)
+        for hx, dst in pairs:
+            code = int(hx, 16)
+            if code <= top:
+                cmap[code] = _u16(dst)
     return (width, cmap)
 
 
@@ -520,13 +585,14 @@ _OBJ_RE = re.compile(rb"(\d+)\s+\d+\s+obj\b(.*?)endobj", re.DOTALL)
 _ROOT_RE = re.compile(rb"/Root\s+(\d+)\s+\d+\s+R")
 
 
-def _stream_data(body: bytes) -> bytes | None:
+def _stream_data(body: bytes, budget: DecodeBudget) -> bytes | None:
     """The decoded stream payload of one object body: the declared /Filter
     cascade when the dict names one (Flate/ASCIIHex/ASCII85/RunLength/LZW,
     §7.4), else the zlib sniff, else the raw bytes. The EOL preceding
     ``endstream`` is a delimiter, not data (PDF 32000-1 §7.3.8), so exactly
     one trailing EOL is stripped from uncompressed payloads (the binary
-    filters are self-terminating and ignore it)."""
+    filters are self-terminating and ignore it). Decoded bytes are charged
+    to ``budget``."""
     m = _STREAM_RE.search(body)
     if not m:
         return None
@@ -547,10 +613,12 @@ def _stream_data(body: bytes) -> bytes | None:
     if exact_len:
         data = data[: int(lm.group(1))]
     if names:
-        return _apply_filters(data, names)
+        return _apply_filters(data, names, budget)
     if data[:1] == b"\x78":  # zlib magic
         try:
-            return zlib.decompressobj().decompress(data)
+            out = _inflate(zlib.decompressobj(), data, budget.left)
+            budget.charge(len(out))
+            return out
         except zlib.error:
             # an unfiltered payload that merely starts with 0x78 ('x', or
             # an xref-stream field byte): keep it as raw data
@@ -568,10 +636,10 @@ def _dict_int(body: bytes, key: bytes) -> int | None:
     return int(m.group(1)) if m else None
 
 
-def _expand_objstm(body: bytes) -> list[tuple[int, bytes]] | None:
+def _expand_objstm(body: bytes, budget: DecodeBudget) -> list[tuple[int, bytes]] | None:
     """The (objnum, body) list packed in one /ObjStm object, in stream
     order, or None when the header doesn't parse."""
-    data = _stream_data(body)
+    data = _stream_data(body, budget)
     n, first = _dict_int(body, rb"/N"), _dict_int(body, rb"/First")
     if data is None or not n or first is None:
         return None
@@ -601,7 +669,7 @@ def _obj_at_offset(raw: bytes, off: int, num: int) -> bytes | None:
 
 
 def _object_index(
-    raw: bytes, xref_entries: dict[int, tuple[int, int, int]] | None = None
+    raw: bytes, xref_entries: dict[int, tuple[int, int, int]], budget: DecodeBudget
 ) -> dict[int, bytes]:
     objs: dict[int, bytes] = {}
     for m in _OBJ_RE.finditer(raw):
@@ -611,7 +679,7 @@ def _object_index(
     # every container (r5 review: extraction is the per-document hot path)
     expanded: dict[int, list[tuple[int, bytes]] | None] = {}
     for num, body in [(n, b) for n, b in objs.items() if b"/ObjStm" in b]:
-        lst = _expand_objstm(body)
+        lst = _expand_objstm(body, budget)
         expanded[num] = lst
         for onum, obody in lst or []:
             objs.setdefault(onum, obody)
@@ -638,7 +706,9 @@ def _object_index(
                 snum = ent[1]
                 if snum not in expanded:
                     sbody = objs.get(snum)
-                    expanded[snum] = _expand_objstm(sbody) if sbody is not None else None
+                    expanded[snum] = (
+                        _expand_objstm(sbody, budget) if sbody is not None else None
+                    )
                 lst = expanded[snum]
                 if lst is not None and 0 <= ent[2] < len(lst) and lst[ent[2]][0] == num:
                     objs[num] = lst[ent[2]][1]
@@ -722,7 +792,7 @@ def _int_array(body: bytes, key: bytes) -> list[int] | None:
     return [int(x) for x in re.findall(rb"-?\d+", m.group(1))] if m else None
 
 
-def _xref_stream_entries(body: bytes) -> dict | None:
+def _xref_stream_entries(body: bytes, budget: DecodeBudget) -> dict | None:
     """Decode one /Type /XRef stream object body → its section dict:
     ``{"entries": {objnum: (type, f2, f3)}, "root": int|None,
     "prev": int|None}``. The W array gives the three field widths in
@@ -730,7 +800,7 @@ def _xref_stream_entries(body: bytes) -> dict | None:
     gives (start, count) subsection pairs, defaulting to [0, /Size]."""
     if re.search(rb"/Type\s*/XRef\b", body) is None:
         return None
-    data = _stream_data(body)
+    data = _stream_data(body, budget)
     if data is None:
         return None
     parms = _value_dict(body, rb"/DecodeParms", {}) or _value_dict(body, rb"/DP", {})
@@ -745,6 +815,7 @@ def _xref_stream_entries(body: bytes) -> dict | None:
             data = _tiff_unpredict(data, cols, colors, bpc)
         if data is None:
             return None
+        budget.charge(len(data))
     w = _int_array(body, rb"/W")
     size = _dict_int(body, rb"/Size")
     if not w or len(w) < 3 or any(x < 0 for x in w) or sum(w) == 0:
@@ -817,7 +888,7 @@ def _classic_xref_section(raw: bytes, off: int) -> dict | None:
     }
 
 
-def _xref_section_at(raw: bytes, off: int) -> dict | None:
+def _xref_section_at(raw: bytes, off: int, budget: DecodeBudget) -> dict | None:
     if not 0 <= off < len(raw):
         return None
     while off < len(raw) and raw[off : off + 1] in b" \t\r\n":
@@ -827,10 +898,12 @@ def _xref_section_at(raw: bytes, off: int) -> dict | None:
     m = _OBJ_RE.match(raw, off)
     if m is None:
         return None
-    return _xref_stream_entries(m.group(2))
+    return _xref_stream_entries(m.group(2), budget)
 
 
-def _xref_chain(raw: bytes) -> tuple[int | None, dict[int, tuple[int, int, int]]]:
+def _xref_chain(
+    raw: bytes, budget: DecodeBudget
+) -> tuple[int | None, dict[int, tuple[int, int, int]]]:
     """Follow the LAST ``startxref`` through the /Prev chain (and hybrid
     /XRefStm side links), newest section first. First-wins merging makes
     the newest update's entries authoritative; the first /Root seen is the
@@ -850,13 +923,13 @@ def _xref_chain(raw: bytes) -> tuple[int | None, dict[int, tuple[int, int, int]]
         if off in seen:
             continue
         seen.add(off)
-        sec = _xref_section_at(raw, off)
+        sec = _xref_section_at(raw, off, budget)
         if sec is None:
             continue
         if sec["xrefstm"] is not None:
             # hybrid file: the side stream belongs to the SAME update and
             # takes precedence over this classic section — walk it first
-            stm = _xref_section_at(raw, sec["xrefstm"])
+            stm = _xref_section_at(raw, sec["xrefstm"], budget)
             if stm is not None:
                 if root is None:
                     root = stm["root"]
@@ -915,11 +988,18 @@ def _value_dict(body: bytes, key: bytes, objs: dict[int, bytes]) -> bytes | None
     return objs.get(int(m.group(1).split()[0]))
 
 
-def _page_fonts(page: bytes, objs: dict[int, bytes]) -> dict[bytes, FontMap]:
+def _page_fonts(
+    page: bytes,
+    objs: dict[int, bytes],
+    cmaps: dict[int, FontMap | None],
+    budget: DecodeBudget,
+) -> dict[bytes, FontMap]:
     """Resource-name → parsed ToUnicode map for one page. /Resources is
     inline or a reference, and inherits up the /Parent chain (PDF 32000-1
     §7.7.3.4 inheritable attributes); fonts without a /ToUnicode stream are
-    skipped (their strings keep the latin-1 policy)."""
+    skipped (their strings keep the latin-1 policy). ``cmaps`` holds the
+    maps already parsed, by ToUnicode object number, so pages that share a
+    font share one map and pay for it once."""
     res = None
     node, depth = page, 0
     while node is not None and depth < 8:
@@ -942,13 +1022,17 @@ def _page_fonts(page: bytes, objs: dict[int, bytes]) -> dict[bytes, FontMap]:
         tu = _ref(fobj, rb"/ToUnicode")
         if tu is None or tu not in objs:
             continue
-        data = _stream_data(objs[tu])
-        if data is not None:
-            fonts[fm.group(1)] = parse_tounicode(data)
+        if tu not in cmaps:
+            data = _stream_data(objs[tu], budget)
+            cmaps[tu] = parse_tounicode(data, budget) if data is not None else None
+        if cmaps[tu] is not None:
+            fonts[fm.group(1)] = cmaps[tu]
     return fonts
 
 
-def _page_contents_in_order(raw: bytes) -> list[tuple[bytes, dict[bytes, FontMap]]] | None:
+def _page_contents_in_order(
+    raw: bytes, budget: DecodeBudget
+) -> list[tuple[bytes, dict[bytes, FontMap]]] | None:
     """Per-page (content bytes, font table) in PAGE-TREE order, or None when
     the document carries no resolvable catalog/page tree (minimal fixtures,
     damaged files) — the caller then falls back to byte-order scanning."""
@@ -956,14 +1040,14 @@ def _page_contents_in_order(raw: bytes) -> list[tuple[bytes, dict[bytes, FontMap
     # CURRENT catalog and the current body of every object — authoritative
     # over raw-byte scanning for incrementally updated files; the /Root
     # byte scan stays as the fallback for files with broken/absent xrefs
-    xref_root, xref_entries = _xref_chain(raw)
+    xref_root, xref_entries = _xref_chain(raw, budget)
     root_num = xref_root
     if root_num is None:
         root_m = _ROOT_RE.search(raw)
         root_num = int(root_m.group(1)) if root_m else None
     if root_num is None:
         return None
-    objs = _object_index(raw, xref_entries)
+    objs = _object_index(raw, xref_entries, budget)
     catalog = objs.get(root_num)
     if catalog is None:
         return None
@@ -991,19 +1075,20 @@ def _page_contents_in_order(raw: bytes) -> list[tuple[bytes, dict[bytes, FontMap
     if not page_objs:
         return None
     out: list[tuple[bytes, dict[bytes, FontMap]]] = []
+    cmaps: dict[int, FontMap | None] = {}
     for page in page_objs:
         parts = [
-            _stream_data(objs[c]) or b""
+            _stream_data(objs[c], budget) or b""
             for c in _ref_array(page, rb"/Contents") or []
             if c in objs
         ]
         # a /Contents array is ONE logical stream split arbitrarily —
         # concatenation (newline-joined) restores it
-        out.append((b"\n".join(parts), _page_fonts(page, objs)))
+        out.append((b"\n".join(parts), _page_fonts(page, objs, cmaps, budget)))
     return out
 
 
-def extract_pdf_text(raw: bytes) -> list[str] | None:
+def pdf_paragraphs(raw: bytes) -> list[str] | None:
     """Extract text-object content; one output string per BT/ET object
     (lines within an object newline-joined).
 
@@ -1015,9 +1100,11 @@ def extract_pdf_text(raw: bytes) -> list[str] | None:
     Handles plain and filtered content streams (Flate/ASCIIHex/ASCII85/
     RunLength/LZW and cascades of them, §7.4) and PDF 1.5
     object streams. Returns None when no text objects are found
-    (→ unsupported_pdf).
+    (→ unsupported_pdf); raises ResourceLimit when the document's decodes
+    overrun ``MAX_DECODED_BYTES`` (→ resource_limit).
     """
-    pages = _page_contents_in_order(raw)
+    budget = DecodeBudget()
+    pages = _page_contents_in_order(raw, budget)
     if pages is not None:
         paragraphs = []
         for content, fonts in pages:
@@ -1027,10 +1114,19 @@ def extract_pdf_text(raw: bytes) -> list[str] | None:
                     paragraphs.append(text)
         if paragraphs:
             return paragraphs
-    raw = _inflate_streams(raw)
+    raw = _inflate_streams(raw, budget)
     paragraphs = []
     for obj in _BT_ET_RE.finditer(raw):
         text = _render_text_object(obj.group(1))
         if text:
             paragraphs.append(text)
     return paragraphs or None
+
+
+def extract_pdf_text(raw: bytes) -> list[str] | None:
+    """``pdf_paragraphs`` for callers that only want text: None when there
+    is none, a decode overrun included."""
+    try:
+        return pdf_paragraphs(raw)
+    except ResourceLimit:
+        return None

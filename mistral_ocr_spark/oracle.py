@@ -16,47 +16,19 @@ import pyarrow.parquet as pq
 
 from mistral_ocr_spark import EXTRACTOR_VERSION
 from mistral_ocr_spark.extractor.classify import classify
-from mistral_ocr_spark.extractor.core import ExtractResult, _normalize
+from mistral_ocr_spark.extractor.core import ExtractResult, non_html_result
 from mistral_ocr_spark.extractor.decode import decode_html
 from mistral_ocr_spark.extractor.parser import parse_document
-from mistral_ocr_spark.extractor.pdf import (
-    PDF_MAGIC,
-    extract_pdf_text,
-    is_encrypted_pdf,
-)
 from mistral_ocr_spark.extractor.render import render
 
 
 def extract_reference(html: bytes | None, fallback_text: str | None = None) -> ExtractResult:
     """Same contract as extractor.core.extract but using the stdlib
-    tokenizer engine — an independent implementation path for the oracle."""
-    if html is None:
-        if fallback_text is not None and fallback_text.strip():
-            t = _normalize(fallback_text)
-            return ExtractResult(t, t, [(0, len(t), "paragraph")], None, None)
-        return ExtractResult(None, None, [], "empty", None)
-    if not html.strip():
-        return ExtractResult(None, None, [], "empty", None)
-    if html[:5] == PDF_MAGIC:
-        if is_encrypted_pdf(html):
-            return ExtractResult(None, None, [], "encrypted_pdf", None)
-        paras = extract_pdf_text(html)
-        if paras is None:
-            return ExtractResult(None, None, [], "unsupported_pdf", None)
-        parts, spans, pos = [], [], 0
-        for p in paras:
-            t = _normalize(p)
-            if not t:
-                continue
-            if parts:
-                pos += 2
-            spans.append((pos, pos + len(t), "paragraph"))
-            pos += len(t)
-            parts.append(t)
-        if not parts:
-            return ExtractResult(None, None, [], "unsupported_pdf", None)
-        text = "\n\n".join(parts)
-        return ExtractResult(text, text, spans, None, "pdf")
+    tokenizer engine — an independent implementation path for the oracle.
+    Pages that are not HTML share ``core.non_html_result``."""
+    result = non_html_result(html, fallback_text)
+    if result is not None:
+        return result
     decoded, encoding = decode_html(html)
     blocks, images = parse_document(decoded, engine="stdlib")
     content = [b for b in classify(blocks) if b.is_content]

@@ -75,9 +75,11 @@ def scratch_path(scratch: str, name: str) -> str:
 
 def materialize(df: DataFrame, path: str) -> DataFrame:
     """Write ``df`` to ``path`` (one action) and return the lazy read-back.
-    Observations attached to ``df`` resolve on that write."""
+    Observations attached to ``df`` resolve on that write. The read-back
+    carries ``df``'s schema, so it runs no schema-inference job; Spark reads
+    file sources as nullable, so the schema is the one inference gives."""
     df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def remove(path: str) -> None:

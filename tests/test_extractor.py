@@ -100,12 +100,12 @@ def test_determinism_repeat():
 
 
 # sha256 over repr(extract(...)) of the pages below, as EXTRACTOR_VERSION
-# 1.6.0 emits them (the version is part of each repr). The block builder,
+# 1.7.0 emits them (the version is part of each repr). The block builder,
 # Block.text, classify and render are shared by both tokenizer engines and
 # by oracle.extract_reference, so the dual-engine test and the oracle gate
 # cannot see a regression there; this digest can. A deliberate output
 # change bumps EXTRACTOR_VERSION and this digest together.
-_EXTRACT_DIGEST = "644e63ae19553c0a9650bcf84493f7c1b16d8d4137cdfd717be6fe9f42e93d2f"
+_EXTRACT_DIGEST = "3203229cba97a340be68f6eb63ae1808f9f8092c01ddb806476e1d63e463de4b"
 
 
 def test_extract_digest_pinned():
@@ -906,10 +906,10 @@ def test_pdf_indirect_multidigit_length_not_truncated():
     assert r.text == "indirect length body"
 
     # uncompressed stream with an indirect ref: heuristic EOL-strip path
-    from mistral_ocr_spark.extractor.pdf import _stream_data
+    from mistral_ocr_spark.extractor.pdf import DecodeBudget, _stream_data
 
     body = b"<< /Length 42 0 R >>\nstream\nBT (abc) Tj ET\nendstream"
-    assert _stream_data(body) == b"BT (abc) Tj ET"
+    assert _stream_data(body, DecodeBudget()) == b"BT (abc) Tj ET"
 
 
 def test_pdf_type2_entries_use_current_objstm_not_stale_scan_body():

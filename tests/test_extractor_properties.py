@@ -103,10 +103,10 @@ def test_tounicode_decode_matches_reference(spec, raw_codes):
     """parse_tounicode + _decode_string must agree with a plain Python dict
     interpretation of the same CMap on arbitrary code sequences, including
     the unmapped-code fallbacks."""
-    from mistral_ocr_spark.extractor.pdf import _decode_string, parse_tounicode
+    from mistral_ocr_spark.extractor.pdf import DecodeBudget, _decode_string, parse_tounicode
 
     width, mapping, cmap = spec
-    parsed = parse_tounicode(cmap)
+    parsed = parse_tounicode(cmap, DecodeBudget())
     assert parsed[0] == width
     codes = [c & ((1 << (8 * width)) - 1) for c in raw_codes]
     raw = b"".join(c.to_bytes(width, "big") for c in codes)
@@ -126,9 +126,9 @@ def test_tounicode_decode_matches_reference(spec, raw_codes):
 def test_tounicode_parser_total_on_garbage(junk):
     """Arbitrary bytes as a CMap stream must never raise — damaged PDFs are
     routine in crawl data; the parser yields a (width, partial-map) pair."""
-    from mistral_ocr_spark.extractor.pdf import parse_tounicode
+    from mistral_ocr_spark.extractor.pdf import DecodeBudget, parse_tounicode
 
-    width, cmap = parse_tounicode(junk)
+    width, cmap = parse_tounicode(junk, DecodeBudget())
     assert width in (1, 2) or width >= 0
     assert isinstance(cmap, dict)
 
@@ -156,7 +156,7 @@ def test_xref_stream_w_widths_roundtrip(w1, w2, w3, start, fields):
     """Encode arbitrary xref entries at arbitrary W widths, decode through
     _xref_stream_entries, and get the same (type, f2, f3) triplets back —
     with the spec defaults applied where a width is 0 (type→1, f3→0)."""
-    from mistral_ocr_spark.extractor.pdf import _xref_stream_entries
+    from mistral_ocr_spark.extractor.pdf import DecodeBudget, _xref_stream_entries
 
     rows = bytearray()
     want = {}
@@ -178,7 +178,7 @@ def test_xref_stream_w_widths_roundtrip(w1, w2, w3, start, fields):
         + bytes(rows)
         + b"\nendstream"
     )
-    sec = _xref_stream_entries(body)
+    sec = _xref_stream_entries(body, DecodeBudget())
     assert sec is not None
     assert sec["entries"] == want
 
@@ -258,9 +258,9 @@ def test_xref_chain_total_on_garbage(raw):
     """The chain walker never raises on arbitrary bytes (with or without a
     startxref marker spliced in) and always returns its (root, entries)
     shape — any parse failure degrades to the scan index."""
-    from mistral_ocr_spark.extractor.pdf import _xref_chain
+    from mistral_ocr_spark.extractor.pdf import DecodeBudget, _xref_chain
 
     for payload in (raw, b"startxref\n7\n" + raw, raw + b"\nstartxref\n2\n%%EOF"):
-        root, entries = _xref_chain(payload)
+        root, entries = _xref_chain(payload, DecodeBudget())
         assert root is None or isinstance(root, int)
         assert isinstance(entries, dict)

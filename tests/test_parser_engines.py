@@ -15,6 +15,7 @@ from mistral_ocr_spark.extractor.parser import (
     _KIND,
     _BlockBuilder,
     parse_blocks,
+    parse_document,
 )
 from mistral_ocr_spark.sources.fixtures import _make_page
 
@@ -92,10 +93,47 @@ def test_engines_agree_on_corpus():
         "<nav/>menu text here",
         "<script/>var x=1;</script><p>ok</p>",
         "<p>x<!-- unterminated",
+        # HTML5 tokenization of malformed markup (test_html5_tokenization)
+        "<p>a<!-- a -- >b</p><p>c</p>",
+        "<p>z</p><script>x</scriptfoo>y</script><p>w</p>",
+        "<p class='x>y</p><p>q</p>",
+        "<p>a</ p>b",
+        "<p>a<b",
     ],
 )
 def test_engines_agree_on_adversarial(snippet):
     assert _sig(parse_blocks(snippet, "fast")) == _sig(parse_blocks(snippet, "stdlib"))
+
+
+@pytest.mark.parametrize("engine", ["fast", "stdlib"])
+@pytest.mark.parametrize(
+    "snippet, texts",
+    [
+        # a comment ends only at "-->" (or EOF), not at "-- >"
+        ("<p>a<!-- a -- >b</p><p>c</p>", ["a"]),
+        # "</scriptfoo>" does not end the script
+        ("<p>z</p><script>x</scriptfoo>y</script><p>w</p>", ["z", "w"]),
+        # an unterminated quoted value runs to EOF, and the tag is dropped
+        ("<p class='x>y</p><p>q</p>", []),
+        # a quote that does not follow "=" opens no value
+        ("<p a=b'c>text</p>", ["text"]),
+        # "</ " opens a bogus comment; "</>" is dropped
+        ("<p>a</ p>b", ["ab"]),
+        ("<p>a</>b", ["ab"]),
+        # a tag EOF cuts short is dropped; a lone "<" or "</" is text
+        ("<p>a<b", ["a"]),
+        ("<p>a</", ["a</"]),
+        ("<p>a<", ["a<"]),
+    ],
+)
+def test_html5_tokenization(engine, snippet, texts):
+    assert [b.text for b in parse_blocks(snippet, engine)] == texts
+
+
+@pytest.mark.parametrize("engine", ["fast", "stdlib"])
+def test_tag_cut_short_by_eof_adds_no_image(engine):
+    assert parse_document("<p>a<img src=x.png", engine)[1] == []
+    assert parse_document("<p>a<img src=x.png>", engine)[1] == ["x.png"]
 
 
 def _context(b):

@@ -12,6 +12,7 @@ import pytest
 
 from mistral_ocr_spark.operators.dedup import minhash_lsh_pairs
 from mistral_ocr_spark.operators.graph import connected_components, pagerank
+from mistral_ocr_spark.scratch import materialize
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "mistral_ocr_spark"
 
@@ -51,6 +52,37 @@ def test_second_call_sharing_scratch_dir_keeps_first_result(spark, tmp_path, run
     # a FRESH projection: re-collecting `first` itself would reuse its
     # finished shuffle stages and never re-read the scratch files
     assert sorted(first.select(*first.columns).collect()) == expected
+
+
+def _jobs_in_group(spark, group: str, action) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_materialize_read_back_runs_no_job(spark, tmp_path):
+    """``materialize`` runs its write's jobs and no more: the read-back
+    carries the written schema, where an inferring read runs a job to read
+    the parquet footers. The schema is the one inference gives, also for a
+    non-nullable column."""
+    df = spark.createDataFrame([(1, "a"), (2, None)], "id long not null, s string")
+    write_jobs = _jobs_in_group(
+        spark, "test-scratch-write", lambda: df.write.parquet(str(tmp_path / "w"))
+    )
+    out = []
+    path = str(tmp_path / "m")
+    materialize_jobs = _jobs_in_group(
+        spark, "test-scratch-materialize", lambda: out.append(materialize(df, path))
+    )
+    assert write_jobs >= 1
+    assert materialize_jobs == write_jobs
+    assert out[0].schema == spark.read.parquet(path).schema
+    assert sorted(out[0].collect()) == sorted(df.collect())
 
 
 def _chain(node: ast.AST) -> list[str]:
