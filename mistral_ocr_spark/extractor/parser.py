@@ -368,7 +368,13 @@ class _StdlibParser(HTMLParser):
             return i + 3
         if c and not (c.isascii() and c.isalpha()):
             return self.parse_bogus_comment(i)
-        return super().parse_endtag(i)
+        # HTMLParser ends an end tag at its first ">"; HTML5 reads its
+        # attributes quote-aware, so </a b='>'> is one tag
+        m = _TOKEN_RE.match(rawdata, i)
+        if m is None or m.group(3) is None:  # EOF: close() decides
+            return -1
+        self.handle_endtag(m.group(1)[1:].lower())
+        return m.end()
 
     def parse_comment(self, i: int, report: bool = True) -> int:
         end = self.rawdata.find("-->", i + 4)

@@ -20,7 +20,12 @@ implemented directly (PDF 32000-1 §9.4 text objects):
   reads in PAGE order even when objects are stored out of byte order
   (incremental updates, linearized files), /Contents arrays re-assembled
   per page, and PDF 1.5 object streams (/ObjStm) expanded; byte-order
-  fallback when no catalog resolves.
+  fallback when no catalog resolves;
+- one stream decoder for both passes (since 1.8.0): ``_decode_stream``
+  cuts a payload to its direct /Length and runs its declared /Filter
+  cascade, or tries an undeclared zlib payload as Flate. A Flate payload
+  counts only when it inflates to its end, so a truncated or corrupt one
+  yields no prefix in either pass.
 
 Font decoding (since 1.4.0): when a page's resources declare fonts with a
 ``/ToUnicode`` CMap (PDF 32000-1 §9.10.3 — the standard way real-world
@@ -36,10 +41,8 @@ unchanged for documents without ToUnicode fonts.
 
 Anything without extractable text objects is surfaced as
 ``error_class='unsupported_pdf'`` (per-row error capture, the analog of the
-reference's error_files side channel, simple_client.py:630-664). Stream
-filters (r4): FlateDecode, ASCIIHexDecode, ASCII85Decode, RunLengthDecode
-and LZWDecode, singly or as a decode cascade (§7.4) — image codecs
-(DCTDecode/JPX/JBIG2/CCITT) are skipped, not errors. Cross-reference
+reference's error_files side channel, simple_client.py:630-664). Image
+codecs (DCTDecode/JPX/JBIG2/CCITT) are skipped, not errors. Cross-reference
 parsing (r5): classic tables, PDF 1.5+ xref STREAMS (/Type /XRef with
 W-array triplets, /Index subsections, PNG Predictor 10-15 and TIFF
 Predictor 2 /DecodeParms), hybrid /XRefStm files, and /Prev incremental
@@ -175,6 +178,7 @@ def _decode_hex(tok: bytes) -> bytes:
 # DECODE order (§7.3.8.2); abbreviated names are the inline-image aliases.
 
 _FILTER_RE = re.compile(rb"/Filter\s*(\[[^\]]*\]|/[A-Za-z0-9]+)")
+_LENGTH_RE = re.compile(rb"/Length\s+(\d+)(?!\d)(?!\s+\d+\s+R)")
 _NAME_RE = re.compile(rb"/([A-Za-z0-9]+)")
 
 
@@ -283,11 +287,12 @@ def _run_length_decode(data: bytes, limit: int = MAX_DECODED_BYTES) -> bytes | N
     return bytes(out)  # EOD missing but data exhausted cleanly
 
 
-def _lzw_decode(data: bytes, limit: int = MAX_DECODED_BYTES, early: int = 1) -> bytes | None:
+def _lzw_decode(data: bytes, limit: int = MAX_DECODED_BYTES) -> bytes | None:
     """PDF/TIFF-variant LZW (§7.4.4): 9→12-bit codes MSB-first, clear code
     256, EOD 257, table restart on clear, and the ``EarlyChange`` default of
-    widening one code early. Malformed code sequences return None
-    (→ the stream is skipped, same policy as a bad Flate payload)."""
+    widening one code early (``/EarlyChange 0`` is not supported). Malformed
+    code sequences return None (→ the stream is skipped, same policy as a
+    bad Flate payload)."""
     CLEAR, EOD = 256, 257
     out = bytearray()
     table: dict[int, bytes] = {}
@@ -321,10 +326,10 @@ def _lzw_decode(data: bytes, limit: int = MAX_DECODED_BYTES, early: int = 1) -> 
                 else:
                     return None
                 out += entry
-                # EarlyChange (default 1): the DECODER's table lags the
-                # encoder's by one entry, so it widens when next_code +
-                # early reaches the width boundary (511 at 9 bits) — one
-                # code EARLIER than the encoder-side formula. Getting this
+                # EarlyChange 1: the DECODER's table lags the encoder's by
+                # one entry, so it widens when next_code + 1 reaches the
+                # width boundary (511 at 9 bits) — one code EARLIER than
+                # the encoder-side formula. Getting this
                 # off by one reads 9 bits where the stream has 10 and
                 # desyncs exactly at table entry 511 (caught in review by
                 # decoding a reference-semantics EarlyChange=1 stream;
@@ -332,10 +337,10 @@ def _lzw_decode(data: bytes, limit: int = MAX_DECODED_BYTES, early: int = 1) -> 
                 # Near the 12-bit table cap the add (and widen) freeze —
                 # conforming encoders emit a CLEAR there; freezing keeps
                 # sync either way (table max 4096, §7.4.4.2).
-                if next_code + early < 4096:
+                if next_code + 1 < 4096:
                     table[next_code] = prev + entry[:1]
                     next_code += 1
-                    if next_code + early >= (1 << width) and width < 12:
+                    if next_code + 1 >= (1 << width) and width < 12:
                         width += 1
             if len(out) > limit:
                 raise ResourceLimit
@@ -372,41 +377,63 @@ def _apply_filters(data: bytes, names: list[bytes], budget: DecodeBudget) -> byt
     return data
 
 
+def _decode_stream(
+    dict_bytes: bytes, payload: bytes, budget: DecodeBudget
+) -> tuple[bool, bytes | None]:
+    """``(encoded, data)`` for one stream, by the rules both passes share:
+    the payload is cut to a DIRECT /Length; a declared /Filter cascade
+    decodes it (data None when it cannot); with no /Filter, a payload with
+    a zlib header that inflates to its end is Flate, any other is plain.
+    Every decode is charged to ``budget``. A plain payload without a direct
+    /Length loses one trailing EOL: the EOL before ``endstream`` is a
+    delimiter, not data (PDF 32000-1 §7.3.8); the binary filters are
+    self-terminating and ignore it."""
+    # Without a direct /Length, a payload whose last byte is \r sits flush
+    # against the \n delimiter and the EOL strip eats it (found by the r5
+    # W-array property test). An indirect /Length (N 0 R) does not count:
+    # _LENGTH_RE's (?!\d) stops `/Length 71 0 R` backtracking into a
+    # direct 7, and its second lookahead rejects the full indirect form.
+    lm = _LENGTH_RE.search(dict_bytes)
+    exact_len = lm is not None and int(lm.group(1)) <= len(payload)
+    if exact_len:
+        payload = payload[: int(lm.group(1))]
+    names = _declared_filters(dict_bytes)
+    if names:
+        return True, _apply_filters(payload, names, budget)
+    if _zlib_header_plausible(payload):
+        data = _apply_filters(payload, [b"FlateDecode"], budget)
+        if data is not None:
+            return True, data
+    if not exact_len:
+        if payload.endswith(b"\r\n"):
+            return False, payload[:-2]
+        if payload.endswith((b"\n", b"\r")):
+            return False, payload[:-1]
+    return False, payload
+
+
 def _inflate_streams(raw: bytes, budget: DecodeBudget) -> bytes:
     """Append DECODED content streams so BT/ET extraction sees encoded text
-    objects too: zlib-sniffed Flate payloads (the standard filter) plus any
-    stream whose enclosing object declares a supported /Filter cascade
-    (ASCIIHex/ASCII85/RunLength/LZW, §7.4 — r4). Plain streams are already
-    in ``raw`` and are NOT re-appended (that would double-extract them);
-    undecodable/unsupported payloads (images) are skipped. Deterministic:
-    streams are concatenated in document order."""
+    objects too. Plain streams are already in ``raw`` and are NOT
+    re-appended (that would double-extract them); undecodable/unsupported
+    payloads (images) are skipped. Deterministic: streams are concatenated
+    in document order."""
     decoded: list[bytes] = []
     blank_spans: list[tuple[int, int]] = []
     for m in _STREAM_RE.finditer(raw):
-        body = m.group(1)
-        if body[:1] == b"\x78":  # zlib magic (0x78 = deflate, 32K window)
-            try:
-                # decompressobj tolerates trailing \r\n before `endstream`
-                decoded.append(_inflate(zlib.decompressobj(), body, budget.left))
-                budget.charge(len(decoded[-1]))
-                blank_spans.append(m.span(1))
-                continue
-            except zlib.error:
-                pass
         # nearest enclosing object start bounds the stream's own dict (the
         # byte-order fallback has no object index to consult)
         obj_start = raw.rfind(b"obj", 0, m.start())
-        names = _declared_filters(raw[max(obj_start, 0) : m.start()])
-        if names:  # zlib-sniffed streams never reach here (continue above)
-            d = _apply_filters(body, names, budget)
-            if d:
-                decoded.append(d)
+        encoded, data = _decode_stream(raw[max(obj_start, 0) : m.start()], m.group(1), budget)
+        if encoded:
+            if data:
+                decoded.append(data)
             # an ENCODED body is noise to the BT/ET scan whether or not we
             # could decode it (RunLength literals, DCT entropy bytes, ...)
             # — excise it so accidental `BT ... ET` byte runs inside
             # encoded payloads cannot surface as garbage text
             blank_spans.append(m.span(1))
-    if not decoded and not blank_spans:
+    if not blank_spans:
         return raw
     parts: list[bytes] = []
     pos = 0
@@ -448,7 +475,8 @@ def parse_tounicode(data: bytes, budget: DecodeBudget) -> FontMap:
     to ``budget`` before it is built; codes at or above ``256**width`` are
     skipped, because ``_decode_string`` never looks them up."""
     m = _CSP_RE.search(data)
-    width = len(m.group(1)) // 2 if m else 1
+    # an odd digit count pads with a trailing 0 (§7.3.4.3): <0> is one byte
+    width = (len(m.group(1)) + 1) // 2 if m else 1
     top = 256**width - 1
     cmap: dict[int, str] = {}
     for section in _BFRANGE_RE.finditer(data):
@@ -507,7 +535,7 @@ def _decode_string(raw: bytes, font: FontMap | None) -> str:
     return raw.decode("latin-1")
 
 
-def _render_text_object(body: bytes, fonts: dict[bytes, FontMap] | None = None) -> str:
+def _render_text_object(body: bytes, fonts: dict[bytes, FontMap]) -> str:
     """Interpret one BT…ET body: show operators append to the current line,
     positioning operators start new lines, TJ kern gaps become spaces.
     ``fonts`` maps resource names (b"F1") to parsed ToUnicode maps; ``Tf``
@@ -586,49 +614,10 @@ _ROOT_RE = re.compile(rb"/Root\s+(\d+)\s+\d+\s+R")
 
 
 def _stream_data(body: bytes, budget: DecodeBudget) -> bytes | None:
-    """The decoded stream payload of one object body: the declared /Filter
-    cascade when the dict names one (Flate/ASCIIHex/ASCII85/RunLength/LZW,
-    §7.4), else the zlib sniff, else the raw bytes. The EOL preceding
-    ``endstream`` is a delimiter, not data (PDF 32000-1 §7.3.8), so exactly
-    one trailing EOL is stripped from uncompressed payloads (the binary
-    filters are self-terminating and ignore it). Decoded bytes are charged
-    to ``budget``."""
+    """The payload of one object body's stream as ``_decode_stream`` reads
+    it: decoded, plain, or None when it is encoded and cannot be decoded."""
     m = _STREAM_RE.search(body)
-    if not m:
-        return None
-    data = m.group(1)
-    dict_bytes = body[: m.start()]
-    names = _declared_filters(dict_bytes)
-    # a DIRECT /Length is authoritative for the payload's byte count —
-    # without it, a payload whose last byte happens to be \r sits flush
-    # against the \n delimiter and the EOL-strip heuristic below eats it
-    # (found by the r5 W-array property test). Indirect /Length (N 0 R)
-    # falls to the heuristic: the (?!\d) guard stops the regex engine from
-    # backtracking a multi-digit ref number into a truncated "direct"
-    # length (r5 review: `/Length 71 0 R` would otherwise match as 7 and
-    # slice the payload to garbage), and the second lookahead rejects the
-    # full indirect form.
-    lm = re.search(rb"/Length\s+(\d+)(?!\d)(?!\s+\d+\s+R)", dict_bytes)
-    exact_len = lm is not None and int(lm.group(1)) <= len(data)
-    if exact_len:
-        data = data[: int(lm.group(1))]
-    if names:
-        return _apply_filters(data, names, budget)
-    if data[:1] == b"\x78":  # zlib magic
-        try:
-            out = _inflate(zlib.decompressobj(), data, budget.left)
-            budget.charge(len(out))
-            return out
-        except zlib.error:
-            # an unfiltered payload that merely starts with 0x78 ('x', or
-            # an xref-stream field byte): keep it as raw data
-            pass
-    if not exact_len:
-        if data.endswith(b"\r\n"):
-            return data[:-2]
-        if data.endswith((b"\n", b"\r")):
-            return data[:-1]
-    return data
+    return _decode_stream(body[: m.start()], m.group(1), budget)[1] if m else None
 
 
 def _dict_int(body: bytes, key: bytes) -> int | None:
@@ -1088,6 +1077,18 @@ def _page_contents_in_order(
     return out
 
 
+def _render_pages(pages: list[tuple[bytes, dict[bytes, FontMap]]]) -> list[str]:
+    """One paragraph per BT/ET text object that renders to any text, in
+    page order."""
+    paragraphs = []
+    for content, fonts in pages:
+        for obj in _BT_ET_RE.finditer(content):
+            text = _render_text_object(obj.group(1), fonts)
+            if text:
+                paragraphs.append(text)
+    return paragraphs
+
+
 def pdf_paragraphs(raw: bytes) -> list[str] | None:
     """Extract text-object content; one output string per BT/ET object
     (lines within an object newline-joined).
@@ -1104,22 +1105,9 @@ def pdf_paragraphs(raw: bytes) -> list[str] | None:
     overrun ``MAX_DECODED_BYTES`` (→ resource_limit).
     """
     budget = DecodeBudget()
-    pages = _page_contents_in_order(raw, budget)
-    if pages is not None:
-        paragraphs = []
-        for content, fonts in pages:
-            for obj in _BT_ET_RE.finditer(content):
-                text = _render_text_object(obj.group(1), fonts)
-                if text:
-                    paragraphs.append(text)
-        if paragraphs:
-            return paragraphs
-    raw = _inflate_streams(raw, budget)
-    paragraphs = []
-    for obj in _BT_ET_RE.finditer(raw):
-        text = _render_text_object(obj.group(1))
-        if text:
-            paragraphs.append(text)
+    paragraphs = _render_pages(_page_contents_in_order(raw, budget) or [])
+    if not paragraphs:
+        paragraphs = _render_pages([(_inflate_streams(raw, budget), {})])
     return paragraphs or None
 
 

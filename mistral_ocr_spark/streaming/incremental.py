@@ -3,11 +3,11 @@
 The reference is explicitly poll-based batch ("No realtime feedback is
 required", /root/reference/specs/01_REQUIREMENTS.md:121), so the core
 pipeline uses lineage-chunk resume. This module is the alternative
-checkpointing path (SURVEY.md §2.10 stretch): a file-source stream over a
-pages directory — new parquet files landing between runs are extracted
-exactly-once using Spark's own streaming checkpoint instead of the
-manifest anti-join. Same extractor, same output schema; per-micro-batch
-stats land in a streaming metrics table.
+checkpointing path (SURVEY.md §2.10 stretch), behind ``cli submit
+--stream``: a file-source stream over a pages directory — new parquet
+files landing between runs are extracted exactly-once using Spark's own
+streaming checkpoint, and each micro-batch commits into the same catalog
+table the batch pipeline writes.
 
 At production scale this maps to readStream over an Iceberg/Kafka source
 with the identical transformation body.
@@ -15,51 +15,10 @@ with the identical transformation body.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
-from mistral_ocr_spark.operators.extract import extract_batches
-from mistral_ocr_spark.sources.tables import EXTRACTED_SCHEMA, PAGES_SCHEMA
-
-
-def incremental_extract(
-    spark: SparkSession,
-    pages_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """Process all currently-available new files, then stop (AvailableNow).
-
-    Repeated invocations only process files not yet recorded in the
-    streaming checkpoint — the streaming analog of pipeline.run's
-    committed-chunk skip.
-    """
-    reader = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .format("parquet")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    pages = reader.load(pages_dir)
-
-    extracted = pages.mapInArrow(extract_batches, EXTRACTED_SCHEMA)
-
-    q = (
-        extracted.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def read_streamed_output(spark: SparkSession, out_dir: str) -> DataFrame:
-    if not os.path.exists(out_dir):
-        return spark.createDataFrame([], EXTRACTED_SCHEMA)
-    return spark.read.schema(EXTRACTED_SCHEMA).parquet(out_dir)
+from mistral_ocr_spark.operators.extract import extract_pages
+from mistral_ocr_spark.sources.tables import PAGES_SCHEMA
 
 
 def incremental_extract_to_catalog(
@@ -87,7 +46,7 @@ def incremental_extract_to_catalog(
     from mistral_ocr_spark.sources import catalog
 
     pages = spark.readStream.schema(PAGES_SCHEMA).format("parquet").load(pages_dir)
-    extracted = pages.mapInArrow(extract_batches, EXTRACTED_SCHEMA)
+    extracted = extract_pages(pages)
 
     def commit_batch(df: DataFrame, batch_id: int) -> None:
         if batch_id in catalog.committed_chunks(table_root, run_id):

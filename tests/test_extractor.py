@@ -7,6 +7,9 @@ emitted artifact and assert exact fields).
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
 from mistral_ocr_spark.extractor import extract
 from mistral_ocr_spark.extractor.decode import decode_html
 from mistral_ocr_spark.extractor.pdf import extract_pdf_text
@@ -100,12 +103,12 @@ def test_determinism_repeat():
 
 
 # sha256 over repr(extract(...)) of the pages below, as EXTRACTOR_VERSION
-# 1.7.0 emits them (the version is part of each repr). The block builder,
+# 1.8.0 emits them (the version is part of each repr). The block builder,
 # Block.text, classify and render are shared by both tokenizer engines and
 # by oracle.extract_reference, so the dual-engine test and the oracle gate
 # cannot see a regression there; this digest can. A deliberate output
 # change bumps EXTRACTOR_VERSION and this digest together.
-_EXTRACT_DIGEST = "3203229cba97a340be68f6eb63ae1808f9f8092c01ddb806476e1d63e463de4b"
+_EXTRACT_DIGEST = "6b6349f00ba0aabc5272df168fcba4b87664b8bca70757e0b4c73da6d57a7a88"
 
 
 def test_extract_digest_pinned():
@@ -316,6 +319,18 @@ def _pdf_stream_obj(num: int, data: bytes, extra: bytes = b"") -> bytes:
     return _pdf_obj(
         num,
         b"<< /Length %d %s >>\nstream\n" % (len(data), extra) + data + b"\nendstream",
+    )
+
+
+def _one_page(*objs: bytes, contents: bytes = b"4 0 R") -> bytes:
+    """Catalog 1 → pages 2 → page 3, whose /Contents is ``contents``."""
+    return (
+        b"%PDF-1.5\n"
+        + _pdf_obj(1, b"<< /Type /Catalog /Pages 2 0 R >>")
+        + _pdf_obj(2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
+        + _pdf_obj(3, b"<< /Type /Page /Parent 2 0 R /Contents " + contents + b" >>")
+        + b"".join(objs)
+        + b"trailer\n<< /Root 1 0 R >>\n%%EOF"
     )
 
 
@@ -727,6 +742,15 @@ def test_pdf_flate_raw_deflate_still_decodes():
     assert _flate(payload) == content
 
 
+def _corrupt_zlib() -> bytes:
+    """A valid zlib header over a corrupt body. It inflates to the garbage
+    prefix b"BT (x.\\x7fK5..." with no zlib.error, but never to its end."""
+    import zlib
+
+    good = zlib.compress(b"BT (x) Tj ET" * 10)
+    return good[:8] + bytes(b ^ 0xFF for b in good[8:20]) + good[20:]
+
+
 def test_pdf_flate_rejects_garbage_and_corrupt_zlib():
     """A damaged declared-Flate stream must be SKIPPED (None), not decoded
     into garbage for the BT/ET scan (ADVICE r4): raw inflate often
@@ -741,13 +765,92 @@ def test_pdf_flate_rejects_garbage_and_corrupt_zlib():
     garbage = bytes(range(251, 256)) * 10
     assert _flate(garbage) is None
 
-    good = zlib.compress(b"BT (x) Tj ET" * 10)
-    corrupt = good[:8] + bytes(b ^ 0xFF for b in good[8:20]) + good[20:]
-    assert _flate(corrupt) is None
+    assert _flate(_corrupt_zlib()) is None
 
     raw = zlib.compressobj(wbits=-zlib.MAX_WBITS)
     full = raw.compress(b"BT (truncated) Tj ET" * 50) + raw.flush()
     assert _flate(full[: len(full) // 2]) is None
+
+
+def _both_passes(*objs: bytes, contents: bytes = b"4 0 R") -> list[tuple]:
+    """(text, error_class) of ``objs`` read once as a one-page PDF (the
+    page-tree pass) and once with no catalog (the byte-order fallback)."""
+    pdfs = (_one_page(*objs, contents=contents), b"%PDF-1.5\n" + b"".join(objs) + b"%%EOF")
+    return [(r.text, r.error_class) for r in map(extract, pdfs)]
+
+
+def test_pdf_run_length_without_eod_reads_the_same_in_both_passes():
+    """Both passes cut the payload to its /Length, so the EOL before
+    `endstream` is not read as a run-length byte."""
+    content = b"BT (run length) Tj ET"
+    stream = _pdf_stream_obj(4, bytes([len(content) - 1]) + content, b"/Filter /RunLengthDecode")
+    assert _both_passes(stream) == [("run length", None)] * 2
+
+
+def test_pdf_truncated_flate_yields_no_prefix_in_either_pass():
+    """A Flate payload must inflate to its end: the complete first text
+    object of a truncated stream is not extracted by either pass."""
+    import zlib
+
+    c = zlib.compressobj()
+    head = c.compress(b"BT (first object survives) Tj ET\n") + c.flush(zlib.Z_SYNC_FLUSH)
+    rest = c.compress(b"BT (cut) Tj ET\n" * 20) + c.flush()
+    stream = _pdf_stream_obj(4, head + rest[: len(rest) // 2], b"/Filter /FlateDecode")
+    assert _both_passes(stream) == [(None, "unsupported_pdf")] * 2
+
+
+def test_pdf_corrupt_flate_yields_no_text_in_either_pass():
+    """The garbage prefix of a corrupt Flate payload opens a text object
+    that the next stream of the same /Contents would close; neither pass
+    may decode that prefix."""
+    tail = b"(tail) Tj ET".hex().encode() + b">"
+    objs = (
+        _pdf_stream_obj(4, _corrupt_zlib(), b"/Filter /FlateDecode"),
+        _pdf_stream_obj(5, tail, b"/Filter /ASCIIHexDecode"),
+    )
+    assert _both_passes(*objs, contents=b"[4 0 R 5 0 R]") == [(None, "unsupported_pdf")] * 2
+
+
+def test_pdf_one_digit_codespace_is_one_byte_codes():
+    """`begincodespacerange <0> <F>` pads to one byte (§7.3.4.3), in the
+    extractor and in the oracle's reference extraction alike."""
+    from mistral_ocr_spark.oracle import extract_reference
+
+    cmap = (
+        b"1 begincodespacerange\n<0> <F>\nendcodespacerange\n"
+        b"1 beginbfchar\n<41> <0042>\nendbfchar"
+    )
+    pdf = _tounicode_pdf(cmap, b"BT /F1 12 Tf (A) Tj ET")
+    assert extract(pdf).text == "B"
+    assert extract_reference(pdf).text == "B"
+
+
+def _names_by_function(tree: ast.Module):
+    """(enclosing top-level function or "<module>", line, name) for every
+    name and attribute read in a module."""
+    for stmt in tree.body:
+        owner = stmt.name if isinstance(stmt, ast.FunctionDef) else "<module>"
+        for node in ast.walk(stmt):
+            if isinstance(node, ast.Name):
+                yield owner, node.lineno, node.id
+            elif isinstance(node, ast.Attribute):
+                yield owner, node.lineno, node.attr
+
+
+def test_pdf_streams_decode_in_one_place():
+    """Only ``_flate`` builds a zlib.decompressobj, and only
+    ``_decode_stream`` reads a stream's /Filter and runs its cascade, so
+    both passes decode every stream by the same rules."""
+    import mistral_ocr_spark.extractor.pdf as pdf
+
+    owners = {"decompressobj": "_flate", "_declared_filters": "_decode_stream",
+              "_apply_filters": "_decode_stream"}
+    found = [
+        f"pdf.py:{line} {owner}() uses {name}"
+        for owner, line, name in _names_by_function(ast.parse(pathlib.Path(pdf.__file__).read_text()))
+        if owners.get(name, owner) != owner
+    ]
+    assert not found, "stream decoding outside its one place:\n" + "\n".join(found)
 
 
 def _build_xref_stream_pdf(stale_update: bool = False) -> bytes:

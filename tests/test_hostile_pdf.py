@@ -19,7 +19,7 @@ import pytest
 
 from mistral_ocr_spark.extractor import extract
 from mistral_ocr_spark.extractor.pdf import MAX_DECODED_BYTES, ResourceLimit, pdf_paragraphs
-from test_extractor import _pdf_obj, _pdf_stream_obj, _pdf_with_stream, _tounicode_pdf
+from test_extractor import _one_page, _pdf_stream_obj, _pdf_with_stream, _tounicode_pdf
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 MIB = 1 << 20
@@ -35,18 +35,6 @@ r = extract(raw)
 after = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
 print(json.dumps({"error_class": r.error_class, "growth": (after - before) * 1024}))
 """
-
-
-def _one_page(*objs: bytes, contents: bytes = b"4 0 R") -> bytes:
-    """Catalog 1 → pages 2 → page 3, whose /Contents is ``contents``."""
-    return (
-        b"%PDF-1.5\n"
-        + _pdf_obj(1, b"<< /Type /Catalog /Pages 2 0 R >>")
-        + _pdf_obj(2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
-        + _pdf_obj(3, b"<< /Type /Page /Parent 2 0 R /Contents " + contents + b" >>")
-        + b"".join(objs)
-        + b"trailer\n<< /Root 1 0 R >>\n%%EOF"
-    )
 
 
 @functools.lru_cache(maxsize=None)

@@ -99,6 +99,8 @@ def test_engines_agree_on_corpus():
         "<p class='x>y</p><p>q</p>",
         "<p>a</ p>b",
         "<p>a<b",
+        # an end tag's attributes are read quote-aware, as a start tag's
+        "<p>l</a b='>'>t</p>",
     ],
 )
 def test_engines_agree_on_adversarial(snippet):

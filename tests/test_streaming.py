@@ -6,13 +6,7 @@ from __future__ import annotations
 import shutil
 import tempfile
 
-import pytest
-
 from mistral_ocr_spark.sources.fixtures import generate_pages
-from mistral_ocr_spark.streaming.incremental import (
-    incremental_extract,
-    read_streamed_output,
-)
 
 
 def test_stateful_host_stats_across_restarts(spark):
@@ -96,34 +90,6 @@ def test_windowed_counts_match_batch(spark):
         tuple(r) for r in expected.select(*key, "n", "sum_value").collect()
     }  # and nothing emitted disagrees with batch
     shutil.rmtree(base, ignore_errors=True)
-
-
-@pytest.fixture()
-def dirs():
-    base = tempfile.mkdtemp(prefix="ocr_stream_")
-    yield f"{base}/pages", f"{base}/out", f"{base}/ckpt"
-    shutil.rmtree(base, ignore_errors=True)
-
-
-def test_incremental_exactly_once(spark, dirs):
-    pages_dir, out_dir, ckpt = dirs
-
-    generate_pages(spark, 300, partitions=2).write.mode("append").parquet(pages_dir)
-    incremental_extract(spark, pages_dir, out_dir, ckpt)
-    assert read_streamed_output(spark, out_dir).count() == 300
-
-    # second invocation with no new files: nothing reprocessed
-    incremental_extract(spark, pages_dir, out_dir, ckpt)
-    assert read_streamed_output(spark, out_dir).count() == 300
-
-    # new files land → only they are processed
-    generate_pages(spark, 150, partitions=1).withColumnRenamed("url", "url").selectExpr(
-        "concat(url, '?v=2') AS url", "warc_ts", "html", "text", "lang"
-    ).write.mode("append").parquet(pages_dir)
-    incremental_extract(spark, pages_dir, out_dir, ckpt)
-    out = read_streamed_output(spark, out_dir)
-    assert out.count() == 450
-    assert out.select("url").distinct().count() == 450
 
 
 def test_streaming_commits_into_catalog(spark):
