@@ -181,55 +181,61 @@ def with_shingles(docs: DataFrame, text_col: str = "text") -> DataFrame:
     whole normalized text — full 3-grams only otherwise, so the identical
     CASE is expressible in ANSI SQL (concat_ws's NULL-skipping vs SQL ||'s
     NULL-propagation never comes into play; the two engines agree on every
-    input length).
+    input length). The words array is MATERIALIZED as a real column first:
+    referencing the split() expression inside the transform lambda
+    re-evaluates the regex split per element_at (no common-subexpression
+    elimination in interpreted higher-order functions — measured
+    9 s → 1.3 s on the sf0.1 fixture when materialized). The join paths
+    use the hashed form, ``with_ngram_hashes(docs, 3)``.
     """
-
-    def make(w, i):
-        if i is None:
-            return F.array_join(w, " ")
-        return F.concat_ws(
-            " ", F.element_at(w, i), F.element_at(w, i + 1), F.element_at(w, i + 2)
-        )
-
-    return _with_word_ngrams(docs, text_col, make, "shingles")
-
-
-def _with_word_ngrams(docs: DataFrame, text_col: str, make, out_col: str) -> DataFrame:
-    """Shared 3-gram scaffolding with the words array MATERIALIZED as a real
-    column first: referencing the split() expression inside the transform
-    lambda re-evaluates the regex split per element_at (no common-
-    subexpression elimination in interpreted higher-order functions —
-    measured 9 s → 1.3 s on the sf0.1 fixture when materialized)."""
     w = F.col("_words")
-    n = F.greatest(F.size(w) - 2, F.lit(1))
-    tri = F.transform(F.sequence(F.lit(1), n), lambda i: make(w, i))
-    shingles = F.when(F.size(w) < 3, F.array(make(w, None))).otherwise(
+    tri = F.transform(
+        F.sequence(F.lit(1), F.greatest(F.size(w) - 2, F.lit(1))),
+        lambda i: F.concat_ws(
+            " ", F.element_at(w, i), F.element_at(w, i + 1), F.element_at(w, i + 2)
+        ),
+    )
+    shingles = F.when(F.size(w) < 3, F.array(F.array_join(w, " "))).otherwise(
         F.array_distinct(tri)
     )
     return (
         docs.withColumn("_words", F.split(F.trim(F.col(text_col)), r"\s+"))
-        .withColumn(out_col, shingles)
+        .withColumn("shingles", shingles)
         .drop("_words")
     )
 
 
-def with_shingle_hashes(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Distinct word-3-gram shingle HASHES per doc: one ``xxhash64(w_i,
-    w_{i+1}, w_{i+2})`` per shingle — no shingle string is ever
-    materialized. Set sizes and intersections equal the string-shingle
-    sets up to a ~n²/2^64 collision probability, so Jaccard counts are
-    interchangeable; the <3-word CASE mirrors ``with_shingles`` (one
-    whole-text shingle)."""
-
-    def make(w, i):
-        if i is None:
-            return F.xxhash64(F.array_join(w, " "))
-        # slice form: one hash call per shingle instead of 3 element_at
-        # args (see with_ngram_hashes — measured faster, same count
-        # semantics since equal word tuples hash equally)
-        return F.xxhash64(F.slice(w, i, 3))
-
-    return _with_word_ngrams(docs, text_col, make, "shingles")
+def with_ngram_hashes(
+    docs: DataFrame,
+    n: int,
+    text_col: str = "text",
+    out_col: str = "ngram_hashes",
+) -> DataFrame:
+    """Distinct word-n-gram HASH array per doc: one ``xxhash64(slice(words,
+    i, n))`` per gram, no gram string materialized. With n=3 these are the
+    hashed ``with_shingles`` sets the near-dup joins run on (set sizes and
+    intersections equal the string sets up to a ~n²/2^64 collision
+    probability, so Jaccard counts are interchangeable); n=13 is the
+    decontamination gram. The slice form hashes the word sub-array in ONE
+    call instead of n element_at arguments — measured 2.3× faster at n=13
+    on the sf0.1 corpus (r4; xxhash64 accepts complex types and chains
+    element hashes, so equal word tuples still hash equally). Documents
+    shorter than n words hash the whole normalized text as their single
+    gram, the ``with_shingles`` <3-word CASE."""
+    w = F.col("_words")
+    cnt = F.greatest(F.size(w) - (n - 1), F.lit(1))
+    grams = F.transform(
+        F.sequence(F.lit(1), cnt),
+        lambda i: F.xxhash64(F.slice(w, i, n)),
+    )
+    out = F.when(
+        F.size(w) < n, F.array(F.xxhash64(F.array_join(w, " ")))
+    ).otherwise(F.array_distinct(grams))
+    return (
+        docs.withColumn("_words", F.split(F.trim(F.col(text_col)), r"\s+"))
+        .withColumn(out_col, out)
+        .drop("_words")
+    )
 
 
 def jaccard_pairs_exact(
@@ -247,7 +253,7 @@ def jaccard_pairs_exact(
     run on hashed shingles (int64 keys, not 3-word strings) — Jaccard
     counts are identical up to a negligible collision probability.
     """
-    sh = with_shingle_hashes(docs, text_col).select(
+    sh = with_ngram_hashes(docs, 3, text_col, "shingles").select(
         F.col(key_col).alias("id"), "shingles", F.size("shingles").alias("n_sh")
     )
     # explode_outer, NOT explode: exploding a computed array column by name
@@ -355,22 +361,6 @@ def _signatures_from_shingle_hashes(sh: DataFrame, num_hashes: int) -> DataFrame
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, num_hashes: int = 64, key_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, sig: array<bigint>[num_hashes]) via one Arrow-batched pass.
-
-    Shingle hashing runs JVM-side (``xxhash64`` over the 3 words directly —
-    no shingle string materialized, see ``with_shingle_hashes``); Python
-    only does the numpy permutation/min reduction over the pre-hashed
-    int64 array.
-    """
-    sh = with_shingle_hashes(docs, text_col).select(
-        F.col(key_col).alias("id"), "shingles"
-    )
-    return _signatures_from_shingle_hashes(sh, num_hashes)
-
-
 def _estimate_prefilter(
     cand: DataFrame, sigs: DataFrame, num_hashes: int, threshold: float
 ) -> DataFrame:
@@ -459,7 +449,9 @@ def minhash_lsh_pairs(
     # read — the r5 order computed the identical shingle kernel twice
     # (once under the signature pass, once for the verify table).
     sh = materialize(
-        with_shingle_hashes(docs, text_col).select(F.col(key_col).alias("id"), "shingles"),
+        with_ngram_hashes(docs, 3, text_col, "shingles").select(
+            F.col(key_col).alias("id"), "shingles"
+        ),
         scratch_path(scratch, "shingle_hashes"),
     )
     sigs = materialize(
@@ -538,7 +530,9 @@ def minhash_index(
     # ONE corpus text pass: shingle-hash → persist; signatures derive from
     # the persisted shingle table, buckets from the persisted signatures
     sh = materialize(
-        with_shingle_hashes(docs, text_col).select(F.col(key_col).alias("id"), "shingles"),
+        with_ngram_hashes(docs, 3, text_col, "shingles").select(
+            F.col(key_col).alias("id"), "shingles"
+        ),
         f"{index_dir}/shingles",
     )
     sigs = materialize(
@@ -602,7 +596,9 @@ def minhash_lsh_pairs_incremental(
     # one text pass over the increment: shingle-hash → scratch; signatures
     # derive from the stored table (the index-build shape)
     new_sh = materialize(
-        with_shingle_hashes(new_docs, text_col).select(F.col(key_col).alias("id"), "shingles"),
+        with_ngram_hashes(new_docs, 3, text_col, "shingles").select(
+            F.col(key_col).alias("id"), "shingles"
+        ),
         scratch_path(scratch, "inc_shingles"),
     )
     new_sigs = materialize(
@@ -945,36 +941,6 @@ def simhash_pairs(
 # ---------------------------------------------------------------------------
 # benchmark decontamination (GPT-3 Appendix C / FineWeb-style)
 # ---------------------------------------------------------------------------
-
-def with_ngram_hashes(
-    docs: DataFrame,
-    n: int,
-    text_col: str = "text",
-    out_col: str = "ngram_hashes",
-) -> DataFrame:
-    """Distinct word-n-gram hash array per doc — ``with_shingle_hashes``
-    generalized to arbitrary n (one ``xxhash64(slice(words, i, n))`` per
-    gram, no gram string materialized). The slice form hashes the word
-    sub-array in ONE call instead of n element_at arguments — measured
-    2.3× faster at n=13 on the sf0.1 corpus (r4; xxhash64 accepts complex
-    types and chains element hashes, so equal word tuples still hash
-    equally). Documents shorter than n words hash the whole normalized
-    text as their single gram."""
-    w = F.col("_words")
-    cnt = F.greatest(F.size(w) - (n - 1), F.lit(1))
-    grams = F.transform(
-        F.sequence(F.lit(1), cnt),
-        lambda i: F.xxhash64(F.slice(w, i, n)),
-    )
-    out = F.when(
-        F.size(w) < n, F.array(F.xxhash64(F.array_join(w, " ")))
-    ).otherwise(F.array_distinct(grams))
-    return (
-        docs.withColumn("_words", F.split(F.trim(F.col(text_col)), r"\s+"))
-        .withColumn(out_col, out)
-        .drop("_words")
-    )
-
 
 def decontaminate(
     docs: DataFrame,

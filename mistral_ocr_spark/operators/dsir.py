@@ -65,9 +65,6 @@ def words_expr(text_col: Column) -> Column:
     return F.filter(F.split(F.trim(text_col), r"\s+"), lambda w: w != "")
 
 
-_words = words_expr
-
-
 def grams_from_words(w: Column) -> Column:
     """Unigrams + bigrams from an ALREADY-MATERIALIZED words column.
     Bigram join char is a single space (words cannot contain whitespace,
@@ -87,13 +84,6 @@ def grams_from_words(w: Column) -> Column:
         ),
     ).otherwise(F.array().cast("array<string>"))
     return F.concat(w, bis)
-
-
-def hashed_grams(text_col: Column) -> Column:
-    """Convenience single-expression form (docs/tests). For anything on a
-    hot path use ``grams_from_words`` over a materialized words column —
-    see its no-CSE warning."""
-    return grams_from_words(words_expr(text_col))
 
 
 def _doc_buckets(df: DataFrame, text_col: str, id_col: str, n_buckets: int, salt: str) -> DataFrame:

@@ -95,13 +95,6 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Whitespace-normalized content fingerprint (md5 hex) — the exact-dedup
-    key and the cross-engine-portable stand-in for a rolling hash."""
-    norm = F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))
-    return df.withColumn("fingerprint", F.md5(norm))
-
-
 def web_quality_signals(
     df: DataFrame,
     text_col: str = "text",

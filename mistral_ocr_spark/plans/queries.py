@@ -690,12 +690,12 @@ def token_counts(spark, sf_dir):
         F.lit(0).cast("long"),
         lambda acc, c: (acc * 31 + F.ascii(c)) % F.lit(1000000007),
     )
-    return X.with_fingerprint(d).select(
+    return d.select(
         "doc_id",
         "n_tokens",
         n_pretokens.alias("n_pretokens"),
         n_bpe.alias("n_bpe_tokens"),
-        "fingerprint",
+        D.content_fingerprint().alias("fingerprint"),
         rhash.cast("bigint").alias("rhash"),
     )
 

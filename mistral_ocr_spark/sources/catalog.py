@@ -44,7 +44,7 @@ import time
 import uuid
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 _CURRENT = "_CURRENT"
 _MANIFEST_DIR = "_manifests"
@@ -68,6 +68,23 @@ def _manifest_path(root: str, name: str) -> str:
     return os.path.join(root, _MANIFEST_DIR, name)
 
 
+def _manifest_names(root: str) -> list[str]:
+    """The committed manifest names, oldest first. A killed committer's
+    ``manifest-N.json.tmp-<uuid>`` is not a manifest and is never listed."""
+    d = os.path.join(root, _MANIFEST_DIR)
+    if not os.path.isdir(d):
+        return []
+    return sorted(
+        n for n in os.listdir(d) if n.startswith("manifest-") and n.endswith(".json")
+    )
+
+
+def _read_manifest(root: str, name: str) -> dict[str, Any]:
+    """One manifest, with keys older manifests lack filled from the defaults."""
+    with open(_manifest_path(root, name)) as f:
+        return {**_empty_manifest(), **json.load(f)}
+
+
 def load_manifest(root: str, snapshot_id: int | None = None) -> dict[str, Any]:
     """Reader snapshot: whatever ``_CURRENT`` points at (complete by
     construction — manifests appear atomically via link). With
@@ -75,44 +92,38 @@ def load_manifest(root: str, snapshot_id: int | None = None) -> dict[str, Any]:
     (Iceberg ``VERSION AS OF``); raises FileNotFoundError when it never
     existed or has been expired."""
     if snapshot_id is not None:
-        with open(_manifest_path(root, f"manifest-{snapshot_id:012d}.json")) as f:
-            return {**_empty_manifest(), **json.load(f)}
+        return _read_manifest(root, f"manifest-{snapshot_id:012d}.json")
     cur = os.path.join(root, _CURRENT)
     if not os.path.exists(cur):
         return _empty_manifest()
     with open(cur) as f:
-        name = f.read().strip()
-    with open(_manifest_path(root, name)) as f:
-        return {**_empty_manifest(), **json.load(f)}
+        return _read_manifest(root, f.read().strip())
 
 
 def _latest_manifest(root: str) -> dict[str, Any]:
     """Committer snapshot: the highest-numbered manifest on disk (may be
     ahead of ``_CURRENT`` when a concurrent commit hasn't swapped the
     pointer yet — basing on it is what keeps commits linearizable)."""
-    d = os.path.join(root, _MANIFEST_DIR)
-    if not os.path.isdir(d):
-        return _empty_manifest()
-    names = sorted(
-        n for n in os.listdir(d) if n.startswith("manifest-") and n.endswith(".json")
-    )
-    if not names:
-        return _empty_manifest()
-    with open(_manifest_path(root, names[-1])) as f:
-        return {**_empty_manifest(), **json.load(f)}
+    names = _manifest_names(root)
+    return _read_manifest(root, names[-1]) if names else _empty_manifest()
 
 
 def committed_chunks(root: str, run_id: str) -> set[int]:
     return set(load_manifest(root)["committed_chunks"].get(run_id, []))
 
 
-def _atomic_write(path: str, payload: str) -> None:
+def _write_temp(path: str, payload: str) -> str:
+    """Write ``payload`` to a fresh fsynced temp file beside ``path``."""
     tmp = f"{path}.tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
         f.write(payload)
         f.flush()
         os.fsync(f.fileno())
-    os.replace(tmp, path)
+    return tmp
+
+
+def _atomic_write(path: str, payload: str) -> None:
+    os.replace(_write_temp(path, payload), path)
 
 
 def _write_exclusive(path: str, payload: str) -> None:
@@ -120,11 +131,7 @@ def _write_exclusive(path: str, payload: str) -> None:
     FileExistsError if it already exists (the commit-conflict arbiter).
     ``os.link`` of a fully-written temp file gives both properties at once:
     exclusive create AND never-partial contents."""
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        f.write(payload)
-        f.flush()
-        os.fsync(f.fileno())
+    tmp = _write_temp(path, payload)
     try:
         os.link(tmp, path)
     finally:
@@ -278,6 +285,38 @@ def read_lineage(spark: SparkSession, root: str) -> DataFrame:
     return _read_files(spark, load_manifest(root)["lineage_files"], LINEAGE_SCHEMA)
 
 
+def _file_path() -> Column:
+    """THE rule that maps the file a row was read from to the OS path
+    ``list_parquet_files`` stored: ``input_file_name()`` is a percent-encoded
+    ``file:`` URI, so strip the scheme and decode, escaping ``+`` first
+    (``url_decode`` reads it as a space). ``binaryFile``'s ``path`` column is
+    not encoded, so scans of every format name their files through this."""
+    from pyspark.sql import functions as F
+
+    path = F.regexp_replace(F.input_file_name(), "^file:/+", "/")
+    return F.url_decode(F.regexp_replace(path, r"\+", "%2B"))
+
+
+def _latest(
+    df: DataFrame, m: dict[str, Any], keys: list[str], tie_break: list[Column]
+) -> DataFrame:
+    """Latest-wins (merge-on-read) over rows read from ``m``'s files: one
+    row per ``keys``, the one whose file has the highest commit sequence
+    (``file_seq``), ``tie_break`` deciding rows of one commit."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    seq = df.sparkSession.createDataFrame(list(m["file_seq"].items()), "_path string, _seq long")
+    w = Window.partitionBy(*keys).orderBy(F.desc_nulls_last("_seq"), *tie_break)
+    return (
+        df.withColumn("_path", _file_path())
+        .join(F.broadcast(seq), "_path", "left")
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", "_path", "_seq")
+    )
+
+
 def read_extracted_latest(
     spark: SparkSession, root: str, as_of: int | None = None
 ) -> DataFrame:
@@ -294,29 +333,11 @@ def read_extracted_latest(
     rows), resolution happens at read time over snapshot-consistent files —
     with real Iceberg this becomes MERGE INTO + snapshot expiry.
     """
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     m = load_manifest(root, as_of)
-    ext = read_extracted(spark, root, as_of)
-    order = [F.desc("run_id"), F.desc("extractor_version")]
-    drop = ["_rn"]
-    if m["file_seq"]:
-        mapping = spark.createDataFrame(
-            [(p, s) for p, s in m["file_seq"].items()], "_path string, _seq long"
-        )
-        norm = F.regexp_replace(F.input_file_name(), "^file:/+", "/")
-        ext = ext.withColumn("_path", norm).join(
-            F.broadcast(mapping), "_path", "left"
-        ).drop("_path")
-        order = [F.desc_nulls_last("_seq"), *order]
-        drop.append("_seq")
-    w = Window.partitionBy("url").orderBy(*order)
-    return (
-        ext.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop(*drop)
-    )
+    ext = _read_files(spark, m["data_files"], _table_schema(m))
+    return _latest(ext, m, ["url"], [F.desc("run_id"), F.desc("extractor_version")])
 
 
 def read_errors(spark: SparkSession, root: str) -> DataFrame:
@@ -358,9 +379,10 @@ def register_input_files(
     spark: SparkSession, root: str, input_path: str, table: str = "pages"
 ) -> dict[str, Any]:
     """Refresh the registry for every file under ``input_path``: per-file
-    row count (distributed ``input_file_name()`` aggregation over the
-    parquet scan) joined with file metadata (``binaryFile`` source, content
-    column pruned — a metadata-only listing, no bytes read). Upsert
+    row count (distributed aggregation over the parquet scan) joined with
+    file metadata (``binaryFile`` source, content column pruned — a
+    metadata-only listing, no bytes read); both sides name their files by
+    ``_file_path``, so they join under any root name. Upsert
     semantics are merge-on-read like the extracted table: each refresh
     appends rows under a new snapshot and ``read_input_files`` resolves
     latest-per-file by commit sequence — at 10^12 input files both scans
@@ -368,10 +390,9 @@ def register_input_files(
     """
     from pyspark.sql import functions as F
 
-    norm = F.regexp_replace(F.input_file_name(), "^file:/+", "/")
     counts = (
         spark.read.parquet(input_path)
-        .select(norm.alias("file_path"))
+        .select(_file_path().alias("file_path"))
         .groupBy("file_path")
         .agg(F.count(F.lit(1)).alias("n_rows"))
     )
@@ -379,7 +400,7 @@ def register_input_files(
         spark.read.format("binaryFile")
         .load(input_path)
         .select(
-            F.regexp_replace(F.col("path"), "^file:/+", "/").alias("file_path"),
+            _file_path().alias("file_path"),
             F.col("length").alias("byte_size"),
             F.col("modificationTime").alias("modified_at"),
         )
@@ -418,27 +439,13 @@ def read_input_files(
 ) -> DataFrame:
     """The input-file registry; with ``latest_only`` each (table, file_path)
     resolves to its most recent refresh (by commit sequence)."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     m = load_manifest(root)
     df = _read_files(spark, m["input_file_files"], input_files_schema())
     if not latest_only:
         return df
-    mapping = spark.createDataFrame(
-        [(p, s) for p, s in m["file_seq"].items()] or [("", 0)],
-        "_path string, _seq long",
-    )
-    norm = F.regexp_replace(F.input_file_name(), "^file:/+", "/")
-    df = df.withColumn("_path", norm).join(F.broadcast(mapping), "_path", "left")
-    w = Window.partitionBy("table", "file_path").orderBy(
-        F.desc_nulls_last("_seq"), F.desc("refreshed_at")
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_path", "_seq")
-    )
+    return _latest(df, m, ["table", "file_path"], [F.desc("refreshed_at")])
 
 
 def compact(
@@ -515,13 +522,9 @@ def compact(
 def snapshots(root: str) -> list[dict[str, Any]]:
     """The table's snapshot history (the Iceberg ``snapshots`` metadata-table
     analog): one summary row per retained manifest, oldest first."""
-    d = os.path.join(root, _MANIFEST_DIR)
-    if not os.path.isdir(d):
-        return []
     out = []
-    for name in sorted(n for n in os.listdir(d) if n.startswith("manifest-")):
-        with open(_manifest_path(root, name)) as f:
-            m = {**_empty_manifest(), **json.load(f)}
+    for name in _manifest_names(root):
+        m = _read_manifest(root, name)
         out.append(
             {
                 "snapshot_id": m["snapshot_id"],
@@ -535,9 +538,7 @@ def snapshots(root: str) -> list[dict[str, Any]]:
     return out
 
 
-def expire_snapshots(
-    root: str, keep_last: int = 3, delete_orphan_files: bool = True
-) -> dict[str, Any]:
+def expire_snapshots(root: str, keep_last: int = 3) -> dict[str, Any]:
     """Expire all but the newest ``keep_last`` snapshots (the Iceberg
     ``expire_snapshots`` maintenance action): expired manifests are deleted,
     and data/lineage/registry files referenced ONLY by expired snapshots are
@@ -550,19 +551,15 @@ def expire_snapshots(
     COMMITS are safe (they only create strictly newer manifests, which are
     always retained), concurrent expires are not coordinated.
     """
-    d = os.path.join(root, _MANIFEST_DIR)
-    names = sorted(
-        n for n in os.listdir(d) if n.startswith("manifest-") and n.endswith(".json")
-    ) if os.path.isdir(d) else []
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
+    names = _manifest_names(root)
     expired, retained = names[:-keep_last], names[-keep_last:]
     if not expired:
         return {"expired_snapshots": 0, "deleted_files": 0, "retained": len(retained)}
 
     def refs(name: str) -> set[str]:
-        with open(_manifest_path(root, name)) as f:
-            m = {**_empty_manifest(), **json.load(f)}
+        m = _read_manifest(root, name)
         return set(m["data_files"]) | set(m["lineage_files"]) | set(m["input_file_files"])
 
     live = set()
@@ -570,13 +567,12 @@ def expire_snapshots(
         live |= refs(name)
     deleted = 0
     for name in expired:
-        if delete_orphan_files:
-            for f in refs(name) - live:
-                try:
-                    os.remove(f)
-                    deleted += 1
-                except OSError:
-                    pass
+        for f in refs(name) - live:
+            try:
+                os.remove(f)
+                deleted += 1
+            except OSError:
+                pass
         os.remove(_manifest_path(root, name))
     return {
         "expired_snapshots": len(expired),
@@ -586,14 +582,15 @@ def expire_snapshots(
 
 
 def list_parquet_files(path: str) -> list[str]:
-    """Absolute paths of the parquet part files under a just-written dir.
-
-    ``os.path.abspath`` is load-bearing (ADVICE r2): manifest paths are
-    joined against ``input_file_name()``, which Spark always reports in
-    absolute ``file:/...`` form. With a relative ``--table`` root the join
-    would silently never match, ``_seq`` would be NULL for every row, and
-    latest-wins would fall back to run_id ordering — the exact run-99 vs
-    run-100 bug ``file_seq`` exists to fix."""
+    """Absolute OS paths of the parquet part files under a just-written dir:
+    the form manifests store, and the form ``_file_path`` turns Spark's
+    file URI back into for the ``file_seq`` join. Both halves are
+    load-bearing (ADVICE r2): Spark reports every file as an absolute,
+    percent-encoded ``file:/...`` URI, so a relative ``--table`` root, or a
+    root holding a space, ``%``, ``+`` or ``#``, would otherwise never
+    match — ``_seq`` would be NULL for every row and latest-wins would fall
+    back to run_id ordering, the run-99-beats-run-100 bug ``file_seq``
+    exists to fix."""
     out = []
     for dirpath, _dirs, names in os.walk(os.path.abspath(path)):
         for n in names:

@@ -5,8 +5,8 @@ The batch pipeline dedups with a hash-groupBy (`operators/dedup.py`); a
 continuously-ingesting training-data pipeline needs the same guarantee as
 pages arrive: a page whose normalized-text fingerprint was already emitted
 — in this batch or any earlier one — must not be emitted again. Two
-variants, same fingerprint as `dedup.exact_dedup` / `textstats
-.with_fingerprint` (md5 of whitespace-normalized text):
+variants, same fingerprint as `dedup.exact_dedup`
+(`dedup.content_fingerprint`, md5 of whitespace-normalized text):
 
 - ``dedup_stream`` (no watermark): `dropDuplicates` over the fingerprint —
   exact forever, but the state store grows with one entry per distinct
@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from mistral_ocr_spark.operators.textstats import with_fingerprint
+from mistral_ocr_spark.operators.dedup import content_fingerprint
 from mistral_ocr_spark.sources.tables import PAGES_SCHEMA
 
 
@@ -43,7 +43,7 @@ def dedup_stream(
     first-seen fingerprints to ``out_dir``. See module docstring for the
     watermarked vs unbounded state trade."""
     pages = spark.readStream.schema(PAGES_SCHEMA).format("parquet").load(pages_dir)
-    fp = with_fingerprint(pages)
+    fp = pages.withColumn("fingerprint", content_fingerprint())
     if within_watermark is not None:
         deduped = fp.withWatermark("warc_ts", within_watermark).dropDuplicatesWithinWatermark(
             ["fingerprint"]

@@ -4,8 +4,10 @@ compaction, and the input-file registry's refresh-upsert semantics."""
 
 from __future__ import annotations
 
+import ast
 import json
 import os
+import pathlib
 import shutil
 import tempfile
 
@@ -15,6 +17,9 @@ from pyspark.sql import functions as F
 from mistral_ocr_spark import pipeline
 from mistral_ocr_spark.sources import catalog
 from mistral_ocr_spark.sources.fixtures import generate_pages
+
+# a table-root name Spark's file URIs percent-encode: space, '%', '+', '#'
+_ODD_ROOT = "t a%20b+c#d"
 
 
 @pytest.fixture()
@@ -140,29 +145,53 @@ def test_compaction_preserves_latest_wins(spark, table_root):
     assert set(m["data_files"]) <= set(m["file_seq"])
 
 
-def test_input_registry_refresh_upsert(spark, table_root):
+@pytest.mark.parametrize("subdir", ["", _ODD_ROOT], ids=["plain", "odd-chars"])
+def test_input_registry_refresh_upsert(spark, table_root, subdir):
     """Registering the same input twice upserts: one row per file (latest
-    refresh wins), with real byte sizes and row counts."""
-    src = os.path.join(table_root, "incoming")
+    refresh wins), with real paths, byte sizes and row counts — also under
+    a root whose name Spark percent-encodes in its file URIs, where the
+    row-count side and the binaryFile side must still name each file by
+    the same path to join."""
+    root = os.path.join(table_root, subdir)
+    src = os.path.join(root, "incoming")
     generate_pages(spark, 500, partitions=3).write.mode("overwrite").parquet(src)
 
-    catalog.register_input_files(spark, table_root, src, table="pages")
-    first = catalog.read_input_files(spark, table_root).collect()
+    catalog.register_input_files(spark, root, src, table="pages")
+    first = catalog.read_input_files(spark, root).collect()
     n_files = len(first)
     assert n_files >= 3
     assert sum(r.n_rows for r in first) == 500
     assert all(r.byte_size and r.byte_size > 0 for r in first)
     assert all(r.file_path.endswith(".parquet") for r in first)
+    assert all(os.path.exists(r.file_path) for r in first), [r.file_path for r in first]
 
-    m2 = catalog.register_input_files(spark, table_root, src, table="pages")
-    latest = catalog.read_input_files(spark, table_root)
+    m2 = catalog.register_input_files(spark, root, src, table="pages")
+    latest = catalog.read_input_files(spark, root)
     assert latest.count() == n_files  # upserted, not duplicated
-    raw = catalog.read_input_files(spark, table_root, latest_only=False)
+    raw = catalog.read_input_files(spark, root, latest_only=False)
     assert raw.count() == 2 * n_files  # both refreshes retained on disk
     # all surviving rows come from the second refresh
     seqs = {r.refreshed_at for r in latest.collect()}
     assert len(seqs) == 1
     assert len(m2["input_file_files"]) == 2
+
+
+def test_half_written_manifest_is_ignored(table_root):
+    """A committer killed between writing its temp file and linking it
+    leaves ``manifest-N.json.tmp-<id>`` behind; no reader, committer or
+    maintenance action may take it for a snapshot."""
+    catalog.commit_chunk(table_root, "r", 0, ["/d/a.parquet"], [])
+    tmp = catalog._manifest_path(table_root, "manifest-000000000002.json.tmp-x")
+    with open(tmp, "w") as f:
+        f.write('{"snapshot_id": 2, "data_fi')
+    assert [s["snapshot_id"] for s in catalog.snapshots(table_root)] == [1]
+    assert catalog.load_manifest(table_root)["snapshot_id"] == 1
+    assert catalog._latest_manifest(table_root)["snapshot_id"] == 1
+    assert catalog.commit_chunk(table_root, "r", 1, ["/d/b.parquet"], [])["snapshot_id"] == 2
+    assert [s["snapshot_id"] for s in catalog.snapshots(table_root)] == [1, 2]
+    res = catalog.expire_snapshots(table_root, keep_last=1)
+    assert res == {"expired_snapshots": 1, "deleted_files": 0, "retained": 1}
+    assert os.path.exists(tmp)
 
 
 def test_compact_preserves_concurrent_commit(spark, table_root, monkeypatch):
@@ -233,12 +262,14 @@ def test_advance_current_recovers_from_regression(table_root, monkeypatch):
     assert catalog.load_manifest(table_root)["snapshot_id"] == 2
 
 
-def test_latest_wins_with_relative_table_root(spark, table_root):
+@pytest.mark.parametrize("subdir", ["", _ODD_ROOT], ids=["plain", "odd-chars"])
+def test_latest_wins_with_relative_table_root(spark, table_root, subdir):
     """ADVICE r2: with a relative --table root, manifest paths must still
     match input_file_name()'s absolute form — otherwise every _seq joins
     NULL and latest-wins silently regresses to lexicographic run_id
-    ordering (run-99 would beat run-100)."""
-    rel_root = os.path.relpath(table_root, os.getcwd())
+    ordering (run-99 would beat run-100). The same holds for a root whose
+    name Spark percent-encodes in its file URIs."""
+    rel_root = os.path.relpath(os.path.join(table_root, subdir), os.getcwd())
     assert not os.path.isabs(rel_root)
     pages = generate_pages(spark, 200, partitions=2)
     pipeline.run(spark, pages, rel_root, run_id="run-99", n_chunks=1, num_partitions=2)
@@ -322,3 +353,28 @@ def test_expire_snapshots_removes_orphans_keeps_live(spark, table_root):
     # resume state survives: a re-run extracts nothing new
     m = catalog.load_manifest(table_root)
     assert set(m["committed_chunks"]["run-a"]) == {0, 1}
+
+
+def test_catalog_rules_live_in_one_place():
+    """Within catalog.py only ``_file_path`` maps Spark file URIs to paths,
+    only ``_manifest_names`` lists the manifest directory, only
+    ``_read_manifest`` parses a manifest, and only ``_latest`` builds the
+    latest-wins window — so copies of these rules cannot drift apart."""
+    owners = {"input_file_name": "_file_path", "listdir": "_manifest_names",
+              "scandir": "_manifest_names", "json.load": "_read_manifest",
+              "json.loads": "_read_manifest", "row_number": "_latest"}
+    tree = ast.parse(pathlib.Path(catalog.__file__).read_text())
+    found = []
+    for stmt in tree.body:
+        owner = stmt.name if isinstance(stmt, ast.FunctionDef) else "<module>"
+        for node in ast.walk(stmt):
+            if isinstance(node, ast.Attribute):
+                base = f"{node.value.id}." if isinstance(node.value, ast.Name) else ""
+                names = {base + node.attr, node.attr}
+            elif isinstance(node, ast.Name):
+                names = {node.id}
+            else:
+                continue
+            found += [f"catalog.py:{node.lineno} {owner}() uses {n}"
+                      for n in names if owners.get(n, owner) != owner]
+    assert not found, "catalog rule outside its one place:\n" + "\n".join(found)
