@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from mistral_ocr_spark.session import get_spark
 from mistral_ocr_spark.sources import catalog
+from mistral_ocr_spark.sources.tables import PAGES_SCHEMA
 
 
 def cmd_submit(args) -> int:
@@ -63,7 +64,9 @@ def cmd_submit(args) -> int:
         print(json.dumps({"streamed": True, "run_id": args.run_id, "docs": int(n or 0)}))
         return 0
     if args.pages:
-        pages = spark.read.parquet(args.pages)
+        # the declared schema spares a schema-inference job; not
+        # io.read_pages, whose hidden-url filter would change what submits
+        pages = spark.read.schema(PAGES_SCHEMA).parquet(args.pages)
     else:
         pages = generate_pages(spark, args.generate)
     if getattr(args, "robots", None):
@@ -334,7 +337,7 @@ def cmd_ingest(args) -> int:
         scratch_path(scratch, "ingest_committed_urls"),
     )
 
-    pages = spark.read.parquet(args.pages)
+    pages = spark.read.schema(PAGES_SCHEMA).parquet(args.pages)  # no inference job
     # one snapshot per url: latest warc_ts, content-hash tiebreak
     w = Window.partitionBy("url").orderBy(
         F.desc_nulls_last("warc_ts"), F.xxhash64("html")

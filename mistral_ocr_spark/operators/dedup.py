@@ -9,7 +9,7 @@ Scale notes (the 100 TB design point):
   shingles occurring in more than ``max_df`` documents are dropped before
   the join (stopword-shingles otherwise explode the join at web scale).
 - MinHash and SimHash signatures are each computed in *one* Arrow-batched
-  pandas pass: word/shingle hashing runs JVM-side, Python does only a
+  ``mapInArrow`` pass: word/shingle hashing runs JVM-side, Python does only a
   vectorized numpy reduction per doc. Candidate pairs verify with built-in
   array / bit functions — the O(n²) work never touches Python.
 - All hash functions are explicitly seeded/fixed — signatures are
@@ -21,12 +21,12 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mistral_ocr_spark import arrowcols as C
 from mistral_ocr_spark.scratch import materialize, scratch_path, scratch_table_dir
 from mistral_ocr_spark.session import partition_width, spread
 
@@ -303,16 +303,16 @@ def _minhash_batch_fn(num_hashes: int):
             ids = batch.column(0)
             col = batch.column(1)
             n_rows = batch.num_rows
-            offsets = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+            offsets = C.view(col.offsets).astype(np.int64)
             flat = (
-                col.values.to_numpy(zero_copy_only=False)
+                C.view(col.values)
                 .astype(np.int64)[offsets[0] : offsets[-1]]
                 .astype(np.uint64)
             )
             n = np.diff(offsets)
             valid = n > 0
             if col.null_count:
-                valid &= np.asarray(col.is_valid())  # NULL text → sentinel sig
+                valid &= C.valid_mask(col)  # NULL text → sentinel sig
             sigs = np.full((n_rows, num_hashes), _MAX32, dtype=np.uint64)
             if valid.any():
                 starts = offsets[:-1][valid] - offsets[0]
@@ -333,10 +333,8 @@ def _minhash_batch_fn(num_hashes: int):
                 [
                     ids,
                     pa.ListArray.from_arrays(
-                        pa.array(
-                            np.arange(n_rows + 1, dtype=np.int32) * num_hashes
-                        ),
-                        pa.array(out, type=pa.int64()),
+                        C.numbers(C.offsets(np.full(n_rows, num_hashes)), pa.int32()),
+                        C.numbers(out, pa.int64()),
                     ),
                 ],
                 names=["id", "sig"],
@@ -675,36 +673,39 @@ def _simhash_batch_fn():
     """numpy bit-majority over JVM-prehashed words, vectorized across the
     WHOLE Arrow batch (r6: the r5 version looped per doc — ~50 µs of
     numpy-call overhead × n_docs dominated the signature stage). The list
-    column arrives as one flat child array plus offsets, so the per-bit
-    counts for every doc in the batch are a single ``np.add.reduceat``
-    over the flat word-hash array — zero per-doc Python."""
+    column arrives as one flat child array plus offsets, so each bit's
+    counts for every doc in the batch are one ``np.add.reduceat`` over the
+    flat word-hash array — 32 passes per half, zero per-doc Python, and
+    ~8 B of scratch per word."""
     import pyarrow as pa
-
-    shifts = np.arange(32, dtype=np.int64)
-    pow2 = 1 << np.arange(32, dtype=np.int64)
 
     def half_sigs(col: "pa.Array", n_rows: int) -> np.ndarray:
         """32-bit majority signature per row of a list<int64> column."""
         sig = np.zeros(n_rows, dtype=np.int64)
-        offsets = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+        offsets = C.view(col.offsets).astype(np.int64)
         # slice by the batch's own offsets: .values spans the whole child
         # buffer even for a sliced ListArray, and reduceat's final segment
         # runs to the end of whatever array it is given
-        flat = col.values.to_numpy(zero_copy_only=False).astype(np.int64)[
-            offsets[0] : offsets[-1]
-        ]
+        flat = C.view(col.values).astype(np.int64, copy=False)[offsets[0] : offsets[-1]]
         n = np.diff(offsets)
         valid = n > 0
         if col.null_count:
-            valid &= np.asarray(col.is_valid())  # NULL text → all-zero sig
+            valid &= C.valid_mask(col)  # NULL text → all-zero sig
         if not valid.any():
             return sig
         starts = offsets[:-1][valid] - offsets[0]
-        bits = (flat[:, None] >> shifts) & 1  # (total_words, 32)
-        # reduceat segment i spans [starts[i], starts[i+1]): exactly row
-        # i's words (skipped empty/null rows contribute no flat elements)
-        cnts = np.add.reduceat(bits, starts, axis=0)  # (n_valid, 32)
-        sig[valid] = ((cnts * 2 > n[valid][:, None]) * pow2).sum(axis=1)
+        n_valid = n[valid]
+        acc = np.zeros(len(starts), dtype=np.int64)
+        bit = np.empty_like(flat)
+        for k in range(32):
+            # one bit at a time keeps the scratch at ~8 B per word (a
+            # (total_words, 32) bit matrix is 256 B per word). reduceat
+            # segment i spans [starts[i], starts[i+1]): exactly row i's
+            # words (skipped empty/null rows add no flat elements)
+            np.right_shift(flat, k, out=bit)
+            np.bitwise_and(bit, 1, out=bit)
+            acc |= (np.add.reduceat(bit, starts) * 2 > n_valid).astype(np.int64) << k
+        sig[valid] = acc
         return sig
 
     def fn(batches):
@@ -714,8 +715,8 @@ def _simhash_batch_fn():
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column(0),
-                    pa.array(los, type=pa.int64()),
-                    pa.array(his, type=pa.int64()),
+                    C.numbers(los, pa.int64()),
+                    C.numbers(his, pa.int64()),
                 ],
                 names=["id", "sim_lo", "sim_hi"],
             )
@@ -800,11 +801,11 @@ def _simhash_bucket_pair_fn(max_hamming: int, small_max: int = 64, row_chunk: in
 
         for batch in batches:
             members = batch.column(0)
-            offsets = members.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+            offsets = C.view(members.offsets).astype(np.int64)
             vals = members.values
-            ids = vals.field("id").to_numpy(zero_copy_only=False).astype(np.int64)
-            lo = vals.field("sim_lo").to_numpy(zero_copy_only=False).astype(np.int64)
-            hi = vals.field("sim_hi").to_numpy(zero_copy_only=False).astype(np.int64)
+            ids = C.view(vals.field("id"))
+            lo = C.view(vals.field("sim_lo"))
+            hi = C.view(vals.field("sim_hi"))
             sizes = np.diff(offsets)
             starts = offsets[:-1]
             out_a: list[np.ndarray] = []
@@ -846,11 +847,9 @@ def _simhash_bucket_pair_fn(max_hamming: int, small_max: int = 64, row_chunk: in
                 ib = np.concatenate(out_b)
                 yield pa.RecordBatch.from_arrays(
                     [
-                        pa.array(np.minimum(ia, ib), type=pa.int64()),
-                        pa.array(np.maximum(ia, ib), type=pa.int64()),
-                        pa.array(
-                            np.concatenate(out_h).astype(np.int32), type=pa.int32()
-                        ),
+                        C.numbers(np.minimum(ia, ib), pa.int64()),
+                        C.numbers(np.maximum(ia, ib), pa.int64()),
+                        C.numbers(np.concatenate(out_h), pa.int32()),
                     ],
                     names=["id_a", "id_b", "hamming"],
                 )

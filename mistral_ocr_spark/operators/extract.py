@@ -7,18 +7,26 @@ per-document parser runs as plain Python over the Arrow buffers (HTML
 parsing is inherently per-document), with all regexes/parsers compiled
 module-level so they are reused across batches by the long-lived Python
 worker (SURVEY.md §4.2 point 3).
+
+Output columns are built by ``mistral_ocr_spark.arrowcols`` straight from
+the per-document lists (offsets, validity and data buffers), never through
+``pa.array``: pyarrow imports pandas on the first ``pa.array`` call, which
+used to cost every worker ~35 MB of resident memory and ~0.29 s of CPU on
+its first batch (ARCHITECTURE.md "Arrow kernels never import pandas").
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pyarrow as pa
 
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 
 from mistral_ocr_spark import EXTRACTOR_VERSION
+from mistral_ocr_spark import arrowcols as C
 from mistral_ocr_spark.extractor import ExtractResult, extract
 
 _FAILED = ExtractResult(None, None, [], "extractor_error", None)
@@ -60,9 +68,9 @@ def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatc
         encs: list[str | None] = []
         nbytes: list[int] = []
         spans: list[tuple[int, int, str]] = []
-        span_offsets = [0]
+        span_counts: list[int] = []
         images: list[str] = []
-        image_offsets = [0]
+        image_counts: list[int] = []
 
         for raw, fb in zip(batch.column("html").to_pylist(), batch.column("text").to_pylist()):
             try:
@@ -79,9 +87,9 @@ def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatc
             encs.append(r.encoding)
             nbytes.append(len(raw) if raw is not None else 0)
             spans += r.spans
-            span_offsets.append(len(spans))
+            span_counts.append(len(r.spans))
             images += r.images
-            image_offsets.append(len(images))
+            image_counts.append(len(r.images))
 
         starts, ends, kinds = zip(*spans) if spans else ((), (), ())
         yield pa.RecordBatch.from_arrays(
@@ -89,27 +97,27 @@ def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatc
                 batch.column("url"),
                 batch.column("warc_ts"),
                 batch.column("lang"),
-                pa.array(texts, pa.string()),
-                pa.array(mds, pa.string()),
+                C.strings(texts),
+                C.strings(mds),
                 pa.ListArray.from_arrays(
-                    pa.array(span_offsets, pa.int32()),
+                    C.numbers(C.offsets(span_counts), pa.int32()),
                     pa.StructArray.from_arrays(
                         [
-                            pa.array(starts, pa.int64()),
-                            pa.array(ends, pa.int64()),
-                            pa.array(kinds, pa.string()),
+                            C.numbers(starts, pa.int64()),
+                            C.numbers(ends, pa.int64()),
+                            C.strings(kinds),
                         ],
                         fields=list(_ARROW_SPAN),
                     ),
                 ),
                 pa.ListArray.from_arrays(
-                    pa.array(image_offsets, pa.int32()), pa.array(images, pa.string())
+                    C.numbers(C.offsets(image_counts), pa.int32()), C.strings(images)
                 ),
-                pa.array(errs, pa.string()),
-                pa.array(encs, pa.string()),
-                pa.array([EXTRACTOR_VERSION] * n, pa.string()),
-                pa.array(nbytes, pa.int64()),
-                pa.array([pid] * n, pa.int32()),
+                C.strings(errs),
+                C.strings(encs),
+                C.strings([EXTRACTOR_VERSION] * n),
+                C.numbers(nbytes, pa.int64()),
+                C.numbers(np.full(n, pid, dtype=np.int32), pa.int32()),
             ],
             schema=ARROW_EXTRACTED_SCHEMA,
         )

@@ -29,6 +29,8 @@ from collections.abc import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
+from mistral_ocr_spark import arrowcols as C
+
 _FORMS = ("NFC", "NFKC", "NFD", "NFKD")
 
 
@@ -52,16 +54,22 @@ def with_normalized_text(
         else T.StructType(list(df.schema.fields) + [T.StructField(out, T.StringType(), True)])
     )
 
+    return df.mapInArrow(_normalize_fn(idx, form, out, replace=out == text_col), out_schema)
+
+
+def _normalize_fn(idx: int, form: str, name: str, replace: bool):
+    """mapInArrow kernel: normalize column ``idx`` and either replace it
+    or append the result as ``name``."""
+
     def norm_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         norm = unicodedata.normalize
         for batch in batches:
-            normalized = pa.array(
-                [None if v is None else norm(form, v) for v in batch.column(idx).to_pylist()],
-                pa.string(),
+            normalized = C.strings(
+                [None if v is None else norm(form, v) for v in batch.column(idx).to_pylist()]
             )
-            if out == text_col:
-                yield batch.set_column(idx, text_col, normalized)
+            if replace:
+                yield batch.set_column(idx, name, normalized)
             else:
-                yield batch.append_column(out, normalized)
+                yield batch.append_column(name, normalized)
 
-    return df.mapInArrow(norm_batches, out_schema)
+    return norm_batches

@@ -20,7 +20,7 @@ Scale design (the asymmetry is the point):
 - **Training runs on the labeled sample** (fastText quality classifiers
   train on 10^5-10^7 docs, not the corpus): features materialize ONCE to
   scratch parquet as per-doc ragged arrays; each GD iteration is one
-  narrow ``mapInPandas`` pass — vectorized numpy (``np.bincount`` over
+  narrow ``mapInArrow`` pass — vectorized numpy (``np.bincount`` over
   the flattened feature stream) emits ONE dense gradient partial per
   Arrow batch, summed on the driver. No per-iteration shuffle at all;
   collect volume = n_batches × n_buckets × 8 B.
@@ -38,11 +38,11 @@ import math
 import os
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mistral_ocr_spark import arrowcols as C
 from mistral_ocr_spark.operators import dsir
 from mistral_ocr_spark.scratch import materialize, scratch_path, scratch_table_dir
 from mistral_ocr_spark.session import spread
@@ -103,6 +103,8 @@ def _train_features_fn(n_buckets: int, salt: str):
     sb = ("|" + salt).encode("utf-8")
 
     def fn(batches):
+        import pandas as pd
+
         for pdf in batches:
             ys, bss, xss = [], [], []
             for y, t in zip(pdf["_y"], pdf["_t"]):
@@ -144,6 +146,66 @@ def _sigmoid(z: np.ndarray) -> np.ndarray:
     ez = np.exp(z[~pos])
     out[~pos] = ez / (1.0 + ez)
     return out
+
+
+def _grad_fn(model, V: int):
+    """mapInArrow kernel of one GD iteration: one dense gradient partial
+    (plus error sum, row count and log-loss) per Arrow batch of the
+    materialized (_y, _bs, _xs) features. ``model.value`` is the (w, bias)
+    broadcast of this iteration."""
+
+    def _grad(batches):
+        # Arrow batches: the ragged (_bs, _xs) arrays arrive as ONE flat
+        # child buffer + offsets per batch — zero-copy numpy, no per-row
+        # list materialization (r6: the pandas form spent most of each GD
+        # iteration converting 50k object-dtype lists; the math below is
+        # unchanged)
+        import pyarrow as pa
+
+        bw, bb = model.value
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            y = C.view(batch.column(0))
+            bs, xs = batch.column(1), batch.column(2)
+            offs = C.view(bs.offsets).astype(np.int64)
+            lens = np.diff(offs)
+            if lens.sum() == 0:
+                dots = np.zeros(batch.num_rows)
+                fb = np.empty(0, dtype=np.int64)
+                fx = np.empty(0, dtype=np.float64)
+            else:
+                # slice by this batch's own offsets: .values spans the
+                # whole child buffer even for a sliced ListArray
+                xoffs = C.view(xs.offsets).astype(np.int64)
+                fb = C.view(bs.values)[offs[0] : offs[-1]]
+                fx = C.view(xs.values)[xoffs[0] : xoffs[-1]]
+                seg = np.repeat(np.arange(batch.num_rows), lens)
+                dots = np.bincount(
+                    seg, weights=fx * bw[fb], minlength=batch.num_rows
+                )
+            p = _sigmoid(dots + bb)
+            err = p - y
+            gvec = (
+                np.bincount(fb, weights=fx * np.repeat(err, lens), minlength=V)
+                if len(fb)
+                else np.zeros(V)
+            )
+            eps = 1e-12
+            loss = -np.sum(
+                y * np.log(p + eps) + (1.0 - y) * np.log(1.0 - p + eps)
+            )
+            yield pa.RecordBatch.from_arrays(
+                [
+                    C.binaries([gvec.tobytes()]),
+                    C.numbers([float(err.sum())], pa.float64()),
+                    C.numbers([batch.num_rows], pa.int64()),
+                    C.numbers([float(loss)], pa.float64()),
+                ],
+                names=["g", "gb", "n", "loss"],
+            )
+
+    return _grad
 
 
 def train_quality_classifier(
@@ -200,64 +262,8 @@ def train_quality_classifier(
     sc = spark.sparkContext
     for _ in range(n_iters):
         bc = sc.broadcast((w, bias))
-
-        def _grad(batches):
-            # Arrow batches: the ragged (_bs, _xs) arrays arrive as ONE
-            # flat child buffer + offsets per batch — zero-copy numpy,
-            # no per-row list materialization (r6: the pandas form spent
-            # most of each GD iteration converting 50k object-dtype
-            # lists; the math below is unchanged)
-            import pyarrow as pa
-
-            bw, bb = bc.value
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                y = batch.column(0).to_numpy(zero_copy_only=False).astype(np.float64)
-                bs, xs = batch.column(1), batch.column(2)
-                offs = bs.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-                lens = np.diff(offs)
-                if lens.sum() == 0:
-                    dots = np.zeros(batch.num_rows)
-                    fb = np.empty(0, dtype=np.int64)
-                    fx = np.empty(0, dtype=np.float64)
-                else:
-                    # slice by this batch's own offsets: .values spans the
-                    # whole child buffer even for a sliced ListArray
-                    xoffs = xs.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-                    fb = bs.values.to_numpy(zero_copy_only=False).astype(np.int64)[
-                        offs[0] : offs[-1]
-                    ]
-                    fx = xs.values.to_numpy(zero_copy_only=False).astype(np.float64)[
-                        xoffs[0] : xoffs[-1]
-                    ]
-                    seg = np.repeat(np.arange(batch.num_rows), lens)
-                    dots = np.bincount(
-                        seg, weights=fx * bw[fb], minlength=batch.num_rows
-                    )
-                p = _sigmoid(dots + bb)
-                err = p - y
-                gvec = (
-                    np.bincount(fb, weights=fx * np.repeat(err, lens), minlength=V)
-                    if len(fb)
-                    else np.zeros(V)
-                )
-                eps = 1e-12
-                loss = -np.sum(
-                    y * np.log(p + eps) + (1.0 - y) * np.log(1.0 - p + eps)
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([gvec.tobytes()], type=pa.binary()),
-                        pa.array([float(err.sum())], type=pa.float64()),
-                        pa.array([int(batch.num_rows)], type=pa.int64()),
-                        pa.array([float(loss)], type=pa.float64()),
-                    ],
-                    names=["g", "gb", "n", "loss"],
-                )
-
         parts = tdf.mapInArrow(
-            _grad, "g binary, gb double, n bigint, loss double"
+            _grad_fn(bc, V), "g binary, gb double, n bigint, loss double"
         ).collect()
         bc.unpersist()
         grad = np.zeros(V, dtype=np.float64)
@@ -275,6 +281,8 @@ def train_quality_classifier(
         losses.append(loss / n)
         w -= lr * (grad / n + l2 * w)
         bias -= lr * (gb / n)
+
+    import pandas as pd
 
     nz = np.flatnonzero(w)
     # explicit schema: an all-zero weight vector (legitimate bias-only

@@ -29,6 +29,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mistral_ocr_spark import arrowcols as C
 from mistral_ocr_spark.session import partition_width
 
 
@@ -623,18 +624,14 @@ def _semdedup_cluster_fn(threshold: float, row_chunk: int = 1024):
 
         for batch in batches:
             members = batch.column(1)
-            offs = members.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+            offs = C.view(members.offsets).astype(np.int64)
             vals = members.values
-            ids_all = vals.field("vec_id").to_numpy(zero_copy_only=False).astype(
-                np.int64
-            )
-            cs_all = vals.field("cent_sim").to_numpy(zero_copy_only=False).astype(
-                np.float64
-            )
+            ids_all = C.view(vals.field("vec_id"))
+            cs_all = C.view(vals.field("cent_sim"))
             uu = vals.field("_u")
-            uoffs = uu.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            uflat = uu.values.to_numpy(zero_copy_only=False).astype(np.float64)
-            cids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int32)
+            uoffs = C.view(uu.offsets).astype(np.int64)
+            uflat = C.view(uu.values)
+            cids = C.view(batch.column(0))
             out_id, out_cid, out_cs, out_keep = [], [], [], []
             for g in range(batch.num_rows):
                 s, e = offs[g], offs[g + 1]
@@ -663,10 +660,10 @@ def _semdedup_cluster_fn(threshold: float, row_chunk: int = 1024):
             if out_id:
                 yield pa.RecordBatch.from_arrays(
                     [
-                        pa.array(np.concatenate(out_id), type=pa.int64()),
-                        pa.array(np.concatenate(out_cid), type=pa.int32()),
-                        pa.array(np.concatenate(out_cs), type=pa.float64()),
-                        pa.array(np.concatenate(out_keep), type=pa.bool_()),
+                        C.numbers(np.concatenate(out_id), pa.int64()),
+                        C.numbers(np.concatenate(out_cid), pa.int32()),
+                        C.numbers(np.concatenate(out_cs), pa.float64()),
+                        C.bools(np.concatenate(out_keep)),
                     ],
                     names=["vec_id", "centroid_id", "cent_sim", "keep"],
                 )

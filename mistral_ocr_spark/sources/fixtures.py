@@ -26,6 +26,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mistral_ocr_spark import arrowcols as C
 from mistral_ocr_spark.sources.tables import PAGES_SCHEMA
 
 # ---------------------------------------------------------------------------
@@ -313,7 +314,10 @@ def _gen_batches(
 ) -> Iterator[pa.RecordBatch]:
     import datetime as _dt
 
-    base = _dt.datetime(2024, 1, 1, 10, 0, 0)
+    # warc_ts as microseconds since the epoch, read as naive wall-clock time
+    base_us = (_dt.datetime(2024, 1, 1, 10, 0, 0) - _dt.datetime(1970, 1, 1)) // _dt.timedelta(
+        microseconds=1
+    )
     for batch in batches:
         ids = batch.column("id").to_pylist()
         urls, htmls, texts, langs, tss = [], [], [], [], []
@@ -323,14 +327,14 @@ def _gen_batches(
             htmls.append(html)
             texts.append(text)
             langs.append(lang)
-            tss.append(base + _dt.timedelta(seconds=i % 86400))
+            tss.append(base_us + (i % 86400) * 1_000_000)
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array(urls, pa.string()),
-                pa.array(tss, pa.timestamp("us")),
-                pa.array(htmls, pa.binary()),
-                pa.array(texts, pa.string()),
-                pa.array(langs, pa.string()),
+                C.strings(urls),
+                C.numbers(tss, pa.timestamp("us")),
+                C.binaries(htmls),
+                C.strings(texts),
+                C.strings(langs),
             ],
             names=["url", "warc_ts", "html", "text", "lang"],
         )

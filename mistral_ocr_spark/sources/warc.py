@@ -39,6 +39,8 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
+from mistral_ocr_spark import arrowcols as C
+
 ARROW_WARC_SCHEMA = pa.schema(
     [
         ("src_id", pa.int64()),        # input blob id (lineage back-pointer)
@@ -193,15 +195,15 @@ def warc_record_batches(
                      f"malformed record at byte {err_off}".encode())
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array(cols["src_id"], pa.int64()),
-                pa.array(cols["rec_index"], pa.int32()),
-                pa.array(cols["warc_type"], pa.string()),
-                pa.array(cols["record_id"], pa.string()),
-                pa.array(cols["warc_date"], pa.string()),
-                pa.array(cols["url"], pa.string()),
-                pa.array(cols["http_status"], pa.int32()),
-                pa.array(cols["http_content_type"], pa.string()),
-                pa.array(cols["body"], pa.binary()),
+                C.numbers(cols["src_id"], pa.int64()),
+                C.numbers(cols["rec_index"], pa.int32()),
+                C.strings(cols["warc_type"]),
+                C.strings(cols["record_id"]),
+                C.strings(cols["warc_date"]),
+                C.strings(cols["url"]),
+                C.numbers(cols["http_status"], pa.int32()),
+                C.strings(cols["http_content_type"]),
+                C.binaries(cols["body"]),
             ],
             schema=ARROW_WARC_SCHEMA,
         )

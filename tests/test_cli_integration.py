@@ -317,3 +317,42 @@ def test_cli_ingest_successive_batches_and_resume(table, capsys):
         .groupBy("url").count().filter("count > 1").count()
     )
     assert per_url == 0  # no url ever committed twice across the runs
+
+
+@pytest.mark.parametrize("verb", ["submit", "ingest"])
+def test_cli_reads_pages_without_a_job(table, monkeypatch, verb):
+    """submit and ingest scan ``--pages`` with the declared pages schema:
+    the read itself runs no Spark job (an inferred-schema parquet read runs
+    one). The read is intercepted and the verb stopped right after it."""
+    from pyspark.sql import SparkSession
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from mistral_ocr_spark.sources.fixtures import generate_pages
+
+    tbl, root = table
+    spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
+    pages = f"{root}/pages"
+    generate_pages(spark, 20, partitions=2).write.parquet(pages)
+
+    class PagesRead(Exception):
+        pass
+
+    sc = spark.sparkContext
+    group = f"test-cli-{verb}-pages-read"
+    real_parquet = DataFrameReader.parquet
+
+    def parquet(self, *paths, **options):
+        if paths != (pages,):
+            return real_parquet(self, *paths, **options)
+        sc.setJobGroup(group, f"{verb} reads --pages")
+        try:
+            real_parquet(self, *paths, **options)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        raise PagesRead
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    with pytest.raises(PagesRead):
+        cli.main([verb, "--table", tbl, "--pages", pages])
+    assert sc.statusTracker().getJobIdsForGroup(group) == []

@@ -5,6 +5,7 @@ short-document shingle CASE both engines must agree on."""
 from __future__ import annotations
 
 import duckdb
+import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
@@ -260,6 +261,75 @@ def test_simhash_banding_is_exact_vs_all_pairs(spark):
         .collect()
     }
     assert blocked == brute and len(brute) > 0
+
+
+def _word_hash_batch(rng, lengths, null_rows=()):
+    """(id, wlo, whi) batch of list<bigint> word-hash columns: the 32-bit
+    halves ``simhash_signatures`` hands its kernel. ``null_rows`` are null
+    and, as in the batches Spark sends, span no words."""
+    import pyarrow as pa
+
+    from mistral_ocr_spark import arrowcols as C
+
+    lengths = np.array(lengths)
+    lengths[list(null_rows)] = 0
+    offsets = C.numbers(C.offsets(lengths), pa.int32())
+    total = int(np.sum(lengths))
+    valid = np.ones(len(lengths), dtype=bool)
+    valid[list(null_rows)] = False
+    mask = pa.py_buffer(np.packbits(valid, bitorder="little"))
+
+    def column():
+        words = C.numbers(rng.integers(0, 1 << 32, size=total), pa.int64())
+        return pa.ListArray.from_buffers(
+            pa.list_(pa.int64()), len(lengths), [mask, offsets.buffers()[1]],
+            null_count=int((~valid).sum()), children=[words],
+        )
+
+    ids = C.numbers(np.arange(len(lengths)), pa.int64())
+    return pa.RecordBatch.from_arrays([ids, column(), column()], names=["id", "wlo", "whi"])
+
+
+def _majority_sig(words) -> int:
+    """One doc's 32-bit majority signature by the (words, 32) bit-matrix
+    form the kernel used to build for a whole batch."""
+    if not words:
+        return 0
+    w = np.asarray(words, dtype=np.int64)
+    cnt = ((w[:, None] >> np.arange(32)) & 1).sum(axis=0)
+    return int(((cnt * 2 > len(w)) * (1 << np.arange(32, dtype=np.int64))).sum())
+
+
+def test_simhash_kernel_equals_bit_matrix_form_on_long_docs():
+    rng = np.random.default_rng(7)
+    lengths = rng.integers(2000, 9000, size=24)
+    lengths[[3, 11]] = 0  # empty docs
+    batch = _word_hash_batch(rng, lengths, null_rows=(5, 17))
+    for part in (batch, batch.slice(4, 15)):
+        (out,) = D._simhash_batch_fn()(iter([part]))
+        for col, name in ((1, "sim_lo"), (2, "sim_hi")):
+            want = [_majority_sig(v or []) for v in part.column(col).to_pylist()]
+            assert out.column(name).to_pylist() == want
+
+
+def test_simhash_kernel_scratch_is_bounded_per_word():
+    """~10^6 words in one batch: the kernel's Python-heap peak stays near
+    its 8 B/word bit scratch (the input is already an Arrow buffer). The
+    (total_words, 32) int64 bit matrix it replaced took 256 B/word."""
+    import tracemalloc
+
+    rng = np.random.default_rng(3)
+    lengths = np.full(100, 10_000)
+    batch = _word_hash_batch(rng, lengths)
+    n_words = int(lengths.sum())
+    tracemalloc.start()
+    try:
+        (out,) = D._simhash_batch_fn()(iter([batch]))
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert out.num_rows == 100
+    assert peak < 16 * n_words, peak
 
 
 @pytest.mark.parametrize(
