@@ -9,19 +9,28 @@ uses pandas, yet that import costs a worker ~0.29 s of CPU and ~35 MB of
 resident memory on its first batch.
 
 The functions here touch only numpy, which ``pyspark.worker`` already
-imports, plus ``pa.py_buffer`` and ``pa.Array.from_buffers``:
+imports, plus ``pa.py_buffer`` and the ``from_buffers`` / ``from_arrays``
+constructors:
 
 - build: ``strings`` / ``binaries`` / ``numbers`` / ``bools`` from Python
   lists (``None`` is a null) or numpy arrays;
-- read: ``view`` is a zero-copy numpy view of a numeric array, and
-  ``valid_mask`` is an array's validity as a bool ndarray.
+- build: ``lists`` wraps a child column into a ``list`` column, and
+  ``batch`` is one output batch of a kernel, each column built by the type
+  the kernel's declared Spark schema gives it;
+- read: ``view`` is a zero-copy numpy view of a numeric array,
+  ``valid_mask`` is an array's validity as a bool ndarray, and ``matrix``
+  is a column of equal-length vectors as one float64 matrix.
 
-``mapInPandas`` kernels keep using pandas; this module is for the Arrow ones.
+String and binary columns are read with ``Array.to_pylist``, which does
+not import pandas either. Every Python kernel of the package is a
+``mapInArrow`` kernel over this module; the one exception is the streaming
+state store, as ``applyInPandasWithState`` has no Arrow form.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import functools
+from collections.abc import Iterable, Sequence
 
 import numpy as np
 import pyarrow as pa
@@ -136,6 +145,54 @@ def bools(values) -> pa.Array:
     )
 
 
+def lists(counts, child: pa.Array) -> pa.Array:
+    """A ``list`` column whose i-th list holds the next ``counts[i]`` items
+    of ``child``; no list is null."""
+    return pa.ListArray.from_arrays(numbers(offsets(counts), pa.int32()), child)
+
+
+# the column builder of each Spark type a kernel builds from Python values
+_DDL_BUILDERS = {
+    "string": strings,
+    "binary": binaries,
+    "boolean": bools,
+    "int": functools.partial(numbers, type=pa.int32()),
+    "bigint": functools.partial(numbers, type=pa.int64()),
+    "long": functools.partial(numbers, type=pa.int64()),
+    "double": functools.partial(numbers, type=pa.float64()),
+}
+
+
+@functools.lru_cache(maxsize=None)
+def _ddl_fields(ddl: str) -> tuple[tuple[str, str], ...]:
+    """(name, type) pairs of a Spark DDL schema string; a comma inside
+    ``<>`` or ``()`` belongs to its type."""
+    fields, depth, start = [], 0, 0
+    for i, ch in enumerate(ddl + ","):
+        depth += (ch in "<(") - (ch in ">)")
+        if ch == "," and depth == 0:
+            name, type = ddl[start:i].split(None, 1)
+            fields.append((name, type.strip().lower()))
+            start = i + 1
+    return tuple(fields)
+
+
+def batch(schema, columns: Iterable) -> pa.RecordBatch:
+    """One output batch of a ``mapInArrow`` kernel. ``schema`` is the
+    schema the kernel declares to Spark (a DDL string or a ``StructType``)
+    and ``columns`` holds one column per field, in order: an Arrow array
+    passes as is; a list or ndarray is built by its field's type."""
+    if isinstance(schema, str):
+        fields = _ddl_fields(schema)
+    else:
+        fields = [(f.name, f.dataType.simpleString()) for f in schema.fields]
+    arrays = [
+        values if isinstance(values, pa.Array) else _DDL_BUILDERS[type](values)
+        for (_, type), values in zip(fields, columns)
+    ]
+    return pa.RecordBatch.from_arrays(arrays, names=[name for name, _ in fields])
+
+
 def view(arr: pa.Array) -> np.ndarray:
     """Zero-copy, read-only numpy view of a numeric array, sliced arrays
     included. Stands in for ``arr.to_numpy(zero_copy_only=False)``: a float
@@ -164,3 +221,21 @@ def valid_mask(arr: pa.Array) -> np.ndarray:
         return np.ones(len(arr), dtype=bool)
     bits = np.unpackbits(np.frombuffer(bitmap, dtype=np.uint8), bitorder="little")
     return bits[arr.offset : arr.offset + len(arr)].astype(bool)
+
+
+def matrix(arr: pa.Array) -> np.ndarray:
+    """(rows, dim) float64 matrix of a ``list`` column of numeric vectors,
+    sliced arrays included. Raises ``ValueError`` on a null vector, a null
+    element or vectors of different lengths, which would otherwise enter
+    the math as NaN or as a misshapen matrix."""
+    if arr.null_count:
+        raise ValueError(f"{arr.null_count} null vectors in {arr.type}")
+    offs = view(arr.offsets).astype(np.int64)
+    lens = np.diff(offs)
+    dim = int(lens[0]) if len(lens) else 0
+    if (lens != dim).any():
+        raise ValueError(f"vectors of {dim} and {int(lens[lens != dim][0])} elements")
+    flat = arr.values.slice(offs[0], offs[-1] - offs[0])
+    if flat.null_count:
+        raise ValueError(f"{flat.null_count} null elements in {arr.type} vectors")
+    return view(flat).astype(np.float64, copy=False).reshape(len(arr), dim)

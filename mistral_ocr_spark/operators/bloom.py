@@ -13,7 +13,7 @@ bitmap build here is from scratch:
 
 1. key hashing stays JVM-side (two independent ``xxhash64`` seeds);
 2. each partition folds its hashes into ONE ``n_bits/8``-byte numpy bitmap
-   inside a single ``mapInPandas`` pass (bounded memory per task — the
+   inside a single ``mapInArrow`` pass (bounded memory per task — the
    bitmap, never the keys);
 3. partition bitmaps are OR-merged in a tree: an optional intermediate
    ``repartition(G)`` OR stage bounds what the final single-task OR (and
@@ -49,11 +49,16 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
+import numpy as np
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mistral_ocr_spark import arrowcols as C
+
 _H1_SEED = "bloom-h1"  # xxhash64 second-arg salts: independent h1/h2 streams
 _H2_SEED = "bloom-h2"
+_BITMAP_SCHEMA = "bitmap binary"  # the fold kernels' one-row output
 
 
 def bloom_sizing(expected_items: int, fpp: float) -> tuple[int, int]:
@@ -85,9 +90,7 @@ class BloomFilter:
 def _hash_cols(col: str) -> list:
     """Two independent JVM-side 64-bit hashes of the key column. Never
     NULL-valued (xxhash64 of a NULL input collapses to the seed constant),
-    so the columns cross Arrow→pandas as exact int64 — a nullable long
-    would be promoted to float64 and corrupt hash values above 2^53.
-    Callers handle NULL keys separately (build filters them out, probe
+    so callers handle NULL keys separately (build filters them out, probe
     masks them via ``_bknull``) so all NULLs don't alias one key."""
     c = F.col(col)
     return [
@@ -97,22 +100,18 @@ def _hash_cols(col: str) -> list:
 
 
 def _bitmap_fold_fn(n_bits: int, n_hashes: int, h1_col: str, h2_col: str):
-    """mapInPandas kernel: fold a partition's (h1, h2) rows into one
+    """mapInArrow kernel: fold a partition's (h1, h2) rows into one
     bitmap row. Memory = the bitmap + one Arrow batch, never the keys."""
-    import numpy as np
-    import pandas as pd
 
     def fn(batches):
         bm = np.zeros(n_bits // 8, dtype=np.uint8)
         touched = False
-        for pdf in batches:
+        for batch in batches:
             touched = True
-            if pdf.empty:
+            if batch.num_rows == 0:
                 continue
-            # non-null by construction (build filters NULL keys upstream),
-            # so the columns arrive as exact int64, never float64
-            h1 = pdf[h1_col].to_numpy(dtype=np.int64).view(np.uint64)
-            h2 = pdf[h2_col].to_numpy(dtype=np.int64).view(np.uint64)
+            h1 = C.view(batch.column(h1_col)).view(np.uint64)
+            h2 = C.view(batch.column(h2_col)).view(np.uint64)
             # all k positions for the batch at once; uint64 wrap-around is
             # deterministic and identical on the probe side, so
             # (h1 + i*h2) mod n_bits is consistent between build and probe
@@ -132,25 +131,23 @@ def _bitmap_fold_fn(n_bits: int, n_hashes: int, h1_col: str, h2_col: str):
                 minlength=n_bits // 8,
             ).astype(np.uint8)
         if touched:
-            yield pd.DataFrame({"bitmap": [bm.tobytes()]})
+            yield C.batch(_BITMAP_SCHEMA, [[bm.tobytes()]])
 
     return fn
 
 
 def _or_fold_fn(n_bytes: int):
-    """mapInPandas kernel: OR a partition's bitmap rows into one."""
-    import numpy as np
-    import pandas as pd
+    """mapInArrow kernel: OR a partition's bitmap rows into one."""
 
     def fn(batches):
         acc = np.zeros(n_bytes, dtype=np.uint8)
         touched = False
-        for pdf in batches:
-            for blob in pdf["bitmap"]:
+        for batch in batches:
+            for blob in batch.column(0).to_pylist():
                 acc |= np.frombuffer(blob, dtype=np.uint8)
                 touched = True
         if touched:
-            yield pd.DataFrame({"bitmap": [acc.tobytes()]})
+            yield C.batch(_BITMAP_SCHEMA, [[acc.tobytes()]])
 
     return fn
 
@@ -171,17 +168,16 @@ def build_bloom(
     more than max(G, P/G) bitmaps. 0 (default) skips straight to the
     final OR, which is right when P is small (tests, local mode)."""
     n_bits, n_hashes = bloom_sizing(expected_items, fpp)
-    schema = "bitmap binary"
     per_part = (
         df.filter(F.col(key_col).isNotNull())  # NULL ∉ filter (module contract)
         .select(*_hash_cols(key_col))
-        .mapInPandas(_bitmap_fold_fn(n_bits, n_hashes, "_bh1", "_bh2"), schema)
+        .mapInArrow(_bitmap_fold_fn(n_bits, n_hashes, "_bh1", "_bh2"), _BITMAP_SCHEMA)
     )
     if merge_groups > 0:
-        per_part = per_part.repartition(merge_groups).mapInPandas(
-            _or_fold_fn(n_bits // 8), schema
+        per_part = per_part.repartition(merge_groups).mapInArrow(
+            _or_fold_fn(n_bits // 8), _BITMAP_SCHEMA
         )
-    final = per_part.repartition(1).mapInPandas(_or_fold_fn(n_bits // 8), schema)
+    final = per_part.repartition(1).mapInArrow(_or_fold_fn(n_bits // 8), _BITMAP_SCHEMA)
     rows = final.collect()
     bitmap = rows[0].bitmap if rows else bytes(n_bits // 8)
     return BloomFilter(bitmap=bytes(bitmap), n_bits=n_bits, n_hashes=n_hashes)
@@ -230,31 +226,36 @@ def probe_might_contain(
             f"probe_might_contain: input columns collide with helper/flag "
             f"names {sorted(clash)}; rename them or pass a different flag_col"
         )
-    bitmap_bytes = bloom.bitmap
-    n_bits, n_hashes = bloom.n_bits, bloom.n_hashes
-    # xxhash64 never emits NULL (a NULL key hashes to the seed constant),
-    # so the hash cols cross to pandas as exact int64; NULL-key rows are
-    # masked by their own boolean so the flag is False for them regardless
-    # of that constant's bits (NULL ∉ filter, module contract)
+    # NULL-key rows are masked by their own flag so the flag is False for
+    # them regardless of the seed constant's bits their hashes carry
+    # (NULL ∉ filter, module contract); a byte, so the kernel reads it as
+    # a numpy view
     hashed = df.select(
         "*",
-        F.col(key_col).isNull().alias("_bknull"),
+        F.col(key_col).isNull().cast("byte").alias("_bknull"),
         *_hash_cols(key_col),
     )
     out_schema = hashed.drop("_bknull", "_bh1", "_bh2").schema.add(
         flag_col, "boolean", False
     )
+    return hashed.mapInArrow(_probe_fn(bloom, out_schema), out_schema)
+
+
+def _probe_fn(bloom: BloomFilter, out_schema):
+    """mapInArrow kernel of ``probe_might_contain``: its input batch, whose
+    own columns lead and ``_bknull/_bh1/_bh2`` follow, becomes those own
+    columns plus the flag (the last field of ``out_schema``)."""
+    bitmap_bytes, n_bits, n_hashes = bloom.bitmap, bloom.n_bits, bloom.n_hashes
+    n_out = len(out_schema) - 1
 
     def fn(batches):
-        import numpy as np
-
         bm = np.frombuffer(bitmap_bytes, dtype=np.uint8)
-        for pdf in batches:
-            flags = np.zeros(len(pdf), dtype=bool)
-            valid = ~pdf["_bknull"].to_numpy(dtype=bool)
+        for batch in batches:
+            flags = np.zeros(batch.num_rows, dtype=bool)
+            valid = C.view(batch.column("_bknull")) == 0
             if valid.any():
-                h1 = pdf["_bh1"][valid].to_numpy(dtype=np.int64).view(np.uint64)
-                h2 = pdf["_bh2"][valid].to_numpy(dtype=np.int64).view(np.uint64)
+                h1 = C.view(batch.column("_bh1")).view(np.uint64)[valid]
+                h2 = C.view(batch.column("_bh2")).view(np.uint64)[valid]
                 hit = np.ones(len(h1), dtype=bool)
                 for i in range(n_hashes):
                     pos = (h1 + np.uint64(i) * h2) % np.uint64(n_bits)
@@ -263,11 +264,9 @@ def probe_might_contain(
                     if not hit.any():
                         break
                 flags[valid] = hit
-            out = pdf.drop(columns=["_bknull", "_bh1", "_bh2"])
-            out[flag_col] = flags
-            yield out
+            yield C.batch(out_schema, batch.columns[:n_out] + [flags])
 
-    return hashed.mapInPandas(fn, out_schema)
+    return fn
 
 
 def bloom_dedup_increment(

@@ -22,9 +22,8 @@ import math
 
 import numpy as np
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from mistral_ocr_spark import arrowcols as C
 from mistral_ocr_spark.scratch import materialize, scratch_path, scratch_table_dir
@@ -286,6 +285,9 @@ def jaccard_pairs_exact(
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
+_MINHASH_SCHEMA = "id long, sig array<long>"
+
+
 def _minhash_batch_fn(num_hashes: int):
     """Vectorized across the WHOLE Arrow batch (r6: the r5 version looped
     per doc — ~80 µs of numpy-call overhead per row dominated the
@@ -329,16 +331,8 @@ def _minhash_batch_fn(num_hashes: int):
                     mins[:, h] = np.minimum.reduceat(t, starts)
                 sigs[valid] = mins & _MAX32
             out = sigs.astype(np.int64).ravel()
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    pa.ListArray.from_arrays(
-                        C.numbers(C.offsets(np.full(n_rows, num_hashes)), pa.int32()),
-                        C.numbers(out, pa.int64()),
-                    ),
-                ],
-                names=["id", "sig"],
-            )
+            sig = C.lists(np.full(n_rows, num_hashes), C.numbers(out, pa.int64()))
+            yield C.batch(_MINHASH_SCHEMA, [ids, sig])
 
     return fn
 
@@ -348,14 +342,8 @@ def _signatures_from_shingle_hashes(sh: DataFrame, num_hashes: int) -> DataFrame
     pre-hashed shingle arrays — shared by the one-shot path and the
     persisted index (which derives signatures from its stored shingle
     table so index build costs ONE corpus text pass)."""
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("sig", T.ArrayType(T.LongType())),
-        ]
-    )
     return sh.select("id", F.col("shingles").alias("sh_hash")).mapInArrow(
-        _minhash_batch_fn(num_hashes), schema
+        _minhash_batch_fn(num_hashes), _MINHASH_SCHEMA
     )
 
 
@@ -669,6 +657,9 @@ def minhash_lsh_pairs_incremental(
 # SimHash
 # ---------------------------------------------------------------------------
 
+_SIMHASH_SCHEMA = "id long, sim_lo long, sim_hi long"
+
+
 def _simhash_batch_fn():
     """numpy bit-majority over JVM-prehashed words, vectorized across the
     WHOLE Arrow batch (r6: the r5 version looped per doc — ~50 µs of
@@ -712,14 +703,7 @@ def _simhash_batch_fn():
         for batch in batches:
             los = half_sigs(batch.column(1), batch.num_rows)
             his = half_sigs(batch.column(2), batch.num_rows)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0),
-                    C.numbers(los, pa.int64()),
-                    C.numbers(his, pa.int64()),
-                ],
-                names=["id", "sim_lo", "sim_hi"],
-            )
+            yield C.batch(_SIMHASH_SCHEMA, [batch.column(0), los, his])
 
     return fn
 
@@ -749,14 +733,10 @@ def simhash_signatures(
         words, lambda w: F.conv(F.substring(F.md5(w), 9, 8), 16, 10).cast("long")
     )
     pre = docs.select(F.col(key_col).alias("id"), wlo.alias("wlo"), whi.alias("whi"))
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("sim_lo", T.LongType()),
-            T.StructField("sim_hi", T.LongType()),
-        ]
-    )
-    return pre.mapInArrow(_simhash_batch_fn(), schema)
+    return pre.mapInArrow(_simhash_batch_fn(), _SIMHASH_SCHEMA)
+
+
+_PAIRS_SCHEMA = "id_a long, id_b long, hamming int"
 
 
 def _simhash_bucket_pair_fn(max_hamming: int, small_max: int = 64, row_chunk: int = 256):
@@ -845,13 +825,8 @@ def _simhash_bucket_pair_fn(max_hamming: int, small_max: int = 64, row_chunk: in
             if out_a:
                 ia = np.concatenate(out_a)
                 ib = np.concatenate(out_b)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        C.numbers(np.minimum(ia, ib), pa.int64()),
-                        C.numbers(np.maximum(ia, ib), pa.int64()),
-                        C.numbers(np.concatenate(out_h), pa.int32()),
-                    ],
-                    names=["id_a", "id_b", "hamming"],
+                yield C.batch(
+                    _PAIRS_SCHEMA, [np.minimum(ia, ib), np.maximum(ia, ib), np.concatenate(out_h)]
                 )
 
     return fn
@@ -927,14 +902,7 @@ def simhash_pairs(
         .filter(F.size("members") >= 2)
         .select("members")
     )
-    schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("hamming", T.IntegerType()),
-        ]
-    )
-    return grouped.mapInArrow(_simhash_bucket_pair_fn(max_hamming), schema).distinct()
+    return grouped.mapInArrow(_simhash_bucket_pair_fn(max_hamming), _PAIRS_SCHEMA).distinct()
 
 
 # ---------------------------------------------------------------------------

@@ -99,8 +99,8 @@ def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatc
                 batch.column("lang"),
                 C.strings(texts),
                 C.strings(mds),
-                pa.ListArray.from_arrays(
-                    C.numbers(C.offsets(span_counts), pa.int32()),
+                C.lists(
+                    span_counts,
                     pa.StructArray.from_arrays(
                         [
                             C.numbers(starts, pa.int64()),
@@ -110,9 +110,7 @@ def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatc
                         fields=list(_ARROW_SPAN),
                     ),
                 ),
-                pa.ListArray.from_arrays(
-                    C.numbers(C.offsets(image_counts), pa.int32()), C.strings(images)
-                ),
+                C.lists(image_counts, C.strings(images)),
                 C.strings(errs),
                 C.strings(encs),
                 C.strings([EXTRACTOR_VERSION] * n),

@@ -1,7 +1,7 @@
 """Multimodal column plumbing: opaque ``binary`` payloads + typed metadata.
 
 Real in this module: the Spark-side schema, partitioning, Arrow batch
-shape, and the ``mapInPandas`` feature-extraction contract. STUBBED (this
+shape, and the ``mapInArrow`` feature-extraction contract. STUBBED (this
 container has no image/audio codecs): the actual pixel/sample decode —
 ``decode_image`` raises ``NotImplementedError`` unless the deterministic
 fake decoder is selected, which derives metadata purely from the bytes so
@@ -13,11 +13,13 @@ from __future__ import annotations
 import hashlib
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from mistral_ocr_spark import arrowcols as C
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -52,25 +54,26 @@ def decode_image(payload: bytes) -> object:
 def fake_decode(payload: bytes) -> tuple[int, int]:
     """Deterministic fake decoder: (width, height) derived from the bytes.
 
-    Matches the arithmetic the DuckDB oracle uses, so the whole mapInPandas
+    Matches the arithmetic the DuckDB oracle uses, so the whole mapInArrow
     path is value-checkable end-to-end.
     """
     n = len(payload)
     return (n % 640) + 16, (n % 480) + 16
 
 
-def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        payloads = pdf["payload"]
+def _feature_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        payloads = batch.column(1).to_pylist()
         dims = [fake_decode(p) for p in payloads]
-        yield pd.DataFrame(
-            {
-                "media_id": pdf["media_id"],
-                "byte_len": [len(p) for p in payloads],
-                "content_md5": [hashlib.md5(p).hexdigest() for p in payloads],
-                "width": [d[0] for d in dims],
-                "height": [d[1] for d in dims],
-            }
+        yield C.batch(
+            FEATURES_SCHEMA,
+            [
+                batch.column(0),
+                [len(p) for p in payloads],
+                [hashlib.md5(p).hexdigest() for p in payloads],
+                [d[0] for d in dims],
+                [d[1] for d in dims],
+            ],
         )
 
 
@@ -81,7 +84,7 @@ def extract_features(media: DataFrame) -> DataFrame:
     bounded batches (arrow.maxRecordsPerBatch), never materialized per
     partition.
     """
-    return media.select("media_id", "payload").mapInPandas(
+    return media.select("media_id", "payload").mapInArrow(
         _feature_batches, FEATURES_SCHEMA
     )
 
@@ -121,10 +124,10 @@ def resize_media(media: DataFrame, max_dim: int = 64) -> DataFrame:
     arithmetic is integer-exact (floor((d*max_dim)/longest), min 1) so the
     DuckDB oracle reproduces it; one Arrow batch per JVM→Python crossing."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "width", "height", "out_width", "out_height", "out_payload")}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = []
+            for payload in batch.column(1).to_pylist():
                 w, h = fake_decode(payload)
                 longest = max(w, h)
                 if longest <= max_dim:
@@ -132,15 +135,11 @@ def resize_media(media: DataFrame, max_dim: int = 64) -> DataFrame:
                 else:
                     ow = max(1, (w * max_dim) // longest)
                     oh = max(1, (h * max_dim) // longest)
-                rows["media_id"].append(mid)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["out_width"].append(ow)
-                rows["out_height"].append(oh)
-                rows["out_payload"].append(fake_resize(payload, ow, oh))
-            yield pd.DataFrame(rows)
+                rows.append((w, h, ow, oh, fake_resize(payload, ow, oh)))
+            if rows:
+                yield C.batch(RESIZED_SCHEMA, [batch.column(0), *zip(*rows)])
 
-    return media.select("media_id", "payload").mapInPandas(fn, RESIZED_SCHEMA)
+    return media.select("media_id", "payload").mapInArrow(fn, RESIZED_SCHEMA)
 
 
 FRAMES_SCHEMA = T.StructType(
@@ -157,24 +156,22 @@ def sample_frames(media: DataFrame, frame_bytes: int = 1024, every: int = 2) -> 
     """Frame sampling for video-like payloads: the payload is a
     concatenation of fixed-size frames (``frame_bytes``); emit every
     ``every``-th frame's (index, length, md5). The 1→N output shape is the
-    point — a mapInPandas stage whose output rows fan out from input rows
+    point — a mapInArrow stage whose output rows fan out from input rows
     (the decode-then-sample plan at scale), with the frame slicing
     reproducible in ANSI SQL (substring on the blob) for the value oracle."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "frame_idx", "frame_len", "frame_md5")}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = []
+            for mid, payload in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
                 n_frames = max(1, -(-len(payload) // frame_bytes))
                 for idx in range(0, n_frames, every):
                     fr = payload[idx * frame_bytes : (idx + 1) * frame_bytes]
-                    rows["media_id"].append(mid)
-                    rows["frame_idx"].append(idx)
-                    rows["frame_len"].append(len(fr))
-                    rows["frame_md5"].append(hashlib.md5(fr).hexdigest())
-            yield pd.DataFrame(rows)
+                    rows.append((mid, idx, len(fr), hashlib.md5(fr).hexdigest()))
+            if rows:
+                yield C.batch(FRAMES_SCHEMA, zip(*rows))
 
-    return media.select("media_id", "payload").mapInPandas(fn, FRAMES_SCHEMA)
+    return media.select("media_id", "payload").mapInArrow(fn, FRAMES_SCHEMA)
 
 
 def media_from_documents(docs: DataFrame) -> DataFrame:

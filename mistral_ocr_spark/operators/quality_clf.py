@@ -34,10 +34,10 @@ tolerances rather than pretending it away.
 from __future__ import annotations
 
 import json
-import math
 import os
 
 import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -86,6 +86,10 @@ def doc_features(
     return cnt.select(id_col, "bucket", (F.col("_c") / F.col("_t")).alias("x"))
 
 
+_FEATURES_SCHEMA = "_y double, _bs array<bigint>, _xs array<double>"
+_GRAD_SCHEMA = "g binary, gb double, n bigint, loss double"
+
+
 def _train_features_fn(n_buckets: int, salt: str):
     """Per-doc hashed-gram featurization for the TRAINING sample, done in
     one Python pass: words (the shared ASCII ``\\s+`` split convention),
@@ -103,37 +107,32 @@ def _train_features_fn(n_buckets: int, salt: str):
     sb = ("|" + salt).encode("utf-8")
 
     def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ys, bss, xss = [], [], []
-            for y, t in zip(pdf["_y"], pdf["_t"]):
+        for batch in batches:
+            bss, xss, lens = [], [], []
+            for t in batch.column(1).to_pylist():
                 # trim = SPACES only (Spark F.trim), empties dropped
                 words = [w for w in ws.split((t or "").strip(" ")) if w]
                 grams = words + [
                     words[i] + " " + words[i + 1] for i in range(len(words) - 1)
                 ]
-                if grams:
-                    counts: dict[int, int] = {}
-                    for g in grams:
-                        # first 8 md5 hex digits == first 4 digest bytes
-                        b = (
-                            int.from_bytes(
-                                hashlib.md5(g.encode("utf-8") + sb).digest()[:4],
-                                "big",
-                            )
-                            % n_buckets
+                counts: dict[int, int] = {}
+                for g in grams:
+                    # first 8 md5 hex digits == first 4 digest bytes
+                    b = (
+                        int.from_bytes(
+                            hashlib.md5(g.encode("utf-8") + sb).digest()[:4],
+                            "big",
                         )
-                        counts[b] = counts.get(b, 0) + 1
-                    tot = float(len(grams))
-                    bs = sorted(counts)
-                    xs = [counts[b] / tot for b in bs]
-                else:
-                    bs, xs = [], []
-                ys.append(float(y))
-                bss.append(bs)
-                xss.append(xs)
-            yield pd.DataFrame({"_y": ys, "_bs": bss, "_xs": xss})
+                        % n_buckets
+                    )
+                    counts[b] = counts.get(b, 0) + 1
+                tot = float(len(grams))
+                bs = sorted(counts)
+                bss += bs
+                xss += [counts[b] / tot for b in bs]
+                lens.append(len(bs))
+            bs, xs = C.numbers(bss, pa.int64()), C.numbers(xss, pa.float64())
+            yield C.batch(_FEATURES_SCHEMA, [batch.column(0), C.lists(lens, bs), C.lists(lens, xs)])
 
     return fn
 
@@ -160,8 +159,6 @@ def _grad_fn(model, V: int):
         # list materialization (r6: the pandas form spent most of each GD
         # iteration converting 50k object-dtype lists; the math below is
         # unchanged)
-        import pyarrow as pa
-
         bw, bb = model.value
         for batch in batches:
             if batch.num_rows == 0:
@@ -195,14 +192,8 @@ def _grad_fn(model, V: int):
             loss = -np.sum(
                 y * np.log(p + eps) + (1.0 - y) * np.log(1.0 - p + eps)
             )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    C.binaries([gvec.tobytes()]),
-                    C.numbers([float(err.sum())], pa.float64()),
-                    C.numbers([batch.num_rows], pa.int64()),
-                    C.numbers([float(loss)], pa.float64()),
-                ],
-                names=["g", "gb", "n", "loss"],
+            yield C.batch(
+                _GRAD_SCHEMA, [[gvec.tobytes()], [float(err.sum())], [batch.num_rows], [float(loss)]]
             )
 
     return _grad
@@ -247,10 +238,7 @@ def train_quality_classifier(
         labeled.select(
             F.col(label_col).cast("double").alias("_y"),
             F.col(text_col).alias("_t"),
-        ).mapInPandas(
-            _train_features_fn(int(n_buckets), salt),
-            "_y double, _bs array<bigint>, _xs array<double>",
-        ),
+        ).mapInArrow(_train_features_fn(int(n_buckets), salt), _FEATURES_SCHEMA),
         scratch_path(scratch, "qclf_train"),
     )
 
@@ -262,9 +250,7 @@ def train_quality_classifier(
     sc = spark.sparkContext
     for _ in range(n_iters):
         bc = sc.broadcast((w, bias))
-        parts = tdf.mapInArrow(
-            _grad_fn(bc, V), "g binary, gb double, n bigint, loss double"
-        ).collect()
+        parts = tdf.mapInArrow(_grad_fn(bc, V), _GRAD_SCHEMA).collect()
         bc.unpersist()
         grad = np.zeros(V, dtype=np.float64)
         gb = 0.0
@@ -282,14 +268,12 @@ def train_quality_classifier(
         w -= lr * (grad / n + l2 * w)
         bias -= lr * (gb / n)
 
-    import pandas as pd
-
     nz = np.flatnonzero(w)
     # explicit schema: an all-zero weight vector (legitimate bias-only
-    # model from an all-empty-text sample) yields an EMPTY frame, and
-    # schema inference raises CANNOT_INFER_EMPTY_SCHEMA (review catch)
+    # model from an all-empty-text sample) yields NO rows, and schema
+    # inference raises CANNOT_INFER_EMPTY_SCHEMA (review catch)
     spark.createDataFrame(
-        pd.DataFrame({"bucket": nz.astype(np.int64), "weight": w[nz]}),
+        list(zip(nz.tolist(), w[nz].tolist())),
         schema="bucket bigint, weight double",
     ).coalesce(1).write.mode("overwrite").parquet(f"{model_dir}/weights")
     meta = {

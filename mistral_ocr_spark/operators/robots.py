@@ -5,7 +5,7 @@ the collecting crawler. The inputs at crawl scale are two tables — pages
 (one row per url) and robots (one row per host, the fetched robots.txt
 body) — and the operator splits cleanly along them:
 
-- ``parse_robots`` — one ``mapInPandas`` pass over the robots table (the
+- ``parse_robots`` — one ``mapInArrow`` pass over the robots table (the
   REP group grammar is a line-oriented state machine, a legitimate
   non-expressible kernel): selects the rule group for the given
   user-agent per RFC 9309 §2.2.1 (exact case-insensitive product-token
@@ -43,6 +43,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mistral_ocr_spark import arrowcols as C
 from mistral_ocr_spark.operators.urls import url_host
 
 _LINE_RE = re.compile(r"(?i)^(user-agent|allow|disallow)\s*:\s*(.*)$")
@@ -116,14 +117,19 @@ def parse_robots(
     the group RFC-selected for ``user_agent``. Hosts whose selected group
     has no rules emit nothing (absence = default allow downstream).
     ``robots_col`` may be string or binary (UTF-8, errors replaced)."""
-    import pandas as pd
+    return robots.select(host_col, robots_col).mapInArrow(_rules_fn(user_agent), _RULES_SCHEMA)
 
-    schema = "host string, allow boolean, pattern string, like_pat string, spec int"
+
+_RULES_SCHEMA = "host string, allow boolean, pattern string, like_pat string, spec int"
+
+
+def _rules_fn(user_agent: str):
+    """mapInArrow kernel of ``parse_robots`` over (host, robots.txt)."""
 
     def fn(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("host", "allow", "pattern", "like_pat", "spec")}
-            for host, txt in zip(pdf[host_col], pdf[robots_col]):
+        for batch in batches:
+            hosts, allows, pats = [], [], []
+            for host, txt in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
                 if txt is None or host is None:
                     continue
                 if isinstance(txt, (bytes, bytearray)):
@@ -132,18 +138,18 @@ def parse_robots(
                     # lowercased to meet filter_disallowed's url_host join
                     # key — a mixed-case host row would otherwise have its
                     # rules silently ignored (review finding)
-                    out["host"].append(host.lower())
-                    out["allow"].append(allow)
-                    out["pattern"].append(pat)
-                    out["like_pat"].append(_to_like(pat))
-                    # octet length per RFC 9309 (and the module contract);
-                    # len(pat) would flip longest-match winners for
-                    # non-ASCII patterns (review finding)
-                    out["spec"].append(len(pat.encode("utf-8")))
-            if out["host"]:
-                yield pd.DataFrame(out)
+                    hosts.append(host.lower())
+                    allows.append(allow)
+                    pats.append(pat)
+            if hosts:
+                # spec: octet length per RFC 9309 (and the module contract);
+                # len(pat) would flip longest-match winners for non-ASCII
+                # patterns (review finding)
+                specs = [len(pat.encode("utf-8")) for pat in pats]
+                likes = [_to_like(pat) for pat in pats]
+                yield C.batch(_RULES_SCHEMA, [hosts, allows, pats, likes, specs])
 
-    return robots.select(host_col, robots_col).mapInPandas(fn, schema)
+    return fn
 
 
 def filter_disallowed(

@@ -25,6 +25,7 @@ key and broadcast-join the (tiny) query/probe set.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -200,33 +201,30 @@ def plane_signatures(
     128-plane expression tree is interpreted, not codegen'd: measured 16 s
     → 0.9 s on the sf0.1 fixture). 32-bit groups avoid signed-overflow
     traps; hamming distance is then a sum of ``bit_count(xor)`` per element."""
-    import pandas as pd
+    return embeddings.select("vec_id", vec_col).mapInArrow(_plane_sig_fn(planes), _SIG_SCHEMA)
 
-    from pyspark.sql import types as T
 
+_SIG_SCHEMA = "vec_id long, sig array<long>"
+
+
+def _plane_sig_fn(planes: np.ndarray):
+    """mapInArrow kernel of ``plane_signatures`` over (vec_id, vector)."""
     pl = np.ascontiguousarray(planes, dtype=np.float64)
 
     def fn(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            V = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            bits = (V @ pl.T) >= 0  # n × p
+            bits = (C.matrix(batch.column(1)) @ pl.T) >= 0  # n × p
             groups = []
             for g0 in range(0, pl.shape[0], 32):
                 chunk = bits[:, g0 : g0 + 32].astype(np.int64)
                 pw = 1 << np.arange(chunk.shape[1], dtype=np.int64)
                 groups.append(chunk @ pw)
-            sig = np.stack(groups, axis=1)
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "sig": list(map(list, sig))})
+            sig = C.numbers(np.stack(groups, axis=1).ravel(), pa.int64())
+            yield C.batch(_SIG_SCHEMA, [batch.column(0), C.lists(np.full(len(bits), len(groups)), sig)])
 
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("sig", T.ArrayType(T.LongType())),
-        ]
-    )
-    return embeddings.select("vec_id", vec_col).mapInPandas(fn, schema)
+    return fn
 
 
 def signature_index(
@@ -348,36 +346,64 @@ def signature_rerank_topk(
     )
 
 
+def _nearest_centroid(centroids: np.ndarray):
+    """V ↦ each row's cosine-nearest centroid index: ONE vectorized numpy
+    matmul per Arrow batch (normalized dot = cosine argmax) — the
+    signature-kernel pattern; centroids ship in the closure (k·dim floats,
+    metadata-sized)."""
+    Cl = np.ascontiguousarray(centroids, dtype=np.float64)
+    Cn = Cl / np.linalg.norm(Cl, axis=1, keepdims=True)
+
+    def nearest(V: np.ndarray) -> np.ndarray:
+        Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-30)
+        return (Vn @ Cn.T).argmax(axis=1)
+
+    return nearest
+
+
+def _assign_fn(centroids: np.ndarray):
+    """mapInArrow kernel: (vec_id, vector) → (vec_id, centroid_id)."""
+    nearest = _nearest_centroid(centroids)
+
+    def fn(batches):
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            yield C.batch(_ASSIGN_SCHEMA, [batch.column(0), nearest(C.matrix(batch.column(1)))])
+
+    return fn
+
+
 def _assign_centroids(
     embeddings: DataFrame, centroids: np.ndarray, vec_col: str
 ) -> DataFrame:
-    """(vec_id, centroid_id): nearest-centroid assignment as ONE vectorized
-    numpy matmul per Arrow batch (normalized dot = cosine argmax) — the
-    signature-kernel pattern; centroids ship in the closure (k·dim floats,
-    metadata-sized)."""
-    import pandas as pd
+    """(vec_id, centroid_id): nearest-centroid assignment."""
+    return embeddings.select("vec_id", vec_col).mapInArrow(_assign_fn(centroids), _ASSIGN_SCHEMA)
 
-    from pyspark.sql import types as T
 
-    C = np.ascontiguousarray(centroids, dtype=np.float64)
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+_ASSIGN_SCHEMA = "vec_id long, centroid_id int"
+_PARTIALS_SCHEMA = "centroid_id int, cnt long, s array<double>"
+
+
+def _ivf_partials_fn(centroids: np.ndarray):
+    """mapInArrow kernel of one Lloyd iteration over (vector): each Arrow
+    batch's per-centroid partial (count, sum)."""
+    nearest = _nearest_centroid(centroids)
 
     def fn(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            V = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-30)
-            cid = (Vn @ Cn.T).argmax(axis=1).astype(np.int32)
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "centroid_id": cid})
+            V = C.matrix(batch.column(0))
+            cid = nearest(V)
+            order = np.argsort(cid, kind="stable")
+            uniq, starts = np.unique(cid[order], return_index=True)
+            sums = np.add.reduceat(V[order], starts, axis=0)
+            cnts = np.diff(np.append(starts, len(cid)))
+            s = C.lists(np.full(len(uniq), V.shape[1]), C.numbers(sums.ravel(), pa.float64()))
+            yield C.batch(_PARTIALS_SCHEMA, [uniq, cnts, s])
 
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("centroid_id", T.IntegerType()),
-        ]
-    )
-    return embeddings.select("vec_id", vec_col).mapInPandas(fn, schema)
+    return fn
 
 
 def ivf_train(
@@ -415,43 +441,8 @@ def ivf_train(
     # same up to float summation order, and the IVF contract tolerates
     # that — at nprobe=k the search is exact regardless of centroids, and
     # recall/determinism tests bound the rest).
-    from pyspark.sql import types as T
-
-    part_schema = T.StructType(
-        [
-            T.StructField("centroid_id", T.IntegerType()),
-            T.StructField("cnt", T.LongType()),
-            T.StructField("s", T.ArrayType(T.DoubleType())),
-        ]
-    )
     for _ in range(n_iters):
-        Cl = np.ascontiguousarray(C, dtype=np.float64)
-        Cn = Cl / np.linalg.norm(Cl, axis=1, keepdims=True)
-
-        def _partials(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                V = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-                Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-30)
-                cid = (Vn @ Cn.T).argmax(axis=1)
-                order = np.argsort(cid, kind="stable")
-                uniq, starts = np.unique(cid[order], return_index=True)
-                sums = np.add.reduceat(V[order], starts, axis=0)
-                cnts = np.diff(np.append(starts, len(cid)))
-                yield pd.DataFrame(
-                    {
-                        "centroid_id": uniq.astype(np.int32),
-                        "cnt": cnts.astype(np.int64),
-                        "s": [row.tolist() for row in sums],
-                    }
-                )
-
-        parts = (
-            embeddings.select(vec_col).mapInPandas(_partials, part_schema).collect()
-        )
+        parts = embeddings.select(vec_col).mapInArrow(_ivf_partials_fn(C), _PARTIALS_SCHEMA).collect()
         sums = np.zeros_like(C)
         cnts = np.zeros(C.shape[0], dtype=np.int64)
         for r in parts:
@@ -612,6 +603,9 @@ def lsh_topk(
 # 2023, arXiv:2303.09540)
 # ===========================================================================
 
+_FLAGS_SCHEMA = "vec_id long, centroid_id int, cent_sim double, keep boolean"
+
+
 def _semdedup_cluster_fn(threshold: float, row_chunk: int = 1024):
     """Per-cluster keep/drop flags, vectorized: members arrive as one
     list<struct<vec_id, _u, cent_sim>> row per cluster; the kernel sorts a
@@ -620,17 +614,13 @@ def _semdedup_cluster_fn(threshold: float, row_chunk: int = 1024):
     round9-cosine ≥ τ (the semdedup strict dominance rule)."""
 
     def fn(batches):
-        import pyarrow as pa
-
         for batch in batches:
             members = batch.column(1)
             offs = C.view(members.offsets).astype(np.int64)
             vals = members.values
             ids_all = C.view(vals.field("vec_id"))
             cs_all = C.view(vals.field("cent_sim"))
-            uu = vals.field("_u")
-            uoffs = C.view(uu.offsets).astype(np.int64)
-            uflat = C.view(uu.values)
+            U_all = C.matrix(vals.field("_u"))
             cids = C.view(batch.column(0))
             out_id, out_cid, out_cs, out_keep = [], [], [], []
             for g in range(batch.num_rows):
@@ -638,8 +628,7 @@ def _semdedup_cluster_fn(threshold: float, row_chunk: int = 1024):
                 n = int(e - s)
                 if n == 0:
                     continue
-                ids, cs = ids_all[s:e], cs_all[s:e]
-                U = uflat[uoffs[s] : uoffs[e]].reshape(n, -1)
+                ids, cs, U = ids_all[s:e], cs_all[s:e], U_all[s:e]
                 order = np.lexsort((ids, cs))  # ascending (cent_sim, id)
                 dropped_o = np.zeros(n, dtype=bool)
                 if n > 1:
@@ -658,15 +647,7 @@ def _semdedup_cluster_fn(threshold: float, row_chunk: int = 1024):
                 out_cs.append(cs)
                 out_keep.append(~dropped)
             if out_id:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        C.numbers(np.concatenate(out_id), pa.int64()),
-                        C.numbers(np.concatenate(out_cid), pa.int32()),
-                        C.numbers(np.concatenate(out_cs), pa.float64()),
-                        C.bools(np.concatenate(out_keep)),
-                    ],
-                    names=["vec_id", "centroid_id", "cent_sim", "keep"],
-                )
+                yield C.batch(_FLAGS_SCHEMA, map(np.concatenate, (out_id, out_cid, out_cs, out_keep)))
 
     return fn
 
@@ -710,7 +691,7 @@ def semdedup(
     The assigned/normalized/centroid-scored table feeds THREE plan
     branches (both self-join sides and the final keep-join), so it is
     materialized once to warehouse scratch parquet — without that, the
-    mapInPandas assignment kernel and the normalization chain re-run per
+    mapInArrow assignment kernel and the normalization chain re-run per
     branch (the corpus-pipeline re-extraction lesson, dedup.py pattern).
     """
     if centroids is None:
@@ -759,23 +740,13 @@ def semdedup(
     # order, so survivors are identical. Row-chunked GEMM bounds memory
     # for a pathological giant cluster; the final 6-dp rounding stays
     # JVM-side (same Round expression as before).
-    from pyspark.sql import types as T
-
     grouped = (
         scored.repartition(min(int(C.shape[0]), partition_width(spark)), "centroid_id")
         .groupBy("centroid_id")
         .agg(F.collect_list(F.struct("vec_id", "_u", "cent_sim")).alias("members"))
     )
-    out_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("centroid_id", T.IntegerType()),
-            T.StructField("cent_sim", T.DoubleType()),
-            T.StructField("keep", T.BooleanType()),
-        ]
-    )
     flagged = grouped.select("centroid_id", "members").mapInArrow(
-        _semdedup_cluster_fn(threshold), out_schema
+        _semdedup_cluster_fn(threshold), _FLAGS_SCHEMA
     )
     return flagged.select(
         "vec_id",

@@ -30,44 +30,64 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mistral_ocr_spark import arrowcols as C
+
+
 def _mg_partition_fn(k: int, col: str):
-    """pandas-batch weighted Misra-Gries: one MG(k) counter table per
+    """Arrow-batch weighted Misra-Gries: one MG(k) counter table per
     PARTITION (state carried across the partition's Arrow batches). Each
-    batch is pre-reduced with value_counts (vectorized — the only stage
-    that touches every row stays out of per-row Python), merged into the
-    counters, and compressed to ≤ k entries by subtracting the (k+1)-th
-    largest value. Emits (item, lower-bound) rows plus one (NULL, n_p)
-    sentinel carrying the partition's item count."""
-    import pandas as pd
+    batch is pre-reduced with ``value_counts`` (vectorized — the only
+    stage that touches every row stays out of per-row Python), merged into
+    the counters, and compressed to ≤ k entries by subtracting the (k+1)-th
+    largest value. NULL and NaN items are not counted. Emits (item,
+    lower-bound) rows plus one (NULL, n_p) sentinel carrying the
+    partition's item count."""
 
     def fn(batches):
-        counters = pd.Series(dtype="int64")  # index = items, values = counts
+        items, counts = None, np.zeros(0, dtype=np.int64)  # the counters
         n_p = 0
-        for pdf in batches:
-            vc = pdf[col].value_counts()  # dropna: NaN is excluded by contract
-            n_p += int(vc.sum())
-            # index-aligned vectorized merge (VERDICT r4 #5: the per-item
-            # dict loop here approached per-row Python on high-cardinality
-            # columns where each batch's distinct count ≈ batch size); the
-            # fill_value union promotes to float64 — counts < 2^53 stay
-            # exact there, and the cast restores the integer contract
-            counters = counters.add(vc, fill_value=0).astype("int64")
-            if len(counters) > k:
-                cut = int(counters.nlargest(k + 1).iloc[-1])  # (k+1)-th
-                counters = counters[counters > cut] - cut
-        # sentinel carries n_p in its own FLAG column: for float item
-        # columns pandas silently promotes a None item to NaN, which would
-        # collide with a genuine NaN item (r4 review follow-up)
-        if n_p or len(counters):
-            yield pd.DataFrame(
-                {
-                    "item": list(counters.index) + [None],
-                    "lb": [int(v) for v in counters.to_numpy()] + [n_p],
-                    "is_sentinel": [False] * len(counters) + [True],
-                }
+        for batch in batches:
+            vals = batch.column(col)
+            if pa.types.is_floating(vals.type):
+                x = C.view(vals)  # NaN at the NULLs too
+                # + 0.0 turns -0.0 into 0.0: one item, as Spark's joins and
+                # groupings see it, so its count is never split in two
+                vals = C.numbers(x[~np.isnan(x)] + 0.0, vals.type)
+            vc = pc.value_counts(vals.drop_null())
+            new, add = vc.field("values"), C.view(vc.field("counts"))
+            n_p += int(add.sum())
+            if items is None:
+                items = new.slice(0, 0)
+            # vectorized merge (VERDICT r4 #5: the per-item dict loop here
+            # approached per-row Python on high-cardinality columns where
+            # each batch's distinct count ≈ batch size): both sides hold
+            # distinct items, so each batch item adds to at most one counter
+            pos = pc.index_in(new, value_set=items)
+            seen = C.valid_mask(pos)
+            counts[C.view(pos.drop_null())] += add[seen]
+            items = pa.concat_arrays([items, new.filter(C.bools(~seen))])
+            counts = np.concatenate([counts, add[~seen]])
+            if len(counts) > k:
+                cut = np.partition(counts, len(counts) - k - 1)[len(counts) - k - 1]
+                big = counts > cut
+                items, counts = items.filter(C.bools(big)), counts[big] - cut
+        # the sentinel carries n_p in its own FLAG column, so it can never
+        # collide with a genuine item (r4 review follow-up)
+        if n_p or len(counts):
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.concat_arrays([items, pa.nulls(1, items.type)]),
+                    C.numbers(np.append(counts, n_p), pa.int64()),
+                    C.bools(np.arange(len(counts) + 1) == len(counts)),
+                ],
+                names=["item", "lb", "is_sentinel"],
             )
 
     return fn
@@ -82,10 +102,8 @@ def heavy_hitters(
     total item count, with EXACT counts — ``(item, freq, frac)``, unsorted
     (caller orders). NULLs are excluded from the stream, and for
     float/double columns NaN is excluded TOO (explicitly, not silently:
-    pandas/Arrow use NaN as the missing-value marker in float columns, so
-    a NaN "item" cannot round-trip through the vectorized summary — the
-    operator filters it up front and documents the contract rather than
-    miscounting; r4 review).
+    the operator filters it up front and documents the contract rather
+    than miscounting; r4 review).
 
     Two passes over the data, both bounded:
 
@@ -135,7 +153,7 @@ def heavy_hitters(
             T.StructField("is_sentinel", T.BooleanType()),
         ]
     )
-    summary = items.mapInPandas(_mg_partition_fn(k, "_item"), schema)
+    summary = items.mapInArrow(_mg_partition_fn(k, "_item"), schema)
     # the summary feeds BOTH the candidate set and the denominator; left as
     # a lazy subtree it would re-run pass 1 (and its full input scan) once
     # per consumer — materialize the partitions × (k+1) rows through a

@@ -17,7 +17,7 @@ Split of labor, sized for 100 TB:
    pair are touched per iteration) — the part that is inherently
    sequential (merge k+1 depends on merge k), on data that is bounded by
    construction, exactly where a sequential loop belongs.
-4. **Encoding** is distributed again: a mapInPandas kernel with the merge
+4. **Encoding** is distributed again: a mapInArrow kernel with the merge
    ranks in the closure and a per-worker word→tokens memo — natural text
    is Zipfian, so the memo hit rate is high and the per-batch cost is
    ~O(distinct words), not O(tokens).
@@ -38,6 +38,8 @@ from collections import defaultdict
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from mistral_ocr_spark import arrowcols as C
 
 END = "</w>"  # end-of-word symbol (its own token, per the paper)
 
@@ -183,9 +185,17 @@ def bpe_encode(
     each word encodes independently and token streams concatenate, so the
     output is independent of how rows batch (determinism at any
     parallelism)."""
-    import re
+    # the id field's type is DERIVED from the input schema (ADVICE r5: a
+    # hardcoded `long` failed or corrupted string keys — e.g. the url keys
+    # the LM CLI verbs use — at the Arrow boundary)
+    id_type = df.schema[id_col].dataType.simpleString()
+    schema = f"{id_col} {id_type}, tokens array<string>, n_bpe long"
+    return df.select(id_col, text_col).mapInArrow(_encode_fn(merges, schema), schema)
 
-    import pandas as pd
+
+def _encode_fn(merges: list[tuple[str, str]], schema: str):
+    """mapInArrow kernel of ``bpe_encode`` over (id, text)."""
+    import re
 
     ranks = {p: i for i, p in enumerate(merges)}
     memo: dict[str, list[str]] = {}
@@ -195,10 +205,11 @@ def bpe_encode(
     split_ws = re.compile(r"[ \t\n\x0b\x0c\r]+").split
 
     def fn(batches):
-        for pdf in batches:
-            toks_col, n_col = [], []
-            for text in pdf[text_col]:
-                toks: list[str] = []
+        for batch in batches:
+            toks: list[str] = []
+            n_col = []
+            for text in batch.column(1).to_pylist():
+                n0 = len(toks)
                 if text is not None:
                     for w in split_ws(text):
                         if not w:
@@ -208,16 +219,7 @@ def bpe_encode(
                             enc = encode_word(w, ranks)
                             memo[w] = enc
                         toks.extend(enc)
-                toks_col.append(toks)
-                n_col.append(len(toks))
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "tokens": toks_col, "n_bpe": n_col}
-            )
+                n_col.append(len(toks) - n0)
+            yield C.batch(schema, [batch.column(0), C.lists(n_col, C.strings(toks)), n_col])
 
-    # the id field's type is DERIVED from the input schema (ADVICE r5: a
-    # hardcoded `long` failed or corrupted string keys — e.g. the url keys
-    # the LM CLI verbs use — at the Arrow boundary)
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, text_col).mapInPandas(
-        fn, f"{id_col} {id_type}, tokens array<string>, n_bpe long"
-    )
+    return fn

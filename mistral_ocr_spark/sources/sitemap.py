@@ -6,7 +6,7 @@ files and ``<sitemapindex>`` files pointing at more sitemaps, either
 possibly gzip-compressed, ≤50k entries each by spec), and at web scale
 the input is a table of fetched sitemap blobs, one row per file.
 
-Design (the warc.py contract): one ``mapInPandas`` pass, each input row
+Design (the warc.py contract): one ``mapInArrow`` pass, each input row
 a whole sitemap blob, each output row one ``<url>``/``<sitemap>`` entry.
 Parallelism = many blobs (the spec's 50k-entry cap bounds per-row work).
 Parsing is stdlib ``xml.etree`` on the decompressed bytes — namespace-
@@ -33,12 +33,12 @@ import re
 
 from pyspark.sql import DataFrame
 
+from mistral_ocr_spark import arrowcols as C
+
 SITEMAP_SCHEMA = (
     "src_id bigint, kind string, loc string, lastmod string, "
     "changefreq string, priority double, error_class string"
 )
-
-_FIELDS = ("src_id", "kind", "loc", "lastmod", "changefreq", "priority", "error_class")
 
 
 def _localname(tag: str) -> str:
@@ -96,43 +96,26 @@ def read_sitemaps(
     """``(src_id, payload binary)`` → one row per sitemap entry
     (``SITEMAP_SCHEMA``). Plain or gzip blobs; per-blob error isolation
     (``kind='parse_error'`` + ``error_class``, loc NULL)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            # ids arrive as exact int64 (coalesced non-null JVM-side — a
-            # nullable long would cross Arrow→pandas as float64, failing
-            # the bigint output cast on NaN and corrupting ids above 2^53,
-            # the bloom.py trap); the true-NULL mask rides separately
-            for src_id, id_null, payload in zip(
-                pdf["src_id"], pdf["_id_null"], pdf["payload"]
-            ):
-                sid = None if id_null else int(src_id)
-                if payload is None:
-                    rows.append((sid, "parse_error", None, None, None, None,
-                                 "null_payload"))
-                    continue
-                try:
-                    for kind, loc, lastmod, cf, prio in parse_sitemap_bytes(
-                        bytes(payload)
-                    ):
-                        rows.append((sid, kind, loc, lastmod, cf, prio, None))
-                except Exception as exc:  # malformed blob → one typed row
-                    rows.append((sid, "parse_error", None, None, None, None,
-                                 type(exc).__name__))
-            if rows:
-                yield pd.DataFrame(rows, columns=list(_FIELDS))
-
-    # fixed names inside the kernel: the select renames the caller's
-    # columns, so indexing pdf[id_col] would KeyError for any non-default
-    # id_col (review finding)
     return blobs.select(
-        F.coalesce(blobs[id_col].cast("long"), F.lit(0)).alias("src_id"),
-        blobs[id_col].isNull().alias("_id_null"),
-        blobs[payload_col].alias("payload"),
-    ).mapInPandas(fn, SITEMAP_SCHEMA)
+        blobs[id_col].cast("long").alias("src_id"), blobs[payload_col].alias("payload")
+    ).mapInArrow(_entry_batches, SITEMAP_SCHEMA)
+
+
+def _entry_batches(batches):
+    """mapInArrow kernel of ``read_sitemaps`` over (src_id, payload)."""
+    for batch in batches:
+        rows = []
+        for sid, payload in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
+            if payload is None:
+                rows.append((sid, "parse_error", None, None, None, None, "null_payload"))
+                continue
+            try:
+                for kind, loc, lastmod, cf, prio in parse_sitemap_bytes(payload):
+                    rows.append((sid, kind, loc, lastmod, cf, prio, None))
+            except Exception as exc:  # malformed blob → one typed row
+                rows.append((sid, "parse_error", None, None, None, None, type(exc).__name__))
+        if rows:
+            yield C.batch(SITEMAP_SCHEMA, zip(*rows))
 
 
 def sitemap_pages(entries: DataFrame) -> DataFrame:

@@ -75,15 +75,3 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("completed_at", T.TimestampType(), True),
     ]
 )
-
-# Failed-row side output — analog of error_files + errors JSON
-# (simple_client.py:73-80,607-628).
-ERRORS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("error_class", T.StringType(), False),
-        T.StructField("message", T.StringType(), True),
-    ]
-)

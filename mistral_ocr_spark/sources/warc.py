@@ -81,7 +81,9 @@ def gunzip_members(data: bytes) -> bytes:
 
 def _parse_http(payload: bytes) -> tuple[int | None, str | None, bytes]:
     """HTTP response payload → (status, content-type, body). Non-HTTP
-    payloads come back as (None, None, payload) unchanged."""
+    payloads, and status lines whose code is not exactly three ASCII digits
+    (RFC 9110 ``status-code = 3DIGIT``), come back as (None, None, payload)
+    unchanged."""
     if not payload.startswith(b"HTTP/"):
         return None, None, payload
     head_end = payload.find(b"\r\n\r\n")
@@ -90,10 +92,12 @@ def _parse_http(payload: bytes) -> tuple[int | None, str | None, bytes]:
     head = payload[:head_end].decode("latin-1", "replace")
     lines = head.split("\r\n")
     parts = lines[0].split(None, 2)
-    try:
-        status = int(parts[1])
-    except (IndexError, ValueError):
+    # int() alone would take '99999999999' (overflowing the int32 column
+    # and failing the whole batch), '２００' and '2_00'
+    code = parts[1] if len(parts) > 1 else ""
+    if not (len(code) == 3 and code.isascii() and code.isdigit()):
         return None, None, payload
+    status = int(code)
     ctype = None
     for ln in lines[1:]:
         k, _, v = ln.partition(":")

@@ -139,3 +139,40 @@ def test_offsets_past_int32_raise_without_the_data():
         C.offsets([C.MAX_OFFSET, 1])
     assert C.offsets([]).tolist() == [0]
     assert C.offsets([2, 0, 3]).dtype == np.int32
+
+
+def test_lists_equal_pa_array():
+    child = C.strings(["a", "b", "c"])
+    got = C.lists([2, 0, 1], child)
+    assert got.equals(pa.array([["a", "b"], [], ["c"]], pa.list_(pa.string())))
+    assert C.lists(np.zeros(0, dtype=np.int64), C.numbers([], pa.int64())).equals(
+        pa.array([], pa.list_(pa.int64()))
+    )
+
+
+@pytest.mark.parametrize("type", [pa.float32(), pa.float64(), pa.int32()])
+def test_matrix_equals_vstack_on_slices(type):
+    rows = [[1, 2, 3], [4, 5, 6], [7, 8, 9], [10, 11, 12]]
+    arr = pa.array(rows, pa.list_(type)).slice(1, 2)
+    got = C.matrix(arr)
+    assert got.dtype == np.float64 and got.shape == (2, 3)
+    assert np.array_equal(got, np.vstack([np.asarray(v, dtype=np.float64) for v in rows[1:3]]))
+    assert C.matrix(arr.slice(0, 0)).shape == (0, 0)
+
+
+@pytest.mark.parametrize(
+    "rows, match",
+    [
+        ([[1.0, 2.0], None], "null vectors"),
+        ([[1.0, None], [2.0, 3.0]], "null elements"),
+        ([[1.0, 2.0], [3.0]], "vectors of 2 and 1 elements"),
+    ],
+)
+def test_matrix_refuses_null_and_ragged_vectors(rows, match):
+    with pytest.raises(ValueError, match=match):
+        C.matrix(pa.array(rows, pa.list_(pa.float64())))
+
+
+def test_matrix_ignores_nulls_outside_the_slice():
+    arr = pa.array([[None, 1.0], [2.0, 3.0], None], pa.list_(pa.float64()))
+    assert C.matrix(arr.slice(1, 1)).tolist() == [[2.0, 3.0]]

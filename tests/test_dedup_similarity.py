@@ -435,7 +435,7 @@ def test_decontaminate_plan_broadcasts_benchmark(spark):
 def test_signature_index_reuse_matches_and_skips_kernel(spark, tmp_path):
     """VERDICT r3 #3: a persisted signature table makes the multi-probe
     prescreen a parquet scan — results identical to the inline-kernel path,
-    and the query plan contains NO Python kernel (MapInPandas) anywhere."""
+    and the query plan contains NO Python kernel (MapInArrow) anywhere."""
     emb = _emb(spark, SF001)
     idx = S.signature_index(emb, str(tmp_path / "sigs"))
     inline = S.signature_rerank_topk(emb, query_id=0, k=10, max_hamming=63)
@@ -444,8 +444,8 @@ def test_signature_index_reuse_matches_and_skips_kernel(spark, tmp_path):
     )
     assert [tuple(r) for r in inline.collect()] == [tuple(r) for r in cached.collect()]
     plan = cached._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in plan, f"signature kernel still in query path:\n{plan[:800]}"
-    assert "MapInPandas" in inline._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" not in plan, f"signature kernel still in query path:\n{plan[:800]}"
+    assert "MapInArrow" in inline._jdf.queryExecution().executedPlan().toString()
 
 
 def test_lsh_bucket_index_reuse_matches_and_prunes(spark, tmp_path):

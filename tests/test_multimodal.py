@@ -1,5 +1,5 @@
 """Multimodal plumbing tests: feature extraction, aspect-preserving resize,
-and frame sampling — each mapInPandas path value-checked against DuckDB
+and frame sampling — each mapInArrow path value-checked against DuckDB
 running the same arithmetic on the same payload bytes (the fake decoder is
 a pure function of the bytes, so the oracle is exact)."""
 

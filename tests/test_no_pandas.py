@@ -2,13 +2,16 @@
 
 pyarrow imports pandas on a process's first ``pa.array`` / ``pa.scalar`` /
 ``Array.to_numpy`` call, which costs a Python worker ~35 MB of resident
-memory and ~0.29 s of CPU. Every ``mapInArrow`` kernel goes through
-``mistral_ocr_spark.arrowcols`` instead. Three guards:
+memory and ~0.29 s of CPU. Every Python kernel of the package is a
+``mapInArrow`` kernel that goes through ``mistral_ocr_spark.arrowcols``
+instead. Four guards:
 
 - each kernel, unpickled and run in a fresh interpreter that has imported
   only ``pyspark.worker``, leaves ``pandas`` out of ``sys.modules``;
 - a real worker that ran ``extract_pages`` reports pandas absent;
-- no module with a ``mapInArrow`` kernel calls the importing APIs.
+- no module with a ``mapInArrow`` kernel calls the importing APIs;
+- no module imports pandas or runs a ``mapInPandas`` kernel, except the
+  streaming state store, whose ``applyInPandasWithState`` has no Arrow form.
 """
 
 from __future__ import annotations
@@ -186,6 +189,125 @@ def _quality_clf_gradient():
     return _grad_fn(model, 8), batch
 
 
+def _hash_batch(names=("_bh1", "_bh2")) -> pa.RecordBatch:
+    rng = np.random.default_rng(3)
+    h = rng.integers(-(1 << 63), (1 << 63) - 1, size=(2, 50), dtype=np.int64)
+    return pa.RecordBatch.from_arrays([pa.array(h[0]), pa.array(h[1])], names=list(names))
+
+
+def _bloom_fold():
+    from mistral_ocr_spark.operators.bloom import _bitmap_fold_fn
+
+    return _bitmap_fold_fn(1024, 3, "_bh1", "_bh2"), _hash_batch()
+
+
+def _bloom_or():
+    from mistral_ocr_spark.operators.bloom import _or_fold_fn
+
+    batch = pa.RecordBatch.from_arrays([pa.array([b"\x01" * 16, b"\x02" * 16])], names=["bitmap"])
+    return _or_fold_fn(16), batch
+
+
+def _bloom_probe():
+    from pyspark.sql import types as T
+
+    from mistral_ocr_spark.operators.bloom import BloomFilter, _probe_fn
+
+    hashes = _hash_batch()
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([f"k{i}" for i in range(50)]), pa.array([i % 2 for i in range(50)], pa.int8()),
+         *hashes.columns],
+        names=["key", "_bknull", "_bh1", "_bh2"],
+    )
+    out = T.StructType([T.StructField("key", T.StringType()), T.StructField("hit", T.BooleanType(), False)])
+    return _probe_fn(BloomFilter(bitmap=b"\x5a" * 128, n_bits=1024, n_hashes=3), out), batch
+
+
+def _sketches():
+    from mistral_ocr_spark.operators.sketches import _mg_partition_fn
+
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([f"w{i % 7}" if i % 11 else None for i in range(60)])], names=["_item"]
+    )
+    return _mg_partition_fn(3, "_item"), batch
+
+
+def _vectors(n=30, dim=8) -> pa.Array:
+    rows = np.random.default_rng(4).normal(size=(n, dim)).tolist()
+    return pa.array(rows, pa.list_(pa.float64()))
+
+
+def _plane_signatures():
+    from mistral_ocr_spark.operators.similarity import _hyperplanes, _plane_sig_fn
+
+    batch = pa.RecordBatch.from_arrays([pa.array(range(30), pa.int64()), _vectors()], names=["vec_id", "v"])
+    return _plane_sig_fn(_hyperplanes(8, 40)), batch
+
+
+def _ivf_assign():
+    from mistral_ocr_spark.operators.similarity import _assign_fn
+
+    batch = pa.RecordBatch.from_arrays([pa.array(range(30), pa.int64()), _vectors()], names=["vec_id", "v"])
+    return _assign_fn(np.eye(4, 8)), batch
+
+
+def _ivf_partials():
+    from mistral_ocr_spark.operators.similarity import _ivf_partials_fn
+
+    return _ivf_partials_fn(np.eye(4, 8)), pa.RecordBatch.from_arrays([_vectors()], names=["v"])
+
+
+def _quality_clf_features():
+    from mistral_ocr_spark.operators.quality_clf import _train_features_fn
+
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([1.0, 0.0, 1.0]), pa.array(["the cat sat", None, "  "])], names=["_y", "_t"]
+    )
+    return _train_features_fn(64, "salt"), batch
+
+
+def _tokenizer():
+    from mistral_ocr_spark.operators.tokenizer import _encode_fn
+
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([1, 2, 3], pa.int64()), pa.array(["the cat sat", None, "that"])],
+        names=["doc_id", "text"],
+    )
+    schema = "doc_id bigint, tokens array<string>, n_bpe long"
+    return _encode_fn([("t", "h"), ("th", "e</w>")], schema), batch
+
+
+def _robots():
+    from mistral_ocr_spark.operators.robots import _rules_fn
+
+    txt = "User-agent: *\nDisallow: /private\nAllow: /private/ok$\n"
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(["A.example", "b.example", None]), pa.array([txt, None, txt])],
+        names=["host", "robots_txt"],
+    )
+    return _rules_fn("*"), batch
+
+
+def _multimodal():
+    from mistral_ocr_spark.operators.multimodal import _feature_batches
+
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([1, 2], pa.int64()), pa.array([b"abc", b"x" * 1000])], names=["media_id", "payload"]
+    )
+    return _feature_batches, batch
+
+
+def _sitemap():
+    from mistral_ocr_spark.sources.sitemap import _entry_batches
+
+    urlset = b"<urlset><url><loc>https://a/</loc><priority>0.5</priority></url></urlset>"
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([1, None, 3], pa.int64()), pa.array([gzip.compress(urlset), urlset, None])],
+        names=["src_id", "payload"],
+    )
+    return _entry_batches, batch
+
+
 _KERNELS = [
     _extract,
     _normalize,
@@ -196,6 +318,18 @@ _KERNELS = [
     _simhash_buckets,
     _semdedup,
     _quality_clf_gradient,
+    _bloom_fold,
+    _bloom_or,
+    _bloom_probe,
+    _sketches,
+    _plane_signatures,
+    _ivf_assign,
+    _ivf_partials,
+    _quality_clf_features,
+    _tokenizer,
+    _robots,
+    _multimodal,
+    _sitemap,
 ]
 
 
@@ -288,11 +422,44 @@ def test_kernel_modules_build_columns_only_through_the_helper():
     modules = _kernel_modules()
     assert {p.name for p in modules} >= {
         "extract.py", "normalize.py", "warc.py", "fixtures.py",
-        "dedup.py", "similarity.py", "quality_clf.py",
+        "dedup.py", "similarity.py", "quality_clf.py", "bloom.py",
+        "sketches.py", "tokenizer.py", "robots.py", "multimodal.py", "sitemap.py",
     }
     found = [
         f"{p.relative_to(ROOT)}:{line} {call}"
         for p in modules
         for line, call in _importing_calls(ast.parse(p.read_text()))
+    ]
+    assert found == []
+
+
+# applyInPandasWithState has no Arrow form in PySpark 4.1 (transformWithState
+# needs google.protobuf), so the streaming state store alone keeps pandas
+_PANDAS_ALLOWED = {PKG / "streaming" / "stateful.py"}
+
+
+def _pandas_uses(tree: ast.AST):
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            names = [node.module or ""]
+        elif isinstance(node, ast.Attribute) and node.attr == "mapInPandas":
+            yield node.lineno, "mapInPandas"
+            continue
+        else:
+            continue
+        for name in names:
+            if name.split(".")[0] == "pandas":
+                yield node.lineno, f"import {name}"
+
+
+def test_package_has_one_python_kernel_boundary():
+    assert all(p.exists() for p in _PANDAS_ALLOWED)
+    found = [
+        f"{p.relative_to(ROOT)}:{line} {use}"
+        for p in sorted(PKG.rglob("*.py"))
+        if p not in _PANDAS_ALLOWED
+        for line, use in _pandas_uses(ast.parse(p.read_text()))
     ]
     assert found == []

@@ -154,7 +154,7 @@ def test_scoring_plan_is_jvm_only(spark, tmp_path):
         .executedPlan()
         .toString()
     )
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
+    assert "MapInArrow" not in plan and "BatchEvalPython" not in plan
 
 
 def test_bias_only_model_from_all_empty_texts(spark, tmp_path):

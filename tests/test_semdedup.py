@@ -131,3 +131,17 @@ def test_empty_input_raises_cleanly(spark):
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
     with pytest.raises(ValueError, match="empty"):
         S.semdedup(empty)
+
+
+def test_null_embedding_element_raises_instead_of_nan_rows(spark):
+    """One NULL element used to poison its cluster: rows came back with a
+    NaN ``cent_sim`` and keep/drop decided by NaN comparisons. The vector
+    reader refuses it, in the clustering kernel and in training."""
+    rows = [(i, [1.0, float(i % 7), 2.0, 3.0]) for i in range(40)]
+    rows[5] = (5, [1.0, None, 2.0, 3.0])
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>").repartition(2)
+    centroids = np.vstack([CENTROIDS, [0.0, 0.0, 0.0, 1.0]])
+    with pytest.raises(Exception, match="null elements"):
+        S.semdedup(df, threshold=0.95, centroids=centroids).collect()
+    with pytest.raises(Exception, match="null elements"):
+        S.ivf_train(df, n_centroids=4, n_iters=2)

@@ -67,6 +67,20 @@ def test_heavy_hitters_nan_excluded_by_contract(spark):
     assert got == {2.5: (100, round(100 / 700, 6))}
 
 
+def test_summary_counts_signed_zero_as_one_item():
+    """-0.0 == 0.0 in the recount join, so the summary must count them as
+    one item too; split in two, each half could fall under the MG cut."""
+    import pyarrow as pa
+
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([0.0, -0.0, -0.0, 1.0, None, float("nan")], pa.float64())], names=["v"]
+    )
+    (out,) = K._mg_partition_fn(3, "v")(iter([batch]))
+    got = out.to_pydict()
+    assert got["is_sentinel"] == [False, False, True]
+    assert got["item"][:2] == [0.0, 1.0] and got["lb"] == [3, 1, 4]
+
+
 def test_heavy_hitters_deterministic_across_parallelism(spark, sf_dir):
     words = _word_stream(spark, sf_dir)
     a = sorted(tuple(r) for r in K.heavy_hitters(words.repartition(1), "w", 0.005).collect())
@@ -97,7 +111,7 @@ def test_heavy_hitters_candidate_set_is_bounded(spark):
             T.StructField("is_sentinel", T.BooleanType()),
         ]
     )
-    summary = df.mapInPandas(K._mg_partition_fn(k, "_item"), schema)
+    summary = df.mapInArrow(K._mg_partition_fn(k, "_item"), schema)
     assert summary.count() <= n_parts * (k + 2)
     # sentinel rows carry the exact denominator
     n = summary.filter("is_sentinel").agg(F.sum("lb")).collect()[0][0]

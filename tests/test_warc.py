@@ -82,6 +82,33 @@ def test_corrupt_blob_emits_parse_error_and_spares_others(spark):
     assert len(kinds) >= 2  # records before the corruption survived
 
 
+@pytest.mark.parametrize(
+    "code", [b"99999999999", "\uff12\uff10\uff10".encode(), b"2_00", b"20", b"+20"]
+)
+def test_status_that_is_not_three_digits_is_not_http(code):
+    """RFC 9110 ``status-code = 3DIGIT``: any other status takes the
+    non-HTTP fallback (NULL status, the payload kept whole). A status past
+    int32 used to fail the whole batch; the other blob's records must come
+    out as they do alone."""
+    import pyarrow as pa
+
+    weird = b"HTTP/1.1 " + code + b" OK\r\nContent-Type: text/html\r\n\r\n<p>x</p>"
+    bad = W.make_warc([{"warc_type": "response", "url": "http://b.example/", "payload": weird}])
+
+    def run(ids, blobs):
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array(ids, pa.int64()), pa.array(blobs, pa.binary())], names=["src_id", "warc"]
+        )
+        return pa.Table.from_batches(list(W.warc_record_batches(iter([batch])))).to_pylist()
+
+    both = run([1, 2], [_blob(), bad])
+    assert [r for r in both if r["src_id"] == 1] == run([1], [_blob()])
+    (rec,) = [r for r in both if r["src_id"] == 2]
+    assert rec["warc_type"] == "response"
+    assert rec["http_status"] is None and rec["http_content_type"] is None
+    assert rec["body"] == weird
+
+
 def test_truncated_gzip_member_reports_error(spark):
     blob = _blob(gzip_members=True)[:-10]
     df = spark.createDataFrame([(9, blob)], "src_id long, warc binary")
